@@ -11,21 +11,24 @@ by the spatial dissolve (case-3 cities) and the boundary/GeoJSON
 encodes at the sink edge.
 
 Scale shape: ONE pinned computation of the clean->reconcile->rebase->
-join->stats prefix serves all four windows (SURVEY §4 X3); per window,
-the polygon file is the export frame itself, the lines file a
-3-column projection + ST_Boundary (S5), and the dates-CSV columns are
-three tiny aggregates (distinct dates, 19-quantile vector of
-``normalized``, daily delta sums).  Artifacts are feature-count-small
-(the reference writes single files); ``write_geojson`` keeps a
-``distributed=True`` path for at-scale exports.
+join->stats prefix serves all four windows (SURVEY §4 X3).  Per window,
+ONE Spark action collects the export ordered by (id, date) — it is the
+polygon file's feature list — and every other artifact of the window is
+derived from those rows on the driver, at the same sink edge where the
+GeoJSON encode already runs: the lines file (ST_Boundary per row, then
+Spark's ascending nulls-first order of date, num_cases, geometry; S5)
+and the dates/sums CSV columns.  Only the 19-quantile color scale of
+``normalized`` goes back to Spark, as one built-in ``percentile``
+aggregate.  Artifacts are feature-count-small (the reference writes
+single files); ``write_geojson`` keeps a ``distributed=True`` path for
+at-scale exports.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from ..cachereg import release_all
 from ..operators import spatial as sp
@@ -33,44 +36,50 @@ from ..operators import stats
 from ..sources.writers import write_dates_array_csv, write_geojson
 from .clearmap import WINDOWS, run_pipeline
 
-
-def _lines_frame(export: DataFrame) -> DataFrame:
-    """S5 (ref :175): the 3-column boundary-lines variant."""
-    return export.select(
-        "date",
-        "num_cases",
-        sp.st_boundary_udf()(F.col("geometry")).alias("geometry"),
-    )
+_LineRow = Row("date", "num_cases", "geometry")
 
 
-def _dates_columns(export: DataFrame, window: str) -> dict[str, list]:
+def _lines_rows(rows: list[Row]) -> list[Row]:
+    """S5 (ref :175): the 3-column boundary-lines rows of a window,
+    sorted as Spark's ascending ``orderBy`` would (nulls first; Python
+    ``str`` order is code-point order, which is Spark's UTF-8 byte
+    order)."""
+    lines = [
+        _LineRow(r["date"], r["num_cases"], sp.boundary(r["geometry"]))
+        for r in rows
+    ]
+    return sorted(lines, key=lambda r: tuple((v is not None, v) for v in r))
+
+
+def _dates_columns(
+    export: DataFrame, rows: list[Row], window: str
+) -> dict[str, list]:
     """The three per-window lists of the dates CSV (ref :77,:167-169):
     unique sorted dates, the 19-quantile color scale over
-    ``normalized``, and the first-differenced daily sums."""
-    dates = [
-        r["date"].isoformat()
-        for r in stats.distinct_ordered_dates(export.select("date"))
-        .orderBy("date")
-        .collect()
+    ``normalized``, and the first-differenced daily sums.
+
+    Dates and sums come from the window's collected ``rows``; each
+    date's total follows Spark ``sum`` (nulls ignored, an all-null date
+    totals ``None``).  The colors are one ``percentile`` aggregate over
+    ``export``."""
+    totals: dict = {}
+    for r in rows:
+        n = r["num_cases"]
+        prev = totals.get(r["date"])
+        totals[r["date"]] = prev if n is None else n + (prev or 0)
+    dates = sorted(totals)
+    tot = [totals[d] for d in dates]
+    sums = tot[:1] + [
+        None if a is None or b is None else b - a for a, b in zip(tot, tot[1:])
     ]
     colors = [
         r["q_value"]
-        for r in stats.quantile_vector(
-            export, "normalized", exact=True, distributed=True
-        )
+        for r in stats.quantile_vector(export, "normalized", exact=True)
         .orderBy("q_idx")
         .collect()
     ]
-    sums = [
-        r["daily_delta"]
-        for r in stats.daily_total_delta(
-            export.select("date", F.col("num_cases").alias("cases")), "cases"
-        )
-        .orderBy("date")
-        .collect()
-    ]
     return {
-        f"{window}_dates": dates,
+        f"{window}_dates": [d.isoformat() for d in dates],
         f"{window}_colors": colors,
         f"{window}_sums": sums,
     }
@@ -90,16 +99,12 @@ def parse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
         for w in WINDOWS:
             export = exports[w]
             poly_path = os.path.join(out_dir, f"{w}_polygons.geojson")
-            write_geojson(export, poly_path, order_by=("id", "date"))
+            rows = write_geojson(export, poly_path, order_by=("id", "date"))
             artifacts[f"{w}_polygons"] = poly_path
             line_path = os.path.join(out_dir, f"{w}_lines.geojson")
-            write_geojson(
-                _lines_frame(export),
-                line_path,
-                order_by=("date", "num_cases", "geometry"),
-            )
+            write_geojson(_lines_rows(rows), line_path)
             artifacts[f"{w}_lines"] = line_path
-            dates_cols.update(_dates_columns(export, w))
+            dates_cols.update(_dates_columns(export, rows, w))
         csv_path = os.path.join(out_dir, "dates.csv")
         write_dates_array_csv(csv_path, dates_cols)
         artifacts["dates_csv"] = csv_path
@@ -112,6 +117,6 @@ def parse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
 # Verification against the reference (il_analysis_git.py):
 # - :150-172 window loop  -> run_pipeline windows (clearmap.WINDOWS)
 # - :170-175 two GeoJSON files per window (polygons; [date, num_cases,
-#   geometry.boundary] lines)  -> write_geojson + _lines_frame
+#   geometry.boundary] lines)  -> write_geojson + _lines_rows
 # - :201-213 dates_df 12-column ragged CSV via zip_longest
 #   -> _dates_columns + write_dates_array_csv

@@ -18,28 +18,33 @@ import json
 from itertools import zip_longest
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 def write_geojson(
-    df: DataFrame,
+    df: DataFrame | list[Row],
     path: str,
     geom_col: str = "geometry",
     order_by: Sequence[str] = ("id", "date"),
     distributed: bool = False,
-) -> None:
+) -> list[Row] | None:
     """S4/S5 (ref :173-175): write features as a GeoJSON
     FeatureCollection (geometry from the WKT column, all other columns
-    as properties)."""
+    as properties, in column order).
+
+    ``df`` is either a DataFrame, collected in ``order_by`` order (one
+    Spark action), or a list of Rows already in the wanted order, which
+    is written as given (``order_by`` is then unused).  Returns the rows
+    written, so a caller can derive further artifacts from the one
+    collect; ``distributed=True`` writes a JSON dataset from the
+    DataFrame instead and returns ``None``."""
     from ..operators.spatial import wkt_to_geojson
 
     if distributed:
-        (
-            df.write.mode("overwrite").json(path)
-        )
-        return
-    cols = [c for c in df.columns if c != geom_col]
-    rows = df.orderBy(*order_by).collect()
+        df.write.mode("overwrite").json(path)
+        return None
+    rows = df.orderBy(*order_by).collect() if isinstance(df, DataFrame) else df
+    cols = [c for c in (rows[0].__fields__ if rows else ()) if c != geom_col]
     feats = []
     for r in rows:
         feats.append(
@@ -51,6 +56,7 @@ def write_geojson(
         )
     with open(path, "w", encoding="utf-8") as f:
         json.dump({"type": "FeatureCollection", "features": feats}, f)
+    return rows
 
 
 def _jsonable(v):

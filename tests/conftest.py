@@ -23,6 +23,13 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def gate_sf_dir():
+    """The sf0.01 fixture (the scale of the oracle gate), next to
+    ``SF_DIR``."""
+    return os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
