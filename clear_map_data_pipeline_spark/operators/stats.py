@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 
 from .windows import by_key_ordered, full_partition, prefix, rolling
 
+# the 19-step color scale of the dates CSV (ref :168): 0.05 .. 0.95
+COLOR_QUANTILES = tuple(round(0.05 * i, 2) for i in range(1, 20))
+
 
 def last_value_ratio(
     df: DataFrame,
@@ -154,7 +157,7 @@ def ramzor_score(
 def quantile_vector(
     df: DataFrame,
     value: str,
-    qs: Sequence[float] = tuple(round(0.05 * i, 2) for i in range(1, 20)),
+    qs: Sequence[float] = COLOR_QUANTILES,
     exact: bool = True,
     distributed: bool = False,
 ) -> DataFrame:
@@ -188,7 +191,7 @@ def quantile_vector(
 def quantile_vector_distributed(
     df: DataFrame,
     value: str,
-    qs: Sequence[float] = tuple(round(0.05 * i, 2) for i in range(1, 20)),
+    qs: Sequence[float] = COLOR_QUANTILES,
 ) -> DataFrame:
     """Exact quantiles without a monolithic aggregation buffer:
 

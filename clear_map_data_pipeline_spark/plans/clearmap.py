@@ -113,32 +113,42 @@ def synth_shape(t: Tables) -> DataFrame:
     """Deterministic shape dimension from the events user set: matching
     areas for cases 1/2, one area for case-4 cities, two areas for
     case-3 cities, some cities absent from the facts, ~1/17 null ids
-    (dropped by F5), pop/rank/name as pure expressions."""
+    (dropped by F5), pop/rank/name as pure expressions.
+
+    One pass over the distinct users: each user explodes into six
+    conditional ``(city, area)`` slots, null unless the user falls in
+    that slot's class, and the nulls are filtered out.  The slots are
+    the branches of the DuckDB twin's ``shape0`` UNION ALL (the case-3
+    branch's two areas as two slots), so a user in several classes
+    (``u % 4 == 0`` and ``u % 10 == 0``) yields a row for each, and the
+    row multiset equals the union's — without re-deriving the distinct
+    user set once per branch."""
     users = t.events.select(F.col("user_id").alias("u")).distinct()
     u = F.col("u")
-    g0 = users.filter(u % 4 == 0).select(
-        (1001 + 4 * u).alias("city"), (1 + u % 3).alias("area")
-    )
-    g1 = users.filter((u % 4 == 1) & (F.expr("(u DIV 4) % 2") == 1)).select(
-        (1002 + 4 * F.expr("u DIV 8")).alias("city"), (1 + u % 3).alias("area")
-    )
-    g2_case4 = users.filter((u % 4 == 2) & (F.expr("(u DIV 4) % 2") == 0)).select(
-        (1003 + 4 * u).alias("city"), F.lit(1).cast("long").alias("area")
-    )
-    g2_case3 = (
-        users.filter((u % 4 == 2) & (F.expr("(u DIV 4) % 2") == 1))
-        .select((1003 + 4 * u).alias("city"), F.explode(F.array(F.lit(1), F.lit(2))).alias("area"))
-    )
-    absent = users.filter(u % 10 == 0).select(
-        (9000 + 4 * u).alias("city"), F.lit(1).cast("long").alias("area")
+    g, half = u % 4, F.expr("(u DIV 4) % 2")
+
+    def slot(cond, city, area):
+        return F.when(
+            cond,
+            F.struct(city.cast("long").alias("city"), area.cast("long").alias("area")),
+        )
+
+    g1 = (g == 1) & (half == 1)
+    case3 = (g == 2) & (half == 1)
+    slots = F.array(
+        slot(g == 0, 1001 + 4 * u, 1 + u % 3),
+        slot(g1, 1002 + 4 * F.expr("u DIV 8"), 1 + u % 3),
+        slot((g == 2) & (half == 0), 1003 + 4 * u, F.lit(1)),
+        slot(case3, 1003 + 4 * u, F.lit(1)),
+        slot(case3, 1003 + 4 * u, F.lit(2)),
+        slot(u % 10 == 0, 9000 + 4 * u, F.lit(1)),
     )
     base = (
-        g0.unionByName(g1)
-        .unionByName(g2_case4)
-        .unionByName(g2_case3.select("city", F.col("area").cast("long")))
-        .unionByName(absent)
+        users.select(F.explode(slots).alias("s"))
+        .filter(F.col("s").isNotNull())
+        .select("s.city", "s.area")
     )
-    city, areac = F.col("city").cast("long"), F.col("area").cast("long")
+    city, areac = F.col("city"), F.col("area")
     return base.select(
         city.alias("city"),
         areac.alias("area"),

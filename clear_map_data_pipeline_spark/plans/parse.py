@@ -11,24 +11,30 @@ by the spatial dissolve (case-3 cities) and the boundary/GeoJSON
 encodes at the sink edge.
 
 Scale shape: ONE pinned computation of the clean->reconcile->rebase->
-join->stats prefix serves all four windows (SURVEY §4 X3).  Per window,
-ONE Spark action collects the export ordered by (id, date) — it is the
-polygon file's feature list — and every other artifact of the window is
-derived from those rows on the driver, at the same sink edge where the
-GeoJSON encode already runs: the lines file (ST_Boundary per row, then
-Spark's ascending nulls-first order of date, num_cases, geometry; S5)
-and the dates/sums CSV columns.  Only the 19-quantile color scale of
-``normalized`` goes back to Spark, as one built-in ``percentile``
-aggregate.  Artifacts are feature-count-small (the reference writes
-single files); ``write_geojson`` keeps a ``distributed=True`` path for
-at-scale exports.
+join->stats prefix serves all four windows (SURVEY §4 X3), and ONE
+Spark action per ``parse()`` collects every window's export: the four
+exports are unioned behind a window index and collected ordered by
+(window, id, date), so the four windows share one plan, one AQE run
+and one sort.  Each window's slice of that collect is its polygon
+file's feature list, and every other artifact is derived from those
+rows on the driver, at the same sink edge where the GeoJSON encode
+already runs: the lines file (ST_Boundary per row, then Spark's
+ascending nulls-first order of date, num_cases, geometry; S5), the
+dates/sums CSV columns and the 19-quantile color scale of
+``normalized`` (Spark's exact ``percentile`` then ``round(_, 2)``,
+reproduced bit for bit).  Artifacts are feature-count-small (the
+reference writes single files); ``write_geojson`` keeps a
+``distributed=True`` path for at-scale exports.
 """
 
 from __future__ import annotations
 
+import math
 import os
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 
 from ..cachereg import release_all
 from ..operators import spatial as sp
@@ -51,17 +57,36 @@ def _lines_rows(rows: list[Row]) -> list[Row]:
     return sorted(lines, key=lambda r: tuple((v is not None, v) for v in r))
 
 
-def _dates_columns(
-    export: DataFrame, rows: list[Row], window: str
-) -> dict[str, list]:
+def _percentiles(values: list, qs=stats.COLOR_QUANTILES) -> list[float]:
+    """Spark's exact ``percentile(values, qs)`` followed by
+    ``round(_, 2)``, on the driver: nulls are dropped (an all-null or
+    empty input gives ``[]``), then each quantile interpolates between
+    the sorted values at ``floor``/``ceil`` of ``(n-1)*q`` with the
+    operand order of ``PercentileBase.getPercentile``, and rounds
+    HALF_UP on the shortest decimal of the double, as Spark's ``round``
+    does (Python's ``round`` is half-even on the binary value:
+    ``round(0.125, 2)`` is 0.12 where Spark gives 0.13)."""
+    v = sorted(x for x in values if x is not None)
+    if not v:
+        return []
+    out = []
+    for q in qs:
+        pos = (len(v) - 1) * q
+        lo, hi = math.floor(pos), math.ceil(pos)
+        if lo == hi or v[lo] == v[hi]:
+            x = float(v[lo])
+        else:
+            x = (hi - pos) * v[lo] + (pos - lo) * v[hi]
+        out.append(float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP)))
+    return out
+
+
+def _dates_columns(rows: list[Row], window: str) -> dict[str, list]:
     """The three per-window lists of the dates CSV (ref :77,:167-169):
     unique sorted dates, the 19-quantile color scale over
-    ``normalized``, and the first-differenced daily sums.
-
-    Dates and sums come from the window's collected ``rows``; each
-    date's total follows Spark ``sum`` (nulls ignored, an all-null date
-    totals ``None``).  The colors are one ``percentile`` aggregate over
-    ``export``."""
+    ``normalized``, and the first-differenced daily sums, all from the
+    window's collected ``rows``.  Each date's total follows Spark
+    ``sum`` (nulls ignored, an all-null date totals ``None``)."""
     totals: dict = {}
     for r in rows:
         n = r["num_cases"]
@@ -72,17 +97,32 @@ def _dates_columns(
     sums = tot[:1] + [
         None if a is None or b is None else b - a for a, b in zip(tot, tot[1:])
     ]
-    colors = [
-        r["q_value"]
-        for r in stats.quantile_vector(export, "normalized", exact=True)
-        .orderBy("q_idx")
-        .collect()
-    ]
     return {
         f"{window}_dates": [d.isoformat() for d in dates],
-        f"{window}_colors": colors,
+        f"{window}_colors": _percentiles([r["normalized"] for r in rows]),
         f"{window}_sums": sums,
     }
+
+
+def _collect_windows(exports: dict[str, DataFrame]) -> dict[str, list[Row]]:
+    """Every window's export rows in ``(id, date)`` order, from ONE
+    Spark action: the exports are unioned behind a leading window index
+    ``_w`` and collected ordered by ``(_w, id, date)``.  The rows come
+    back without ``_w``, carrying the export's field names."""
+    windows = list(exports)
+    cols = exports[windows[0]].columns
+    tagged = [
+        exports[w].select(F.lit(i).alias("_w"), *cols)
+        for i, w in enumerate(windows)
+    ]
+    union = tagged[0]
+    for df in tagged[1:]:
+        union = union.unionByName(df)
+    out: dict[str, list[Row]] = {w: [] for w in windows}
+    export_row = Row(*cols)
+    for r in union.orderBy("_w", "id", "date").collect():
+        out[windows[r[0]]].append(export_row(*r[1:]))
+    return out
 
 
 def parse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
@@ -96,15 +136,16 @@ def parse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
     artifacts: dict[str, str] = {}
     dates_cols: dict[str, list] = {}
     try:
+        window_rows = _collect_windows(exports)
         for w in WINDOWS:
-            export = exports[w]
+            rows = window_rows[w]
             poly_path = os.path.join(out_dir, f"{w}_polygons.geojson")
-            rows = write_geojson(export, poly_path, order_by=("id", "date"))
+            write_geojson(rows, poly_path)
             artifacts[f"{w}_polygons"] = poly_path
             line_path = os.path.join(out_dir, f"{w}_lines.geojson")
             write_geojson(_lines_rows(rows), line_path)
             artifacts[f"{w}_lines"] = line_path
-            dates_cols.update(_dates_columns(export, rows, w))
+            dates_cols.update(_dates_columns(rows, w))
         csv_path = os.path.join(out_dir, "dates.csv")
         write_dates_array_csv(csv_path, dates_cols)
         artifacts["dates_csv"] = csv_path
@@ -119,4 +160,4 @@ def parse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
 # - :170-175 two GeoJSON files per window (polygons; [date, num_cases,
 #   geometry.boundary] lines)  -> write_geojson + _lines_rows
 # - :201-213 dates_df 12-column ragged CSV via zip_longest
-#   -> _dates_columns + write_dates_array_csv
+#   -> _dates_columns (+ _percentiles) + write_dates_array_csv

@@ -11,6 +11,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -110,17 +111,26 @@ def get_spark(
     return spark
 
 
+# exclusive magnitude bound of each integer type: -b <= v < b
+_INT_BOUNDS = {
+    T.ByteType: 1 << 7,
+    T.ShortType: 1 << 15,
+    T.IntegerType: 1 << 31,
+    T.LongType: 1 << 63,
+}
+
+
 def _sql_literal(v, dt) -> str:
     """Render one Python value as a Spark SQL literal of exactly ``dt``."""
     import math
 
-    from pyspark.sql import types as T
-
     if v is None:
         return f"CAST(NULL AS {dt.simpleString()})"
     if isinstance(dt, T.ArrayType):
+        # the cast types an all-empty array column, which Spark would
+        # otherwise infer as array<void>
         inner = ", ".join(_sql_literal(x, dt.elementType) for x in v)
-        return f"array({inner})"
+        return f"CAST(array({inner}) AS {dt.simpleString()})"
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         f = float(v)
         if math.isnan(f):
@@ -132,11 +142,24 @@ def _sql_literal(v, dt) -> str:
         return f"CAST('{s}' AS {dt.simpleString()})"
     if isinstance(dt, T.BooleanType):
         return "true" if v else "false"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return f"CAST({int(v)} AS {dt.simpleString()})"
+    if type(dt) in _INT_BOUNDS:
+        # a non-ANSI CAST wraps out-of-range values silently;
+        # createDataFrame raises, and so does this
+        i = int(v)
+        bound = _INT_BOUNDS[type(dt)]
+        if not -bound <= i < bound:
+            raise ValueError(
+                f"literal_frame: {i} is out of range for {dt.simpleString()}"
+            )
+        return f"CAST({i} AS {dt.simpleString()})"
     if isinstance(dt, T.StringType):
-        s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
+        s = str(v)
+        if "'" not in s and "\\" not in s:
+            return f"'{s}'"
+        # quotes and backslashes unescape differently under
+        # spark.sql.parser.escapedStringLiterals; a binary literal
+        # decodes the same under both
+        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
     raise TypeError(f"literal_frame: unsupported type {dt.simpleString()}")
 
 
@@ -236,7 +259,10 @@ class Tables:
 
     ``Tables(spark, sf_dir).lineitem`` -> DataFrame over
     ``{sf_dir}/lineitem.parquet``.  Reads are lazy logical plans; Catalyst
-    prunes columns and pushes predicates into the parquet scan.
+    prunes columns and pushes predicates into the parquet scan.  Each
+    table is read once per instance and the frame is reused, so builders
+    that consume a table several times pay its schema-inference job
+    once.
 
     Timestamp normalization (both confs are runtime-settable SQL confs,
     so they work under any caller's session):
@@ -274,6 +300,8 @@ class Tables:
         df = self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet")
         for c in self._NANO_TS_COLS.get(name, []):
             df = normalize_ts(df, c)
+        # later reads of the name find the frame without __getattr__
+        self.__dict__[name] = df
         return df
 
     def register_views(self) -> None:

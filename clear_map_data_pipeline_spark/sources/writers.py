@@ -27,22 +27,21 @@ def write_geojson(
     geom_col: str = "geometry",
     order_by: Sequence[str] = ("id", "date"),
     distributed: bool = False,
-) -> list[Row] | None:
+) -> None:
     """S4/S5 (ref :173-175): write features as a GeoJSON
     FeatureCollection (geometry from the WKT column, all other columns
     as properties, in column order).
 
     ``df`` is either a DataFrame, collected in ``order_by`` order (one
     Spark action), or a list of Rows already in the wanted order, which
-    is written as given (``order_by`` is then unused).  Returns the rows
-    written, so a caller can derive further artifacts from the one
-    collect; ``distributed=True`` writes a JSON dataset from the
-    DataFrame instead and returns ``None``."""
+    is written as given (``order_by`` is then unused);
+    ``distributed=True`` writes a JSON dataset from the DataFrame
+    instead."""
     from ..operators.spatial import wkt_to_geojson
 
     if distributed:
         df.write.mode("overwrite").json(path)
-        return None
+        return
     rows = df.orderBy(*order_by).collect() if isinstance(df, DataFrame) else df
     cols = [c for c in (rows[0].__fields__ if rows else ()) if c != geom_col]
     feats = []
@@ -56,7 +55,6 @@ def write_geojson(
         )
     with open(path, "w", encoding="utf-8") as f:
         json.dump({"type": "FeatureCollection", "features": feats}, f)
-    return rows
 
 
 def _jsonable(v):

@@ -69,11 +69,16 @@ def test_parse_end_to_end(spark, sf_dir, tmp_path):
         assert _sha(artifacts[name]) == _sha(artifacts2[name]), name
 
 
-# Upper bound on the Spark jobs of one parse() of the sf0.01 fixture.
-# Measured: 75 jobs (44 in the shared prefix, then per window one export
-# collect plus one percentile aggregate).  The headroom absorbs AQE
-# broadcast choices; the parent shape (seven actions per window) ran 157.
-PARSE_JOB_BUDGET = 90
+# Upper bounds on the Spark jobs of one parse() and of one backfill-shaped
+# run (run_pipeline without geometry, the four exports written to noop) of
+# the sf0.01 fixture.  parse() measured 39 jobs: the shared prefix plus ONE
+# collect of all four windows, colors computed on the driver.  The
+# backfill shape measured 28-30.  The headroom absorbs AQE broadcast
+# choices.  A collect plus a percentile aggregate per window ran 75 jobs
+# in parse(); a shape dimension built as a five-branch union, each branch
+# re-deriving the distinct users, ran 43 in the backfill shape.
+PARSE_JOB_BUDGET = 48
+BACKFILL_JOB_BUDGET = 36
 
 
 @pytest.fixture(scope="module")
@@ -93,6 +98,30 @@ def gate_parse(spark, gate_sf_dir, tmp_path_factory):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return artifacts, sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.fixture(scope="module")
+def gate_backfill_jobs(spark, gate_sf_dir):
+    """Ids of the Spark jobs of one backfill-shaped run of the sf0.01
+    fixture: ``run_pipeline(geometry=False)``, the four exports written
+    to ``noop``, under one job group."""
+    from clear_map_data_pipeline_spark.cachereg import release_all
+    from clear_map_data_pipeline_spark.plans.clearmap import run_pipeline
+
+    sc = spark.sparkContext
+    group = "test_parse_e2e.gate_backfill"
+    sc.setJobGroup(group, "backfill shape of the sf0.01 fixture")
+    try:
+        exports = run_pipeline(spark, gate_sf_dir, geometry=False)
+        try:
+            for df in exports.values():
+                df.write.format("noop").mode("overwrite").save()
+        finally:
+            release_all()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def _csv_rows(path) -> list[list[str]]:
@@ -164,10 +193,98 @@ def test_parse_job_budget(gate_parse):
     assert 0 < len(jobs) <= PARSE_JOB_BUDGET, len(jobs)
 
 
+def test_backfill_job_budget(gate_backfill_jobs):
+    """The backfill shape of the sf0.01 fixture stays under
+    ``BACKFILL_JOB_BUDGET`` Spark jobs."""
+    assert 0 < len(gate_backfill_jobs) <= BACKFILL_JOB_BUDGET, len(
+        gate_backfill_jobs
+    )
+
+
+def _percentile_cases():
+    import random
+
+    rng = random.Random(7)
+    cases = [
+        ("empty", [], "long"),
+        ("all_null", [None, None, None], "long"),
+        ("one", [42], "long"),
+        ("duplicates", [3, 3, 3, 7, 7, None, 3], "long"),
+        ("negative", [-5, -123456789012, 0, -1, -7, 19], "long"),
+        ("doubles", [0.1, 2.675, -0.0, 1e-9, 3.3, 1e15, 0.125], "double"),
+        ("half_up_tie", [0.0, 2.5], "double"),
+    ]
+    for n in (2, 3, 17, 20, 21, 101, 1000):
+        cases.append(
+            (f"longs_{n}", [rng.randrange(-10**6, 10**6) for _ in range(n)], "long")
+        )
+        cases.append(
+            (f"eighths_{n}", [rng.randrange(-800, 800) / 8 for _ in range(n)], "double")
+        )
+    return cases
+
+
+def test_percentiles_match_spark_percentile(spark):
+    """``_percentiles`` reproduces ``percentile`` + ``round(_, 2)``
+    exactly (as ``quantile_vector(exact=True)`` computes the colors)
+    over nulls, duplicates, negative longs, doubles, Spark's HALF_UP
+    rounding of the shortest decimal, and random sizes around the
+    quantile grid's interpolation points."""
+    from clear_map_data_pipeline_spark.operators import stats
+    from clear_map_data_pipeline_spark.plans.parse import _percentiles
+
+    assert _percentiles([0.0, 2.5])[0] == 0.13  # round(0.125, 2) is 0.12
+    for name, values, dtype in _percentile_cases():
+        df = spark.createDataFrame([(v,) for v in values], f"normalized {dtype}")
+        want = [
+            r["q_value"]
+            for r in stats.quantile_vector(df, "normalized", exact=True)
+            .orderBy("q_idx")
+            .collect()
+        ]
+        assert _percentiles(values) == want, name
+
+
+def test_synth_shape_matches_duckdb_twin(spark, gate_sf_dir):
+    """The one-pass ``synth_shape`` yields the same row multiset as the
+    DuckDB twin's five-branch ``shape`` CTE (``queries/pipeline.py``) on
+    the sf0.01 events, so a dropped or duplicated branch fails here
+    directly."""
+    import duckdb
+
+    from clear_map_data_pipeline_spark.plans.clearmap import synth_shape
+    from clear_map_data_pipeline_spark.queries.pipeline import _PREFIX_CTES
+    from clear_map_data_pipeline_spark.session import Tables
+
+    shape = synth_shape(Tables(spark, gate_sf_dir))
+    cols = shape.columns
+    rows = shape.collect()
+    got = sorted(str(tuple(r)) for r in rows)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{gate_sf_dir}/events.parquet'"
+    )
+    want = sorted(
+        str(r)
+        for r in con.execute(
+            f"WITH {_PREFIX_CTES} SELECT {', '.join(cols)} FROM shape"
+        ).fetchall()
+    )
+    # every branch is populated: the city residue mod 4 tells them apart
+    # (0 absent, 1 case 1, 2 case 2, 3 case 3/4), and a case-3 city has
+    # two areas
+    cities = [r["city"] for r in rows]
+    assert {c % 4 for c in cities} == {0, 1, 2, 3}
+    assert any(cities.count(c) == 2 for c in cities if c % 4 == 3)
+    assert got == want
+
+
 def test_driver_side_derivations_follow_spark_nulls(spark, tmp_path):
-    """Null ``num_cases`` on the driver-side path: Spark ``sum`` ignores
-    nulls (an all-null date totals NULL, and its deltas are NULL), and
-    the lines sort puts nulls first, as Spark's ascending ``orderBy``."""
+    """Nulls on the driver-side path: Spark ``sum`` ignores null
+    ``num_cases`` (an all-null date totals NULL, and its deltas are
+    NULL), the colors skip null ``normalized`` as ``percentile`` does,
+    and the lines sort puts nulls first, as Spark's ascending
+    ``orderBy``."""
     from pyspark.sql import functions as F
 
     from clear_map_data_pipeline_spark.operators import spatial as sp
@@ -191,7 +308,7 @@ def test_driver_side_derivations_follow_spark_nulls(spark, tmp_path):
         "id int, date date, num_cases long, normalized double, geometry string",
     )
     rows = export.orderBy("id", "date").collect()
-    got = _dates_columns(export, rows, "w")
+    got = _dates_columns(rows, "w")
     assert got["w_dates"] == [x.isoformat() for x in d]
     assert got["w_sums"] == [
         r["daily_delta"]

@@ -82,6 +82,47 @@ def test_literal_frame_empty_and_struct_type_schema(spark):
     assert df.rdd.getNumPartitions() <= 1
 
 
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_literal_frame_strings_parse_under_both_escape_modes(spark, escaped):
+    vals = ["it's", "''", "back\\slash", "\\'", "tab\there", "plain", "ünï"]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        df = literal_frame(spark, [(v,) for v in vals], "s string")
+        got = [r["s"] for r in df.collect()]
+    finally:
+        spark.conf.set(key, prev)
+    assert got == vals
+
+
+def test_literal_frame_empty_arrays_keep_declared_type(spark):
+    df = literal_frame(spark, [(1, []), (2, [])], "k int, a array<double>")
+    assert df.dtypes == [("k", "int"), ("a", "array<double>")]
+    assert [r["a"] for r in df.collect()] == [[], []]
+
+
+@pytest.mark.parametrize(
+    "ddl, bad, edge",
+    [
+        ("v tinyint", 128, -128),
+        ("v smallint", -32769, 32767),
+        ("v int", 2**31, -(2**31)),
+        ("v bigint", -(2**63) - 1, 2**63 - 1),
+    ],
+)
+def test_literal_frame_rejects_out_of_range_integers(spark, ddl, bad, edge):
+    ansi = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(ansi)
+    spark.conf.set(ansi, "false")  # where a CAST would wrap silently
+    try:
+        with pytest.raises(ValueError):
+            literal_frame(spark, [(bad,)], ddl)
+        assert literal_frame(spark, [(edge,)], ddl).collect()[0]["v"] == edge
+    finally:
+        spark.conf.set(ansi, prev)
+
+
 def test_literal_frame_rejects_unsupported_type(spark):
     with pytest.raises(TypeError):
         literal_frame(spark, [({"a": 1},)], "m map<string,int>")
