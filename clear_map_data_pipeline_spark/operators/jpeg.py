@@ -9,20 +9,12 @@ round-trip companion encoder (FDCT + Annex-K tables scaled by quality,
 4:4:4 / 4:2:0 / grayscale) in the same spirit as
 ``multimodal.encode_png``/``decode_png``.
 
-Scope: baseline and extended-sequential Huffman JPEGs (SOF0/SOF1) AND
-progressive Huffman JPEGs (SOF2: spectral selection + successive
-approximation, the second-most-common web format — r05) with 8-bit
-samples.  Arithmetic entropy coding — sequential (SOF9) AND
-progressive (SOF10) — decodes via ``operators/jpeg_arith.py``, and
-lossless JPEG (SOF3, Annex-H predictors) via
-``operators/jpeg_lossless.py`` and hierarchical pyramids (DHP/EXP +
-differential lossless frames) via ``operators/jpeg_hier.py``; only
-arithmetic-lossless and DCT-stage hierarchical variants still raise,
-keeping the documented stub fallback for those.  The round-trip
-companion ``encode_jpeg_progressive`` emits a standard multi-scan
-script (DC first/refine, split AC bands, two successive-approximation
-refinement passes) so the decoder's EOB-run, ZRL-in-refinement, and
-correction-bit paths are exercised by self-made fixtures.
+Scope: baseline and extended-sequential Huffman JPEGs (SOF0/SOF1)
+with 8-bit samples, restart markers included.  Every other T.81
+process — progressive (SOF2), lossless (SOF3), arithmetic (SOF9/10)
+and hierarchical (DHP, SOF5-7/11/13-15) — raises
+``NotImplementedError``, so those payloads take the documented stub
+fallback in ``image_features`` and ``video_frame_features``.
 
 Reference parity note: the reference pipeline (il_analysis_git.py) has
 no media operators — this module is beyond-reference extension surface
@@ -228,28 +220,19 @@ def _extend(v: int, t: int) -> int:
 
 
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
-    """Decode a baseline/extended-sequential or progressive Huffman
-    JPEG.
+    """Decode a baseline/extended-sequential Huffman JPEG.
 
     Returns (width, height, channels, pixels) with pixels row-major
     (grayscale: 1 byte/px; color: interleaved RGB) — the same shape
-    contract as ``multimodal.decode_png``.
-
-    Progressive (SOF2) streams carry several scans, each depositing a
-    spectral band / approximation bit-plane of every block's
-    coefficients; the scans accumulate into per-component coefficient
-    grids and ONE vectorized dequantize+IDCT runs at EOI."""
+    contract as ``multimodal.decode_png``.  Every other T.81 process
+    (progressive, lossless, arithmetic, hierarchical) raises
+    ``NotImplementedError``, which the Spark operators turn into the
+    stub fallback."""
     if data[:3] != JPEG_MAGIC:
         raise ValueError("not a JPEG payload")
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict] = {}
-    cond: dict = {}  # DAC arithmetic conditioning
     frame = None
-    progressive = False
-    arithmetic = False
-    lossless = False
-    store: dict[int, np.ndarray] = {}
-    any_scan = False
     restart = 0
     pos = 2
     while pos + 2 <= len(data):
@@ -270,7 +253,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             raise ValueError("truncated JPEG header")
         seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
         seg = data[pos + 4 : pos + 2 + seglen]
-        if m in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):  # SOF0/1/2/3/9/10
+        if m in (0xC0, 0xC1):  # SOF0/1
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise ValueError("only 8-bit JPEG samples supported")
@@ -286,41 +269,13 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             if w == 0 or h == 0:
                 raise ValueError("invalid JPEG frame dimensions")
             frame = (w, h, comps)
-            progressive = m in (0xC2, 0xCA)
-            arithmetic = m in (0xC9, 0xCA)
-            lossless = m == 0xC3
-            if progressive:
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcux = (w + 8 * hmax - 1) // (8 * hmax)
-                mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-                # interleaved DC scans cover the full MCU-padded grid,
-                # so allocate that; non-interleaved scans fill the
-                # component's own ceil-dims sub-grid (natural order)
-                store = {
-                    cid: np.zeros((mcuy * cv, mcux * ch, 64), dtype=np.int64)
-                    for cid, ch, cv, _tq in comps
-                }
-        elif m in (0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
+        elif m in (
+            0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE,
+            0xCF, 0xDE,
+        ):  # SOF2/3/5-7/9-11/13-15, DHP
             raise NotImplementedError(
                 "non-baseline JPEG mode not supported — stub fallback"
             )
-        elif m == 0xDE:  # DHP: hierarchical pyramid — dedicated parser
-            from .jpeg_hier import decode_hierarchical
-
-            # hand over tables-misc state parsed before the DHP
-            # (T.81 B.3 allows DHT/DRI between SOI and DHP)
-            return decode_hierarchical(data, pos, huff=huff, restart=restart)
-        elif m == 0xCC:  # DAC: arithmetic conditioning
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 0xF
-                cs = seg[p + 1]
-                if tc == 0:
-                    cond[("dc", tb)] = (cs & 0xF, cs >> 4)  # (L, U)
-                else:
-                    cond[("ac", tb)] = cs  # Kx
-                p += 2
         elif m == 0xC4:  # DHT, possibly several tables
             p = 0
             while p < len(seg):
@@ -359,49 +314,10 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             for i in range(ns):
                 cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
                 scan[cs] = (tdta >> 4, tdta & 0xF)
-            if lossless:
-                from .jpeg_lossless import decode_scan_lossless
-
-                pred_sel = seg[1 + 2 * ns]  # Ss carries the predictor
-                return decode_scan_lossless(
-                    data, pos + 2 + seglen, frame, scan, huff, pred_sel,
-                    restart,
-                )
-            if not progressive:
-                if arithmetic:
-                    from .jpeg_arith import decode_scan_arith
-
-                    return decode_scan_arith(
-                        data, pos + 2 + seglen, frame, scan, qt, cond,
-                        restart,
-                    )
-                return _decode_scan(
-                    data, pos + 2 + seglen, frame, scan, qt, huff, restart
-                )
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            if ss > se or se > 63 or (ss == 0) != (se == 0):
-                raise ValueError("invalid progressive scan band")
-            if ss > 0 and ns != 1:
-                raise ValueError("progressive AC scan must be single-component")
-            if arithmetic:
-                from .jpeg_arith import decode_progressive_scan_arith
-
-                pos = decode_progressive_scan_arith(
-                    data, pos + 2 + seglen, frame, scan,
-                    ss, se, ah, al, cond, restart, store,
-                )
-            else:
-                pos = _decode_progressive_scan(
-                    data, pos + 2 + seglen, frame, scan,
-                    ss, se, ah, al, huff, restart, store,
-                )
-            any_scan = True
-            continue
+            return _decode_scan(
+                data, pos + 2 + seglen, frame, scan, qt, huff, restart
+            )
         pos += 2 + seglen
-    if progressive and any_scan:
-        return _assemble_progressive(frame, qt, store)
     raise ValueError("no JPEG scan found")
 
 
@@ -459,8 +375,7 @@ def _decode_scan(data, pos, frame, scan, qt, huff, restart):
 
 def _planes_to_pixels(w, h, comps, planes, hmax, vmax):
     """Upsample each component plane to full resolution, crop to the
-    frame dimensions, and color-convert — shared by the baseline and
-    progressive paths."""
+    frame dimensions, and color-convert."""
     full = []
     for cid, ch, cv, _tq in comps:
         p = planes[cid]
@@ -485,174 +400,6 @@ def _planes_to_pixels(w, h, comps, planes, hmax, vmax):
     )
     out = np.clip(np.round(rgb), 0, 255).astype(np.uint8)
     return w, h, 3, out.tobytes()
-
-
-def _scan_units(frame, scan):
-    """Data-unit order for a progressive scan (T.81 A.2): a single-
-    component scan walks the component's OWN ceil-dims block raster;
-    a multi-component scan walks MCUs of the padded grid."""
-    w, h, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    scomps = [c for c in comps if c[0] in scan]
-    if len(scomps) == 1:
-        cid, ch, cv, _tq = scomps[0]
-        compw = -(-(w * ch) // hmax)
-        comph = -(-(h * cv) // vmax)
-        nbx, nby = -(-compw // 8), -(-comph // 8)
-        return scomps, [
-            [(cid, by, bx)] for by in range(nby) for bx in range(nbx)
-        ]
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    mcus = []
-    for my in range(mcuy):
-        for mx in range(mcux):
-            unit = []
-            for cid, ch, cv, _tq in scomps:
-                for by in range(cv):
-                    for bx in range(ch):
-                        unit.append((cid, my * cv + by, mx * ch + bx))
-            mcus.append(unit)
-    return scomps, mcus
-
-
-def _ac_first_block(rd, coef, ac_tab, ss, se, al, eobrun):
-    """First AC scan of a band (Ah=0): run/size symbols deposit
-    coefficients scaled by 2^Al; EOBn symbols start a run of blocks
-    whose remaining band is entirely zero (T.81 G.1.2.2)."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = rd.decode_huffman(ac_tab)
-        r, s = rs >> 4, rs & 0xF
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = 1 << r
-            if r:
-                eobrun += rd.read_bits(r)
-            return eobrun - 1  # current block is part of the run
-        k += r
-        if k > se:
-            raise ValueError("JPEG progressive AC index overflow")
-        coef[ZIGZAG[k]] = _extend(rd.read_bits(s), s) << al
-        k += 1
-    return 0
-
-
-def _ac_refine_block(rd, coef, ac_tab, ss, se, al, eobrun):
-    """Successive-approximation AC refinement (Ah>0): every coefficient
-    already nonzero receives a correction bit as the scan passes it;
-    run/size symbols with s=1 make new coefficients significant at
-    ±2^Al (T.81 G.1.2.3 / the classic libjpeg-style control flow)."""
-    p1, m1 = 1 << al, -(1 << al)
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = rd.decode_huffman(ac_tab)
-            r, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += rd.read_bits(r)
-                    break
-                # r == 15 (ZRL): skip 16 zero-history positions below
-            elif s == 1:
-                s = p1 if rd.read_bit() else m1
-            else:
-                raise ValueError("invalid JPEG refinement magnitude")
-            # advance over r zero-history positions, handing a
-            # correction bit to every nonzero-history coefficient passed
-            while k <= se:
-                z = ZIGZAG[k]
-                if coef[z] != 0:
-                    if rd.read_bit() and (coef[z] & p1) == 0:
-                        coef[z] += p1 if coef[z] > 0 else m1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if s and k <= se:  # s stays 0 for the ZRL case
-                coef[ZIGZAG[k]] = s
-            k += 1
-    if eobrun > 0:
-        # inside an EOB run the block still carries correction bits for
-        # every already-nonzero coefficient in the band remainder
-        while k <= se:
-            z = ZIGZAG[k]
-            if coef[z] != 0:
-                if rd.read_bit() and (coef[z] & p1) == 0:
-                    coef[z] += p1 if coef[z] > 0 else m1
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _decode_progressive_scan(
-    data, pos, frame, scan, ss, se, ah, al, huff, restart, store
-):
-    """Decode one progressive scan into the coefficient store; returns
-    the byte offset of the next marker."""
-    scomps, mcus = _scan_units(frame, scan)
-    rd = _BitReader(data, pos)
-    pred = {c[0]: 0 for c in scomps}
-    eobrun = 0
-    for i, unit in enumerate(mcus):
-        if restart and i and i % restart == 0:
-            rd.align_to_restart()
-            pred = {c[0]: 0 for c in scomps}
-            eobrun = 0
-        for cid, by, bx in unit:
-            coef = store[cid][by, bx]
-            if ss == 0:  # DC scan
-                if ah == 0:
-                    t = rd.decode_huffman(huff[(0, scan[cid][0])])
-                    pred[cid] += _extend(rd.read_bits(t), t)
-                    coef[0] = pred[cid] << al
-                elif rd.read_bit():
-                    coef[0] |= 1 << al
-            elif ah == 0:
-                eobrun = _ac_first_block(
-                    rd, coef, huff[(1, scan[cid][1])], ss, se, al, eobrun
-                )
-            else:
-                eobrun = _ac_refine_block(
-                    rd, coef, huff[(1, scan[cid][1])], ss, se, al, eobrun
-                )
-    # skip any padding bits / unconsumed bytes up to the next marker
-    p = rd.pos
-    d = data
-    while p + 1 < len(d):
-        if (
-            d[p] == 0xFF
-            and d[p + 1] not in (0x00, 0xFF)
-            and not (0xD0 <= d[p + 1] <= 0xD7)
-        ):
-            return p
-        p += 1
-    return len(d)
-
-
-def _assemble_progressive(frame, qt, store):
-    """All scans accumulated: one vectorized dequantize + IDCT per
-    component, then the shared upsample/crop/color tail."""
-    w, h, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = {}
-    for cid, ch, cv, tq in comps:
-        arr = store[cid].astype(float)  # (nby, nbx, 64) natural order
-        q = qt[tq].reshape(64)
-        nby, nbx = arr.shape[0], arr.shape[1]
-        blocks = (arr * q).reshape(nby, nbx, 8, 8)
-        out = _DCT.T @ blocks @ _DCT + 128.0
-        planes[cid] = out.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-    return _planes_to_pixels(w, h, comps, planes, hmax, vmax)
 
 
 class _BitWriter:
@@ -741,7 +488,7 @@ def _encode_block(
 
 def _prepare_components(w, h, ch, pixels, quality, subsampling):
     """Color transform, chroma subsampling, and MCU-aligned edge
-    padding — shared by the baseline and progressive encoders.
+    padding for ``encode_jpeg``.
     Returns (padded comps [(cid, h_fac, v_fac, tq, plane)], ql, qc,
     mcux, mcuy)."""
     if len(pixels) != w * h * ch:
@@ -874,283 +621,5 @@ def encode_jpeg(
                     )
     bw.flush()
     out.extend(bw.out)
-    out.extend(b"\xff\xd9")  # EOI
-    return bytes(out)
-
-
-# Progressive AC scans emit EOBn symbols ((r<<4)|0 for r 1..14), which
-# the Annex-K baseline tables do not contain (libjpeg generates custom
-# tables for progressive output for exactly this reason).  A flat
-# canonical table — every symbol (r<<4)|s for r 0..15, s 0..13 at code
-# length 9 — is prefix-valid (224 < 511 codes, all-ones unreached) and
-# covers first-scan run/size pairs, ZRL, EOBn, and refinement (r<<4)|1.
-PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 0, 224, 0, 0, 0, 0, 0, 0, 0]
-PROG_AC_VALS = [(r << 4) | s for r in range(16) for s in range(14)]
-
-
-class _ProgACWriter:
-    """Per-scan AC emission state for the progressive encoder: pending
-    end-of-band run plus the correction bits buffered inside it
-    (refinement scans interleave raw bits with Huffman symbols in the
-    exact positional order the decoder replays)."""
-
-    def __init__(self, bw: _BitWriter, ac_tab) -> None:
-        self.bw = bw
-        self.ac = ac_tab
-        self.eobrun = 0
-        self.pending_bits: list[int] = []
-
-    def flush_eobrun(self) -> None:
-        if self.eobrun:
-            r = self.eobrun.bit_length() - 1
-            ln, c = self.ac[r << 4]
-            self.bw.write(c, ln)
-            if r:
-                self.bw.write(self.eobrun - (1 << r), r)
-            self.eobrun = 0
-        for b in self.pending_bits:
-            self.bw.write(b, 1)
-        self.pending_bits = []
-
-    def end_block(self, bits: list[int]) -> None:
-        """Block ends with an EOB: join the run, carrying its buffered
-        correction bits; flush at the 32767 run cap."""
-        self.eobrun += 1
-        self.pending_bits.extend(bits)
-        if self.eobrun == 0x7FFF:
-            self.flush_eobrun()
-
-
-def _encode_ac_first(pw: _ProgACWriter, zz: list[int], ss, se, al) -> None:
-    """First scan of an AC band: sign-magnitude point transform
-    (abs >> Al, truncation toward zero), baseline-style run/size coding,
-    EOB folded into the cross-block run."""
-    bw, ac = pw.bw, pw.ac
-    r = 0
-    wrote = False
-    for k in range(ss, se + 1):
-        v = zz[k]
-        a = (v if v >= 0 else -v) >> al
-        if a == 0:
-            r += 1
-            continue
-        if not wrote:
-            pw.flush_eobrun()
-            wrote = True
-        while r > 15:
-            ln, c = ac[0xF0]
-            bw.write(c, ln)
-            r -= 16
-        t = a.bit_length()
-        ln, c = ac[(r << 4) | t]
-        bw.write(c, ln)
-        code = a if v >= 0 else (-a) + (1 << t) - 1
-        bw.write(code, t)
-        r = 0
-    if r > 0:
-        pw.end_block([])
-
-
-def _encode_ac_refine(pw: _ProgACWriter, zz: list[int], ss, se, al) -> None:
-    """Successive-approximation AC refinement: already-significant
-    coefficients contribute one correction bit each (buffered so they
-    trail the next Huffman symbol, mirroring the decoder's advance
-    loop); newly-significant ones emit (run<<4)|1 plus a sign bit."""
-    bw, ac = pw.bw, pw.ac
-    absv = [(v if v >= 0 else -v) >> al for v in zz[ss : se + 1]]
-    # index of the LAST newly-significant coefficient: ZRLs past it
-    # fold into the end-of-band run instead of being emitted
-    eob_idx = ss - 1
-    for k in range(ss, se + 1):
-        if absv[k - ss] == 1:
-            eob_idx = k
-    r = 0
-    bits: list[int] = []
-    for k in range(ss, se + 1):
-        a = absv[k - ss]
-        if a == 0:
-            r += 1
-            continue
-        # ZRLs are emitted at the TOP of any nonzero position so the
-        # buffered correction bits stay positionally aligned with the
-        # decoder's advance loop (which reads them while consuming the
-        # 16 zero-history slots each ZRL covers)
-        while r > 15 and k <= eob_idx:
-            pw.flush_eobrun()
-            ln, c = ac[0xF0]
-            bw.write(c, ln)
-            r -= 16
-            for b in bits:
-                bw.write(b, 1)
-            bits = []
-        if a > 1:
-            # significant in an earlier scan: correction bit only
-            bits.append(a & 1)
-            continue
-        # newly significant at this bit plane (r <= 15 here: a larger
-        # run would imply k > eob_idx, impossible for a == 1)
-        pw.flush_eobrun()
-        ln, c = ac[(r << 4) | 1]
-        bw.write(c, ln)
-        bw.write(1 if zz[k] > 0 else 0, 1)
-        for b in bits:
-            bw.write(b, 1)
-        bits = []
-        r = 0
-    if r > 0 or bits:
-        pw.end_block(bits)
-
-
-def encode_jpeg_progressive(
-    w: int,
-    h: int,
-    ch: int,
-    pixels: bytes,
-    quality: int = 90,
-    subsampling: str = "444",
-) -> bytes:
-    """Progressive (SOF2) JPEG encoder — round-trip companion of the
-    progressive decode path, emitting the standard scan script shape:
-    DC first scan at Al=1 (interleaved for color), two spectral AC
-    bands (1-5, 6-63) at Al=2 per component, two AC refinement passes
-    (Ah=2→Al=1, Ah=1→Al=0), and a DC refinement scan — so self-made
-    fixtures exercise EOB runs, ZRL, new-significance, and correction
-    bits.  The quantized coefficients are identical to ``encode_jpeg``
-    at the same quality/subsampling, so both streams decode to
-    IDENTICAL pixels (progressive coding is a lossless reordering)."""
-    padded, ql, qc, mcux, mcuy = _prepare_components(
-        w, h, ch, pixels, quality, subsampling
-    )
-    hmax = max(c[1] for c in padded)
-    vmax = max(c[2] for c in padded)
-
-    # quantize every block up front: coef[cid][by, bx] = zigzag list
-    coefs: dict[int, np.ndarray] = {}
-    dims: dict[int, tuple[int, int]] = {}
-    for cid, chf, cvf, tq, plane in padded:
-        q = ql if tq == 0 else qc
-        nby, nbx = plane.shape[0] // 8, plane.shape[1] // 8
-        blocks = plane.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3)
-        cf = np.round((_DCT @ (blocks - 128.0) @ _DCT.T) / q).astype(np.int64)
-        coefs[cid] = cf.reshape(nby, nbx, 64)  # natural order
-        # non-interleaved scans walk the component's OWN ceil dims
-        # (T.81 A.2), NOT the MCU-padded grid — at 4:2:0 the luma pad
-        # blocks are covered only by the interleaved DC scans
-        compw = -(-(w * chf) // hmax)
-        comph = -(-(h * cvf) // vmax)
-        dims[cid] = (-(-comph // 8), -(-compw // 8))
-
-    out = bytearray(b"\xff\xd8")  # SOI
-
-    def seg(marker: int, body: bytes) -> None:
-        out.extend(
-            b"\xff" + bytes([marker]) + struct.pack(">H", len(body) + 2) + body
-        )
-
-    seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tq, tab in ([(0, ql)] if ch == 1 else [(0, ql), (1, qc)]):
-        seg(
-            0xDB,
-            bytes([tq]) + bytes(int(tab.flat[ZIGZAG[i]]) for i in range(64)),
-        )
-    sof = struct.pack(">BHHB", 8, h, w, len(padded))
-    for cid, chf, cvf, tq, _p in padded:
-        sof += bytes([cid, (chf << 4) | cvf, tq])
-    seg(0xC2, sof)  # SOF2: progressive
-    dht = [(0, 0, DC_LUMA_BITS, DC_LUMA_VALS), (1, 0, PROG_AC_BITS, PROG_AC_VALS)]
-    if ch == 3:
-        dht.insert(1, (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS))
-    for tc, th, bits, vals in dht:
-        seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-    dc_tabs = {
-        tq: {
-            v: (ln, c)
-            for (ln, c), v in _build_huffman(
-                DC_LUMA_BITS if tq == 0 else DC_CHROMA_BITS,
-                DC_LUMA_VALS if tq == 0 else DC_CHROMA_VALS,
-            ).items()
-        }
-        for tq in {p[3] for p in padded}
-    }
-    ac_tab = {
-        v: (ln, c)
-        for (ln, c), v in _build_huffman(PROG_AC_BITS, PROG_AC_VALS).items()
-    }
-
-    def magnitude(v: int) -> tuple[int, int]:
-        t = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        return t, (v if v >= 0 else v + (1 << t) - 1)
-
-    all_cids = [p[0] for p in padded]
-    scans: list[tuple[list[int], int, int, int, int]] = [
-        (all_cids, 0, 0, 0, 1)
-    ]
-    for cid in all_cids:
-        scans += [([cid], 1, 5, 0, 2), ([cid], 6, 63, 0, 2)]
-    for cid in all_cids:
-        scans += [([cid], 1, 63, 2, 1), ([cid], 1, 63, 1, 0)]
-    scans.append((all_cids, 0, 0, 1, 0))
-
-    byc = {p[0]: p for p in padded}
-    for cids, ss, se, ah, al in scans:
-        sos = bytes([len(cids)])
-        for cid in cids:
-            tq = byc[cid][3]
-            sos += bytes([cid, (tq << 4) | 0])  # Td = quant id, Ta = 0
-        sos += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, sos)
-
-        bw = _BitWriter()
-        if ss == 0:
-            # DC scan: interleaved MCU walk when ns > 1, else raster
-            if len(cids) > 1:
-                units = []
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        for cid in cids:
-                            _c, chf, cvf, _tq, _p = byc[cid]
-                            for by in range(cvf):
-                                for bx in range(chf):
-                                    units.append(
-                                        (cid, my * cvf + by, mx * chf + bx)
-                                    )
-            else:
-                nby, nbx = dims[cids[0]]
-                units = [
-                    (cids[0], by, bx)
-                    for by in range(nby)
-                    for bx in range(nbx)
-                ]
-            if ah == 0:
-                pred = {cid: 0 for cid in cids}
-                for cid, by, bx in units:
-                    v = int(coefs[cid][by, bx, 0]) >> al
-                    diff = v - pred[cid]
-                    pred[cid] = v
-                    t, code = magnitude(diff)
-                    ln, c = dc_tabs[byc[cid][3]][t]
-                    bw.write(c, ln)
-                    if t:
-                        bw.write(code, t)
-            else:
-                for cid, by, bx in units:
-                    bw.write((int(coefs[cid][by, bx, 0]) >> al) & 1, 1)
-        else:
-            cid = cids[0]
-            nby, nbx = dims[cid]
-            pw = _ProgACWriter(bw, ac_tab)
-            for by in range(nby):
-                for bx in range(nbx):
-                    zz = [
-                        int(coefs[cid][by, bx, ZIGZAG[k]]) for k in range(64)
-                    ]
-                    if ah == 0:
-                        _encode_ac_first(pw, zz, ss, se, al)
-                    else:
-                        _encode_ac_refine(pw, zz, ss, se, al)
-            pw.flush_eobrun()
-        bw.flush()
-        out.extend(bw.out)
     out.extend(b"\xff\xd9")  # EOI
     return bytes(out)

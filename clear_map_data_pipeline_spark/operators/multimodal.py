@@ -2,22 +2,19 @@
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The Spark-side plumbing — schema, partition sizing, UDF signatures,
-batch shapes — is real and tested.  Decode: PNG, RIFF/WAV (r03,
-pure-stdlib: ``decode_png`` zlib inflate + scanline unfilter incl.
-Paeth, 8-bit gray/RGB/RGBA; ``decode_wav`` PCM 8/16-bit) and — new in
-r04 — baseline JPEG (``operators/jpeg.py``: Huffman entropy decode,
-dequant + IDCT, chroma upsampling, YCbCr->RGB, restart markers; plus
-the round-trip encoder), and r05 — progressive JPEG (SOF2: spectral
-selection + successive approximation), GIF (LZW + palette, interlace)
-and lossless WebP (``operators/webp.py``: full VP8L — prefix codes,
-LZ77, color cache, all four transforms) all decode for REAL; operators
-sniff magic bytes and use them automatically; arithmetic-coded
-JPEG — sequential SOF9 and progressive SOF10
-(``operators/jpeg_arith.py``: the T.81 QM coder + Annex-F/G
-conditioning) — joined them later in r05.  Formats that still need
-codec libraries (lossy/VP8 WebP, video codecs, hierarchical JPEG)
-fall back to the deterministic ``decode_stub`` pseudo-features, with
-``decode_real`` as the documented seam where PIL/ffmpeg plug in.
+batch shapes — is real and tested.  A small set of formats decodes for
+REAL, pure stdlib + numpy: PNG (``decode_png``: zlib inflate +
+scanline unfilter incl. Paeth, 8-bit gray/RGB/RGBA), GIF (LZW +
+palette, interlace), baseline JPEG (``operators/jpeg.py``: Huffman
+entropy decode, dequant + IDCT, chroma upsampling, YCbCr->RGB,
+restart markers), RIFF/WAV integer PCM and float32 (``decode_wav``),
+and MP4 demux (ISO-BMFF stsz/stco/stsc walk) — with MJPEG video
+decoding end to end through the JPEG path.  Each has a round-trip
+encoder.  Operators sniff magic bytes and use the real decoders
+automatically; every other format (WebP, FLAC, companded/ADPCM WAV,
+non-baseline JPEG, inter-frame video codecs) falls back to the
+deterministic ``decode_stub`` pseudo-features, with ``decode_real`` as
+the documented seam where PIL/ffmpeg plug in.
 
 Scale notes:
 - payloads stay in executor memory one Arrow batch at a time; tune
@@ -79,7 +76,6 @@ def _sniff_real(p: bytes) -> bool:
         p[:8] == PNG_MAGIC
         or p[:3] == JPEG_MAGIC
         or p[:6] in GIF_MAGICS
-        or (p[:4] == b"RIFF" and p[8:12] == b"WEBP")
     )
 
 
@@ -89,9 +85,7 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     training-data cases.  Returns (width, height, channels, pixels)
     with pixels in row-major scanline order.
 
-    This replaces the r02 NotImplementedError seam for PNG payloads;
-    formats needing codec libraries (JPEG, WebP) still raise at
-    ``decode_real``."""
+    Formats with no native decoder still raise at ``decode_real``."""
     import struct
 
     if data[:8] != PNG_MAGIC:
@@ -185,21 +179,18 @@ def encode_png(w: int, h: int, ch: int, pixels: bytes) -> bytes:
 
 
 def decode_wav(data: bytes) -> tuple[int, int, int, list[int]]:
-    """REAL WAV (RIFF) decode, pure stdlib, covering the encodings
-    audio corpora actually carry: integer PCM (fmt 1: 8-bit unsigned,
-    16/24/32-bit signed LE), IEEE float32 (fmt 3, scaled to the int16
-    grid), G.711 A-law / mu-law (fmt 6/7 — telephony speech), and
-    IMA/DVI ADPCM (fmt 0x11, block-structured 4-bit — r05, decoders in
-    ``operators/pcm.py``).  Returns (n_channels, sample_rate,
-    source_bits, samples) with samples interleaved; companded/float
-    sources decode to linear 16-bit-range ints."""
+    """REAL WAV (RIFF) decode, pure stdlib: integer PCM (fmt 1: 8-bit
+    unsigned, 16/24/32-bit signed LE) and IEEE float32 (fmt 3, scaled
+    to the int16 grid).  Any other fmt tag raises ``ValueError``
+    ("unsupported WAV"), which ``audio_features`` turns into the stub.
+    Returns (n_channels, sample_rate, source_bits, samples) with
+    samples interleaved."""
     import struct
 
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
     pos = 12
-    audio_fmt = n_ch = rate = bits = block_align = None
-    samples_per_block = fact_frames = None
+    audio_fmt = n_ch = rate = bits = None
     pcm = None
     while pos + 8 <= len(data):
         cid = data[pos : pos + 4]
@@ -207,50 +198,22 @@ def decode_wav(data: bytes) -> tuple[int, int, int, list[int]]:
         body = data[pos + 8 : pos + 8 + ln]
         pos += 8 + ln + (ln & 1)
         if cid == b"fmt ":
-            audio_fmt, n_ch, rate, _br, block_align, bits = struct.unpack(
+            audio_fmt, n_ch, rate, _br, _ba, bits = struct.unpack(
                 "<HHIIHH", body[:16]
             )
-            if audio_fmt == 0x11 and len(body) >= 20:
-                # fmt extension: cbSize, wSamplesPerBlock — real ADPCM
-                # files pad the tail block; without this the padded
-                # nibbles decode as extra trailing samples, inflating
-                # duration/peak (ADVICE r05)
-                cb, spb = struct.unpack("<HH", body[16:20])
-                if cb >= 2 and spb > 0:
-                    samples_per_block = spb
             ok = (
                 (audio_fmt == 1 and bits in (8, 16, 24, 32))
                 or (audio_fmt == 3 and bits == 32)
-                or (audio_fmt in (6, 7) and bits == 8)
-                or (audio_fmt == 0x11 and bits == 4)
             )
             if not ok:
                 raise ValueError(
                     f"unsupported WAV (fmt={audio_fmt}, bits={bits})"
                 )
-        elif cid == b"fact" and ln >= 4:
-            fact_frames = int.from_bytes(body[:4], "little")
         elif cid == b"data":
             pcm = body
     if n_ch is None or pcm is None:
         raise ValueError("truncated WAV")
-    if audio_fmt == 0x11:
-        from .pcm import ima_adpcm_decode
-
-        samples = ima_adpcm_decode(
-            pcm, n_ch, block_align, samples_per_block=samples_per_block
-        )
-        if fact_frames is not None:
-            samples = samples[: fact_frames * n_ch]
-    elif audio_fmt == 6:
-        from .pcm import alaw_decode_byte
-
-        samples = [alaw_decode_byte(b) for b in pcm]
-    elif audio_fmt == 7:
-        from .pcm import mulaw_decode_byte
-
-        samples = [mulaw_decode_byte(b) for b in pcm]
-    elif audio_fmt == 3:
+    if audio_fmt == 3:
         n = len(pcm) // 4
         floats = struct.unpack(f"<{n}f", pcm[: n * 4])
         samples = [
@@ -280,12 +243,11 @@ def encode_wav(
     n_ch: int = 1,
 ) -> bytes:
     """WAV encoder — round-trip companion of ``decode_wav``.  ``fmt``:
-    'pcm' (bits 8/16/24/32), 'float32' (int16-range input scaled to
-    [-1, 1] floats), 'mulaw' / 'alaw' (G.711 companding of int16
-    input), 'ima_adpcm' (4-bit block ADPCM)."""
+    'pcm' (bits 8/16/24/32) or 'float32' (int16-range input scaled to
+    [-1, 1] floats)."""
     import struct
 
-    tag, block_align = 1, None
+    tag = 1
     if fmt == "pcm":
         if bits == 8:
             pcm = bytes(s & 0xFF for s in samples)
@@ -304,49 +266,17 @@ def encode_wav(
         pcm = struct.pack(
             f"<{len(samples)}f", *[s / 32767.0 for s in samples]
         )
-    elif fmt == "mulaw":
-        from .pcm import mulaw_encode_sample
-
-        tag, bits = 7, 8
-        pcm = bytes(mulaw_encode_sample(s) for s in samples)
-    elif fmt == "alaw":
-        from .pcm import alaw_encode_sample
-
-        tag, bits = 6, 8
-        pcm = bytes(alaw_encode_sample(s) for s in samples)
-    samples_per_block = None
-    if fmt == "ima_adpcm":
-        from .pcm import ima_adpcm_encode
-
-        tag, bits = 0x11, 4
-        samples_per_block = 505
-        pcm, block_align = ima_adpcm_encode(
-            samples, n_ch=n_ch, samples_per_block=samples_per_block
-        )
-    elif fmt not in ("pcm", "float32", "mulaw", "alaw"):
-        raise ValueError(f"unknown fmt {fmt!r}")
-    if block_align is None:
-        block_align = max(n_ch * bits // 8, 1)
-    if samples_per_block is None:
-        # sample-aligned formats: one frame per block_align bytes
-        byte_rate = sample_rate * block_align
     else:
-        # block formats (ADPCM): block_align bytes carry
-        # samples_per_block frames — third-party tools read this field,
-        # so compute it per spec even though our own decoder ignores it
-        byte_rate = sample_rate * block_align // samples_per_block
+        raise ValueError(f"unknown fmt {fmt!r}")
+    block_align = max(n_ch * bits // 8, 1)
     hdr = struct.pack(
-        "<HHIIHH", tag, n_ch, sample_rate, byte_rate, block_align, bits,
+        "<HHIIHH", tag, n_ch, sample_rate, sample_rate * block_align,
+        block_align, bits,
     )
-    if samples_per_block is not None:
-        # fmt-chunk extension (cbSize=2): wSamplesPerBlock, which
-        # decode_wav uses to truncate padded tail nibbles per block
-        hdr += struct.pack("<HH", 2, samples_per_block)
     fact = b""
     if tag != 1:
-        # compressed/non-PCM formats carry a fact chunk with the true
-        # frame count — decode_wav uses it to drop the zero-padded tail
-        # of the final ADPCM block
+        # non-PCM formats carry a fact chunk with the frame count (the
+        # WAVE spec asks for it; decode_wav does not need it)
         fact = b"fact" + struct.pack("<II", 4, len(samples) // n_ch)
     body = (
         b"WAVE"
@@ -358,14 +288,10 @@ def encode_wav(
 
 
 def decode_real(payload: bytes):
-    """The real-decoder dispatch: PNG (``decode_png``, pure stdlib),
-    every T.81 Huffman coding process — baseline, progressive,
-    lossless SOF3, hierarchical pyramids — plus both arithmetic DCT
-    processes (``jpeg.decode_jpeg``), GIF (``decode_gif``), and
-    lossless WebP (``webp.decode_webp``) decode natively; formats that
-    require codec libraries (lossy/VP8 WebP, video codecs,
-    arithmetic-lossless JPEG) still raise at this seam — plug
-    PIL/ffmpeg in here."""
+    """The real-decoder dispatch: PNG (``decode_png``), baseline JPEG
+    (``jpeg.decode_jpeg``) and GIF (``decode_gif``) decode natively,
+    pure stdlib + numpy.  Every other format raises
+    ``NotImplementedError`` at this seam — plug PIL/ffmpeg in here."""
     if payload[:8] == PNG_MAGIC:
         return decode_png(payload)
     if payload[:3] == JPEG_MAGIC:
@@ -374,12 +300,8 @@ def decode_real(payload: bytes):
         return decode_jpeg(payload)
     if payload[:6] in GIF_MAGICS:
         return decode_gif(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        return decode_webp(payload)  # lossless; lossy raises -> stub
     raise NotImplementedError(
-        "non-PNG/JPEG/GIF/WebP image decode requires PIL/ffmpeg; plug in here"
+        "non-PNG/JPEG/GIF image decode requires PIL/ffmpeg; plug in here"
     )
 
 
@@ -396,12 +318,13 @@ def image_features(
     """Batch feature extraction over the binary column via mapInPandas.
     Output is narrow — the payload column never survives the operator.
 
-    Payloads are sniffed by magic bytes: PNG decodes for REAL
-    (``decode_png``, pure stdlib — checksum is the adler32 of the
-    decoded pixel buffer, width/height are the image's true
-    dimensions); other formats fall back to the deterministic stub.
+    Payloads are sniffed by magic bytes: PNG, baseline JPEG and GIF
+    decode for REAL through ``decode_real`` (checksum is the adler32 of
+    the decoded pixel buffer, width/height are the image's true
+    dimensions); other formats, and non-baseline or corrupt variants
+    of those three, fall back to the deterministic stub.
     ``use_real_decoder=True`` forces the real path (raising on formats
-    that still need codec libraries)."""
+    that have no native decoder)."""
 
     def _one(p: bytes) -> tuple[int, int, int]:
         if _sniff_real(p) or use_real_decoder:
@@ -506,32 +429,27 @@ def audio_features(
 ) -> DataFrame:
     """Audio feature extraction, reduced to duration + amplitude stats
     with vectorized numpy per batch.  RIFF/WAVE payloads (magic-
-    sniffed) decode for REAL via ``decode_wav``, FLAC payloads via
-    ``flac.decode_flac`` (r05) — true sample rate, channel-interleaved
-    PCM, absolute amplitudes for signed samples; other payloads are
-    interpreted as headerless unsigned 8-bit PCM at ``sample_rate``
-    (the stub stand-in; MP3/AAC plug in at this seam).  Same scale
-    shape as image_features: map-side only, narrow output, payload
-    pruned immediately after."""
+    sniffed) in integer PCM or float32 decode for REAL via
+    ``decode_wav`` — true sample rate, channel-interleaved PCM,
+    absolute amplitudes for signed samples; every other payload
+    (FLAC, companded/ADPCM WAV, corrupt WAV included) is interpreted
+    as headerless unsigned 8-bit PCM at ``sample_rate`` (the stub
+    stand-in; real codecs plug in at this seam).  Same scale shape as
+    image_features: map-side only, narrow output, payload pruned
+    immediately after."""
     import numpy as np
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .flac import FLAC_MAGIC, decode_flac
-
         for pdf in it:
             ns, dur, mean, peak = [], [], [], []
             for p in pdf["payload"]:
                 decoded = None
-                if (p[:4] == b"RIFF" and p[8:12] == b"WAVE") or p[
-                    :4
-                ] == FLAC_MAGIC:
-                    # corrupt magic-matching payloads degrade to the
-                    # stub — one bad document must not abort the batch
+                if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
+                    # unsupported or corrupt magic-matching payloads
+                    # degrade to the stub — one bad document must not
+                    # abort the batch
                     try:
-                        if p[:4] == FLAC_MAGIC:
-                            decoded = decode_flac(p)
-                        else:
-                            decoded = decode_wav(p)
+                        decoded = decode_wav(p)
                     except (ValueError, struct.error):
                         # struct.error: fmt chunk shorter than its
                         # declared 16-byte body — seen in truncated
@@ -1103,10 +1021,10 @@ def video_frame_features(
     each sampled frame whose bytes carry an image magic (JPEG/PNG)
     is decoded to true (width, height, pixel-checksum) features.
     Motion-JPEG — the dominant self-contained training-corpus video
-    codec because every frame is an independent baseline/progressive
-    JPEG — therefore decodes for real end to end; inter-frame codecs
-    (H.264/VP9/AV1) fall back to the deterministic stub features at the
-    same seam.
+    codec because every frame is an independent JPEG — therefore
+    decodes for real end to end when its frames are baseline JPEGs;
+    non-baseline frames and inter-frame codecs (H.264/VP9/AV1) fall
+    back to the deterministic stub features at the same seam.
 
     One Spark stage: the frame expansion and the frame decode happen in
     the SAME ``mapInPandas`` batch loop, so full frame payloads never

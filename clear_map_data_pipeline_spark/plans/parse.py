@@ -23,8 +23,7 @@ ascending nulls-first order of date, num_cases, geometry; S5), the
 dates/sums CSV columns and the 19-quantile color scale of
 ``normalized`` (Spark's exact ``percentile`` then ``round(_, 2)``,
 reproduced bit for bit).  Artifacts are feature-count-small (the
-reference writes single files); ``write_geojson`` keeps a
-``distributed=True`` path for at-scale exports.
+reference writes single files).
 """
 
 from __future__ import annotations

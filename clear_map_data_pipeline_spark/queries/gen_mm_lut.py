@@ -4,19 +4,23 @@ the deterministic multimodal payloads.
 Every payload in the registered multimodal suite is synthesized from
 ``doc_id`` residues (``queries/multimodal.py``), so each member's
 per-document checksum is a pure function of ``doc_id % m`` for a small
-``m``.  This module computes those functions ONCE by running the real
-encoders + decoders (pure Python, no Spark) and freezes them into
-``_mm_lut.py``; the DuckDB oracle twin then joins the frozen lookup
-tables on ``doc_id % m`` — giving the suite a hash-checkable SQL twin
-valid at ANY scale factor, not just the one it was generated at.
+``m``.  This module computes those functions ONCE for the three codec
+members that need a table — ``mm_jpeg_decode`` (``JPEG_FLAT``),
+``mm_gif_decode`` (``GIF``) and ``mm_mjpeg_video`` (``MJPEG``) — by
+running the real encoders + decoders (pure Python, no Spark), and
+freezes them into ``_mm_lut.py``; the DuckDB oracle twin then joins
+the frozen lookup tables on ``doc_id % m`` — giving the suite a
+hash-checkable SQL twin valid at ANY scale factor, not just the one
+it was generated at.
 
 The LUTs are NOT an independent oracle for the codecs themselves (the
-codec round-trip/fuzz tests in tests/test_jpeg.py etc. are); they pin
-(a) the Spark-side plumbing — sampling predicates, row counts, Arrow
-batch aggregation — against an independent engine, and (b) decoder
-determinism across rounds.  ``tests/test_multimodal_oracle.py``
-recomputes random residues live against the frozen values so a codec
-change cannot silently stale the tables.
+codec round-trip/fuzz tests in tests/test_jpeg.py and
+tests/test_multimodal.py are); they pin (a) the Spark-side plumbing —
+sampling predicates, row counts, Arrow batch aggregation — against an
+independent engine, and (b) decoder determinism across rounds.
+``tests/test_multimodal_oracle.py`` recomputes random residues live
+against the frozen values so a codec change cannot silently stale the
+tables.
 
 Regenerate with::
 
@@ -41,81 +45,6 @@ def lut_jpeg_flat(residues=None) -> list[int]:
     return out
 
 
-def lut_jpeg_prog(residues=None) -> list[int]:
-    """mm_jpeg_progressive: keyed on doc_id % 193 (the gradient base)."""
-    from ..operators.jpeg import decode_jpeg, encode_jpeg_progressive
-
-    out = []
-    for r in residues if residues is not None else range(193):
-        px = bytes((r + 2 * x + 3 * y) % 256 for y in range(8) for x in range(16))
-        _w, _h, _c, dec = decode_jpeg(encode_jpeg_progressive(16, 8, 1, px, quality=85))
-        out.append(zlib.adler32(dec))
-    return out
-
-
-def lut_jpeg_arith(residues=None) -> list[int]:
-    """mm_jpeg_arith: keyed on doc_id % 362 — 362 = 2 * 181 jointly
-    determines the gradient base (d % 181) AND the encoder choice
-    (d % 2: SOF9 sequential vs SOF10 progressive)."""
-    from ..operators.jpeg import decode_jpeg
-    from ..operators.jpeg_arith import (
-        encode_jpeg_arith,
-        encode_jpeg_arith_progressive,
-    )
-
-    out = []
-    for r in residues if residues is not None else range(362):
-        base = r % 181
-        px = bytes((base + 3 * x + 5 * y) % 256 for y in range(8) for x in range(16))
-        enc = encode_jpeg_arith if r % 2 == 0 else encode_jpeg_arith_progressive
-        _w, _h, _c, dec = decode_jpeg(enc(16, 8, 1, px, quality=85))
-        out.append(zlib.adler32(dec))
-    return out
-
-
-def lut_jpeg_lossless(residues=None) -> list[int]:
-    """mm_jpeg_lossless: keyed on doc_id % 211.  The query rotates the
-    predictor with ``1 + d % 7``, but SOF3 is lossless so the decoded
-    pixels — hence the checksum — depend only on the gradient base;
-    the generator asserts that predictor-independence for every
-    residue rather than assuming it."""
-    from ..operators.jpeg import decode_jpeg
-    from ..operators.jpeg_lossless import encode_jpeg_lossless
-
-    out = []
-    for r in residues if residues is not None else range(211):
-        px = bytes((r + 7 * x + 11 * y) % 256 for y in range(8) for x in range(16))
-        vals = set()
-        for pred in range(1, 8):
-            _w, _h, _c, dec = decode_jpeg(
-                encode_jpeg_lossless(16, 8, 1, px, predictor=pred)
-            )
-            vals.add(zlib.adler32(dec))
-        assert len(vals) == 1, f"lossless decode varies with predictor at r={r}"
-        out.append(vals.pop())
-    return out
-
-
-def lut_jpeg_hier(residues=None) -> list[int]:
-    """mm_jpeg_hier: keyed on doc_id % 199; lossless pyramid, so the
-    same predictor-independence argument (asserted) applies."""
-    from ..operators.jpeg import decode_jpeg
-    from ..operators.jpeg_hier import encode_jpeg_hierarchical
-
-    out = []
-    for r in residues if residues is not None else range(199):
-        px = bytes((r + 5 * x + 13 * y) % 256 for y in range(8) for x in range(16))
-        vals = set()
-        for pred in range(1, 8):
-            _w, _h, _c, dec = decode_jpeg(
-                encode_jpeg_hierarchical(16, 8, 1, px, predictor=pred)
-            )
-            vals.add(zlib.adler32(dec))
-        assert len(vals) == 1, f"hier decode varies with predictor at r={r}"
-        out.append(vals.pop())
-    return out
-
-
 def lut_gif(residues=None) -> list[int]:
     """mm_gif_decode: keyed on doc_id % 4 (palette-index base)."""
     from ..operators.multimodal import decode_gif, encode_gif
@@ -126,40 +55,6 @@ def lut_gif(residues=None) -> list[int]:
         idx = bytes((r + x + y) % 4 for y in range(6) for x in range(10))
         _w, _h, _c, px = decode_gif(encode_gif(10, 6, idx, palette))
         out.append(zlib.adler32(px))
-    return out
-
-
-def lut_webp(residues=None) -> list[int]:
-    """mm_webp_decode: keyed on doc_id % 4 (palette-index base)."""
-    from ..operators.webp import decode_webp, encode_webp
-
-    palette = [(0, 0, 128), (64, 64, 160), (128, 128, 192), (255, 255, 255)]
-    out = []
-    for r in residues if residues is not None else range(4):
-        idx = [(r + x + y) % 4 for y in range(6) for x in range(10)]
-        rgb = b"".join(bytes(palette[k]) for k in idx)
-        _w, _h, _c, px = decode_webp(
-            encode_webp(10, 6, 3, rgb, transform="palette", palette=palette)
-        )
-        out.append(zlib.adler32(px))
-    return out
-
-
-def lut_g711_adpcm(residues=None) -> list[int]:
-    """mm_g711_adpcm_audio: decoded peak amplitude, keyed on
-    doc_id % 1800 — 1800 determines both the amplitude (200 + d % 1800)
-    and the format rotation (d % 3, since 3 | 1800)."""
-    from ..operators.multimodal import decode_wav, encode_wav
-
-    fmts = ["mulaw", "alaw", "ima_adpcm"]
-    out = []
-    for r in residues if residues is not None else range(1800):
-        amp = 200 + r
-        pcm = [amp - abs((i * (amp // 50)) % (2 * amp) - amp) for i in range(505)]
-        _nch, _rate, _bits, samples = decode_wav(
-            encode_wav(pcm, 8000, fmt=fmts[r % 3])
-        )
-        out.append(max(abs(s) for s in samples))
     return out
 
 
@@ -189,13 +84,7 @@ def lut_mjpeg(residues=None) -> list[int]:
 #: staleness spot-check walk.
 GENERATORS = {
     "JPEG_FLAT": lut_jpeg_flat,
-    "JPEG_PROG": lut_jpeg_prog,
-    "JPEG_ARITH": lut_jpeg_arith,
-    "JPEG_LOSSLESS": lut_jpeg_lossless,
-    "JPEG_HIER": lut_jpeg_hier,
     "GIF": lut_gif,
-    "WEBP": lut_webp,
-    "G711_ADPCM": lut_g711_adpcm,
     "MJPEG": lut_mjpeg,
 }
 

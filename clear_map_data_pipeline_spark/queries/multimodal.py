@@ -1,5 +1,11 @@
 """Multimodal queries, folded into ONE registered query whose DuckDB
-twin hash-checks every decoder's output (r06; rows-only before that).
+twin hash-checks every member's output.
+
+Eight members: four stubs over the document text (image features,
+image resize, audio features, frame sampling) and four real-codec
+members over synthesized payloads — baseline JPEG, GIF, MP4 demux and
+MJPEG video (MP4-muxed baseline-JPEG frames).  All of them run as
+Arrow-batched ``mapInPandas`` stages over a binary payload column.
 
 Every payload in the suite is synthesized deterministically from
 ``doc_id``, so each member's per-document checksum is a pure function
@@ -92,159 +98,6 @@ def mm_jpeg_decode(spark, sf_dir):
     return mm.image_features(with_payload)
 
 
-def mm_jpeg_progressive(spark, sf_dir):
-    """REAL progressive-JPEG (SOF2) decode inside the registered suite
-    (r05): gradient gray payloads are synthesized per sampled doc by
-    ``encode_jpeg_progressive`` (multi-scan: interleavable DC, split AC
-    bands, two successive-approximation refinement passes), then
-    ``image_features``' sniffed real decode accumulates every scan and
-    recovers true dimensions + a deterministic pixel checksum.  The
-    gradient content (not flat) keeps AC coefficients nonzero so the
-    EOB-run / refinement paths execute on every payload."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 23 == 0)
-
-    def _enc(it):
-        from ..operators.jpeg import encode_jpeg_progressive
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                base = int(d) % 193
-                px = bytes(
-                    (base + 2 * x + 3 * y) % 256
-                    for y in range(8)
-                    for x in range(16)
-                )
-                payloads.append(
-                    encode_jpeg_progressive(16, 8, 1, px, quality=85)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.image_features(with_payload, use_real_decoder=True)
-
-
-def mm_jpeg_arith(spark, sf_dir):
-    """REAL arithmetic-JPEG decode inside the registered suite (r05):
-    gradient gray payloads are synthesized per sampled doc — SOF9
-    (sequential) and SOF10 (progressive) alternating by doc parity —
-    by the T.81 QM-coder encoders (operators/jpeg_arith.py), then
-    ``image_features``' sniffed real decode runs both arithmetic
-    entropy paths end-to-end.  The gradient content keeps AC
-    coefficients nonzero so the EOB / zero-run / magnitude /
-    refinement contexts all adapt on every payload."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 29 == 0)
-
-    def _enc(it):
-        from ..operators.jpeg_arith import (
-            encode_jpeg_arith,
-            encode_jpeg_arith_progressive,
-        )
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                base = int(d) % 181
-                px = bytes(
-                    (base + 3 * x + 5 * y) % 256
-                    for y in range(8)
-                    for x in range(16)
-                )
-                enc = (
-                    encode_jpeg_arith
-                    if int(d) % 2 == 0
-                    else encode_jpeg_arith_progressive
-                )
-                payloads.append(enc(16, 8, 1, px, quality=85))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.image_features(with_payload, use_real_decoder=True)
-
-
-def mm_jpeg_lossless(spark, sf_dir):
-    """REAL lossless JPEG (SOF3, T.81 Annex H) decode inside the
-    registered suite (r05): gradient gray payloads per sampled doc via
-    ``encode_jpeg_lossless`` (predictor varies with the doc so all
-    seven Annex-H predictors execute), decoded through
-    ``image_features``' sniffed real path — SOF3 is truly lossless, so
-    the checksum is the adler32 of the EXACT original pixels."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 31 == 0)
-
-    def _enc(it):
-        from ..operators.jpeg_lossless import encode_jpeg_lossless
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                base = int(d) % 211
-                px = bytes(
-                    (base + 7 * x + 11 * y) % 256
-                    for y in range(8)
-                    for x in range(16)
-                )
-                payloads.append(
-                    encode_jpeg_lossless(
-                        16, 8, 1, px, predictor=1 + int(d) % 7
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.image_features(with_payload, use_real_decoder=True)
-
-
-def mm_jpeg_hier(spark, sf_dir):
-    """REAL hierarchical JPEG (Annex J pyramid) decode inside the
-    registered suite (r05): half-res lossless base frame + EXP +
-    full-res differential correction, synthesized per sampled doc by
-    ``encode_jpeg_hierarchical``.  The pyramid is lossless end-to-end,
-    so the checksum is the adler32 of the EXACT original pixels."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 37 == 0)
-
-    def _enc(it):
-        from ..operators.jpeg_hier import encode_jpeg_hierarchical
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                base = int(d) % 199
-                px = bytes(
-                    (base + 5 * x + 13 * y) % 256
-                    for y in range(8)
-                    for x in range(16)
-                )
-                payloads.append(
-                    encode_jpeg_hierarchical(
-                        16, 8, 1, px, predictor=1 + int(d) % 7
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.image_features(with_payload, use_real_decoder=True)
-
-
 def mm_gif_decode(spark, sf_dir):
     """REAL GIF decode inside the registered suite (r05): palette GIFs
     (LZW-compressed, 4-color gradient indices) synthesized per sampled
@@ -272,72 +125,6 @@ def mm_gif_decode(spark, sf_dir):
 
     with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
     return mm.image_features(with_payload, use_real_decoder=True)
-
-
-def mm_webp_decode(spark, sf_dir):
-    """REAL lossless-WebP (VP8L) decode inside the registered suite
-    (r05): per sampled doc a 4-color gradient is palette-encoded
-    (color-indexing transform, sub-byte packing) by ``encode_webp``,
-    then ``image_features``' sniffed real decode inflates the prefix-
-    coded stream, inverts the transform, and checksums the exact RGBA
-    buffer — VP8L is lossless so the checksum is fully deterministic."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 31 == 0)
-
-    def _enc(it):
-        from ..operators.webp import encode_webp
-
-        palette = [(0, 0, 128), (64, 64, 160), (128, 128, 192), (255, 255, 255)]
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                base = int(d) % 4
-                idx = [(base + x + y) % 4 for y in range(6) for x in range(10)]
-                rgb = b"".join(bytes(palette[k]) for k in idx)
-                payloads.append(
-                    encode_webp(10, 6, 3, rgb, transform="palette",
-                                palette=palette)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.image_features(with_payload, use_real_decoder=True)
-
-
-def mm_flac_audio(spark, sf_dir):
-    """REAL FLAC decode inside the registered suite (r05): a short
-    deterministic triangle-wave PCM stream is FLAC-encoded per sampled
-    doc (fixed-order-2 + Rice subframes), then ``audio_features``'
-    sniffed real decode reconstructs the exact samples — FLAC is
-    lossless, so duration/peak/mean are fully deterministic."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 37 == 0)
-
-    def _enc(it):
-        from ..operators.flac import encode_flac
-
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                amp = 100 + int(d) % 900
-                pcm = [
-                    amp * (1 - abs((i % 64) - 32) // 16) for i in range(512)
-                ]
-                payloads.append(
-                    encode_flac(1, 16000, 16, pcm, blocksize=256)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.audio_features(with_payload)
 
 
 def mm_mp4_frames(spark, sf_dir):
@@ -373,42 +160,6 @@ def mm_mp4_frames(spark, sf_dir):
     return frames.select(
         "doc_id", "frame_idx", F.length("frame_bytes").alias("frame_len")
     )
-
-
-def mm_g711_adpcm_audio(spark, sf_dir):
-    """REAL companded/compressed audio decode inside the registered
-    suite (r05): per sampled doc a deterministic triangle-wave PCM
-    stream is encoded as G.711 mu-law, A-law, or IMA-ADPCM WAV (format
-    rotates by doc_id), then ``audio_features``' sniffed real path
-    decodes it — duration uses the container's true sample count and
-    rate, peak is the companded/predicted amplitude, all
-    deterministic."""
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") % 47 == 0)
-
-    def _enc(it):
-        from ..operators.multimodal import encode_wav
-
-        fmts = ["mulaw", "alaw", "ima_adpcm"]
-        for pdf in it:
-            payloads = []
-            for d in pdf["doc_id"]:
-                amp = 200 + int(d) % 1800
-                pcm = [
-                    amp - abs((i * (amp // 50)) % (2 * amp) - amp)
-                    for i in range(505)
-                ]
-                payloads.append(
-                    encode_wav(pcm, 8000, fmt=fmts[int(d) % 3])
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    with_payload = docs.mapInPandas(_enc, "doc_id long, payload binary")
-    return mm.audio_features(with_payload)
 
 
 def mm_mjpeg_video(spark, sf_dir):
@@ -466,9 +217,9 @@ def _mm_suite_oracle_sql() -> str:
     pure SQL (payload = utf-8 bytes of ASCII text, so byte == ascii of
     the character; the adler32 is the textbook two-accumulator mod-65521
     form).  Codec members join the frozen per-residue LUTs
-    (``_mm_lut.py``) on ``doc_id % m``; FLAC and MP4 have closed forms
-    (lossless triangle-wave peak = its amplitude; container sample
-    sizes are arithmetic in doc_id), so they need no LUT at all."""
+    (``_mm_lut.py``) on ``doc_id % m``; MP4 has a closed form
+    (container sample sizes are arithmetic in doc_id), so it needs no
+    LUT at all."""
     from . import _mm_lut as L
 
     # docstat is total over documents: the byte aggregation produces no
@@ -536,18 +287,7 @@ docstat AS (
             "(SELECT n, greatest(n // 4, 1) AS s FROM docstat) f",
         ),
         lut_member("mm_jpeg_decode", 17, 256, L.JPEG_FLAT),
-        lut_member("mm_jpeg_progressive", 23, 193, L.JPEG_PROG),
-        lut_member("mm_jpeg_arith", 29, 362, L.JPEG_ARITH),
-        lut_member("mm_jpeg_lossless", 31, 211, L.JPEG_LOSSLESS),
-        lut_member("mm_jpeg_hier", 37, 199, L.JPEG_HIER),
         lut_member("mm_gif_decode", 29, 4, L.GIF),
-        lut_member("mm_webp_decode", 31, 4, L.WEBP),
-        agg(
-            "mm_flac_audio",
-            "count(*)",
-            "sum(100 + doc_id % 900)",
-            "documents WHERE doc_id % 37 = 0",
-        ),
         agg(
             "mm_mp4_frames",
             "4 * count(*)",
@@ -555,7 +295,6 @@ docstat AS (
             "documents d WHERE d.doc_id % 41 = 0",
         ),
         lut_member("mm_mjpeg_video", 43, 251, L.MJPEG, n_per_doc=3),
-        lut_member("mm_g711_adpcm_audio", 47, 1800, L.G711_ADPCM),
     ]
     return docstat + "\n" + "\nUNION ALL\n".join(parts)
 
@@ -574,16 +313,9 @@ def mm_multimodal_suite(spark, sf_dir):
         ("mm_audio_features", mm_audio_features, "peak_amp"),
         ("mm_frame_sample", mm_frame_sample, "frame_len"),
         ("mm_jpeg_decode", mm_jpeg_decode, "checksum"),
-        ("mm_jpeg_progressive", mm_jpeg_progressive, "checksum"),
-        ("mm_jpeg_arith", mm_jpeg_arith, "checksum"),
-        ("mm_jpeg_lossless", mm_jpeg_lossless, "checksum"),
-        ("mm_jpeg_hier", mm_jpeg_hier, "checksum"),
         ("mm_gif_decode", mm_gif_decode, "checksum"),
-        ("mm_webp_decode", mm_webp_decode, "checksum"),
-        ("mm_flac_audio", mm_flac_audio, "peak_amp"),
         ("mm_mp4_frames", mm_mp4_frames, "frame_len"),
         ("mm_mjpeg_video", mm_mjpeg_video, "checksum"),
-        ("mm_g711_adpcm_audio", mm_g711_adpcm_audio, "peak_amp"),
     ]
     out = None
     for name, builder, val_col in subs:

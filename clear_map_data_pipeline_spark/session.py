@@ -163,6 +163,13 @@ def _sql_literal(v, dt) -> str:
     raise TypeError(f"literal_frame: unsupported type {dt.simpleString()}")
 
 
+# Row cap for ``literal_frame``: its VALUES text is built and parsed on
+# the driver, so it suits small driver-known dims only.  The largest
+# call measured over tier-1 and the full registry at sf0.1 is 32 rows
+# (the IVF centroid frame, k=32); the cap leaves 31x headroom.
+LITERAL_FRAME_MAX_ROWS = 1_000
+
+
 def literal_frame(spark: SparkSession, rows, ddl):
     """Small literal dimension as a VALUES LocalRelation — the zero-task
     form of ``spark.createDataFrame(rows, ddl)``.
@@ -178,10 +185,17 @@ def literal_frame(spark: SparkSession, rows, ddl):
     work outright).  Values are rendered as exact literals (doubles via
     shortest-round-trip repr + CAST, so bits survive the parse);
     intended for bounded driver-known dims only — literal lookup
-    tables, collected per-partition offsets, centroid frames.
+    tables, collected per-partition offsets, centroid frames.  More
+    than ``LITERAL_FRAME_MAX_ROWS`` rows raise ``ValueError``.
     """
     from pyspark.sql.types import StructType
 
+    if len(rows) > LITERAL_FRAME_MAX_ROWS:
+        raise ValueError(
+            f"literal_frame: {len(rows)} rows exceed the limit of "
+            f"{LITERAL_FRAME_MAX_ROWS}; it is meant for small driver-known "
+            "dims, use spark.createDataFrame for larger data"
+        )
     schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     cols = ", ".join(f"`{f.name}`" for f in schema.fields)
     if not rows:

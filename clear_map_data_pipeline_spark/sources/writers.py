@@ -3,8 +3,6 @@
 The reference's export artifacts are small (thousands of features), so
 the GeoJSON/CSV writers collect ordered rows to the driver and emit a
 single file — matching the reference's single-file, ordered outputs.
-The interface stays partitioned-capable: pass ``distributed=True`` to
-write a parquet/json dataset instead for at-scale exports.
 
 S7 (tippecanoe), S8 (S3 upload) and S9 (Mapbox publish) are process/
 network boundaries OUTSIDE the query plan — kept as driver-side adapter
@@ -26,7 +24,6 @@ def write_geojson(
     path: str,
     geom_col: str = "geometry",
     order_by: Sequence[str] = ("id", "date"),
-    distributed: bool = False,
 ) -> None:
     """S4/S5 (ref :173-175): write features as a GeoJSON
     FeatureCollection (geometry from the WKT column, all other columns
@@ -34,14 +31,9 @@ def write_geojson(
 
     ``df`` is either a DataFrame, collected in ``order_by`` order (one
     Spark action), or a list of Rows already in the wanted order, which
-    is written as given (``order_by`` is then unused);
-    ``distributed=True`` writes a JSON dataset from the DataFrame
-    instead."""
+    is written as given (``order_by`` is then unused)."""
     from ..operators.spatial import wkt_to_geojson
 
-    if distributed:
-        df.write.mode("overwrite").json(path)
-        return
     rows = df.orderBy(*order_by).collect() if isinstance(df, DataFrame) else df
     cols = [c for c in (rows[0].__fields__ if rows else ()) if c != geom_col]
     feats = []

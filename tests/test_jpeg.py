@@ -1,5 +1,6 @@
 """Baseline JPEG codec (operators/jpeg.py) — round-trip tests in the
-decode_png pattern, plus the Spark-operator dispatch path."""
+decode_png pattern, the rejection of non-baseline modes, plus the
+Spark-operator dispatch path."""
 
 from __future__ import annotations
 
@@ -14,6 +15,15 @@ def _codec():
     )
 
     return decode_jpeg, encode_jpeg
+
+
+def _dhp(w: int, h: int) -> bytes:
+    """Hand-built DHP (T.81 B.3.2): 8-bit, one component (id 1, 1x1,
+    Tq 0)."""
+    import struct
+
+    body = struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
+    return b"\xff\xde" + body
 
 
 def test_jpeg_flat_gray_roundtrip_exact():
@@ -62,91 +72,140 @@ def test_jpeg_restart_markers_roundtrip():
         assert pix == img.tobytes(), f"restart_interval={ri}"
 
 
-def test_jpeg_doctored_sof_markers_rejected_cleanly():
-    """(a) A baseline stream relabeled SOF2 or SOF10 carries a baseline
-    SOS header (Ss=0, Se=63) that is invalid for a progressive DC scan
-    — ValueError, not a mis-decode (stub fallback upstream).  (b) A
-    genuinely unsupported mode (hierarchical SOF11) still raises
-    NotImplementedError (sequential + progressive arithmetic decode
-    for real as of r05)."""
-    decode_jpeg, encode_jpeg = _codec()
-    enc = bytearray(encode_jpeg(8, 8, 1, bytes(64), quality=90))
-    sof = enc.find(b"\xff\xc0")
+def test_jpeg_doctored_sof_markers_rejected_cleanly(spark):
+    """Only baseline JPEG decodes.  A baseline stream relabeled to any
+    other T.81 process — progressive SOF2, lossless SOF3, arithmetic
+    SOF9/SOF10, hierarchical SOF11 — or preceded by a hand-built
+    hierarchical DHP header raises NotImplementedError ("non-baseline")
+    in decode_jpeg, and so does a hand-built lossless-WebP header at
+    decode_real.  image_features turns every one into the stub
+    features, and use_real_decoder=True surfaces the error instead."""
+    import struct
+
+    from clear_map_data_pipeline_spark.operators.multimodal import (
+        decode_real,
+        decode_stub,
+        image_features,
+    )
+
+    _, encode_jpeg = _codec()
+    base = encode_jpeg(8, 8, 1, bytes(64), quality=90)
+    sof = base.find(b"\xff\xc0")
     assert sof != -1
-    for relabel in (0xC2, 0xCA):
+    jpegs = []
+    for relabel in (0xC2, 0xC3, 0xC9, 0xCA, 0xCB):
+        enc = bytearray(base)
         enc[sof + 1] = relabel
-        with pytest.raises(ValueError, match="progressive scan band"):
+        jpegs.append(bytes(enc))
+    jpegs.append(base[:2] + _dhp(8, 8) + base[2:])
+    for payload in jpegs:
+        with pytest.raises(NotImplementedError, match="non-baseline"):
+            decode_real(payload)  # dispatches to decode_jpeg
+    # lossless VP8L chunk: signature 0x2f, then an 8x8 size header
+    vp8l = b"VP8L" + struct.pack("<I", 5) + b"\x2f\x07\xc0\x01\x00" + b"\x00"
+    riff_vp8l = b"RIFF" + struct.pack("<I", 4 + len(vp8l)) + b"WEBP" + vp8l
+    with pytest.raises(NotImplementedError):
+        decode_real(riff_vp8l)
+
+    payloads = jpegs + [riff_vp8l]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "doc_id long, payload binary"
+    )
+    rows = {r["doc_id"]: r for r in image_features(df).collect()}
+    for i, payload in enumerate(payloads):
+        got = (rows[i]["checksum"], rows[i]["width"], rows[i]["height"])
+        assert got == decode_stub(payload), i
+    # the forced path re-raises what decode_real raised (checked above
+    # for every payload); one JPEG and the WebP go through Spark
+    for i in (0, len(payloads) - 1):
+        one = df.filter(f"doc_id = {i}")
+        with pytest.raises(Exception, match="NotImplementedError"):
+            image_features(one, use_real_decoder=True).collect()
+
+
+def test_hierarchical_jpeg_malformed_streams_raise():
+    """Hierarchical streams are rejected at their first marker, however
+    malformed the rest is: a differential frame (SOF5/6/7, SOF13/14/15)
+    with no DHP or reference frame, a DHP whose segment length runs
+    past the payload, and a DHP followed by a plain DCT frame all raise
+    NotImplementedError ("non-baseline"); a DHP marker cut off before
+    its length field is a truncated header (ValueError).  Both types
+    sit inside the stub-fallback tuple."""
+    decode_jpeg, encode_jpeg = _codec()
+    base = encode_jpeg(8, 8, 1, bytes(range(0, 128, 2)), quality=90)
+    sof = base.find(b"\xff\xc0")
+    assert sof != -1
+    for relabel in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
+        enc = bytearray(base)
+        enc[sof + 1] = relabel
+        with pytest.raises(NotImplementedError, match="non-baseline"):
             decode_jpeg(bytes(enc))
-    enc[sof + 1] = 0xCB  # hierarchical/lossless family
-    with pytest.raises(NotImplementedError, match="non-baseline"):
-        decode_jpeg(bytes(enc))
+    overlong = base[:2] + b"\xff\xde\x40\x00" + b"\x08"
+    dct_in_hier = base[:2] + _dhp(8, 8) + base[2:]
+    for payload in (overlong, dct_in_hier):
+        with pytest.raises(NotImplementedError, match="non-baseline"):
+            decode_jpeg(payload)
+    with pytest.raises(ValueError, match="truncated"):
+        decode_jpeg(base[:2] + b"\xff\xde")
 
 
-def test_jpeg_progressive_flat_gray_exact():
-    """Progressive encode of a flat gray image decodes EXACTLY (flat
-    blocks quantize to DC-only) — the mm_jpeg_decode fixture shape."""
-    from clear_map_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg_progressive,
-    )
-
-    decode_jpeg, _ = _codec()
-    w, h = 16, 8
-    flat = bytes([77]) * (w * h)
-    got = decode_jpeg(encode_jpeg_progressive(w, h, 1, flat, quality=90))
-    assert got == (w, h, 1, flat)
-
-
-def test_jpeg_progressive_matches_baseline_decode_exactly():
-    """Progressive coding is a lossless reordering of the same
-    quantized coefficients: for any image, decode(progressive stream)
-    must be BYTE-IDENTICAL to decode(baseline stream) at the same
-    quality/subsampling — full-noise content, odd dims, and 4:2:0 pad
-    blocks included.  This pins every scan kind the script emits: DC
-    first/refine (interleaved for color), split AC bands, EOB runs,
-    ZRL-in-refinement, and buffered correction bits."""
-    from clear_map_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg_progressive,
-    )
+def test_hierarchical_jpeg_tables_before_dhp():
+    """T.81 B.3 allows tables/misc segments (DQT, DHT, DRI, COM)
+    between SOI and DHP.  With them parsed first, the DHP still
+    classifies the stream as hierarchical (NotImplementedError); the
+    same stream without the DHP is a valid baseline layout and decodes
+    exactly as the encoder's own ordering does."""
+    import struct
 
     decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.RandomState(7)
-    for w, h in [(8, 8), (17, 9), (32, 24), (64, 48)]:
-        img = rng.randint(0, 256, size=(h, w), dtype=np.uint8).tobytes()
-        for q in (50, 85, 95):
-            assert (
-                decode_jpeg(encode_jpeg(w, h, 1, img, quality=q))
-                == decode_jpeg(encode_jpeg_progressive(w, h, 1, img, quality=q))
-            ), ("gray", w, h, q)
-    for sub in ("444", "420"):
-        for w, h in [(16, 16), (24, 18), (19, 13), (33, 31)]:
-            img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8).tobytes()
-            assert (
-                decode_jpeg(
-                    encode_jpeg(w, h, 3, img, quality=88, subsampling=sub)
-                )
-                == decode_jpeg(
-                    encode_jpeg_progressive(
-                        w, h, 3, img, quality=88, subsampling=sub
-                    )
-                )
-            ), ("color", sub, w, h)
-    # sparse image: long zero runs -> multi-block EOB runs + ZRL paths
-    simg = np.zeros((64, 64), dtype=np.uint8)
-    simg[5, 9] = 255
-    simg[40, 33] = 200
-    assert (
-        decode_jpeg(encode_jpeg(64, 64, 1, simg.tobytes(), quality=95))
-        == decode_jpeg(
-            encode_jpeg_progressive(64, 64, 1, simg.tobytes(), quality=95)
-        )
-    )
+    img = bytes((5 * x + 9 * y) % 256 for y in range(16) for x in range(16))
+    base = encode_jpeg(16, 16, 1, img, quality=90, restart_interval=2)
+    # split the header into segments up to SOS
+    pos, segs = 2, {}
+    while base[pos + 1] != 0xDA:
+        n = struct.unpack(">H", base[pos + 2 : pos + 4])[0]
+        segs.setdefault(base[pos + 1], []).append(base[pos : pos + 2 + n])
+        pos += 2 + n
+    scan = base[pos:]
+    com = b"\xff\xfe" + struct.pack(">H", 8) + b"tables"
+    tables = b"".join(segs[0xDB] + segs[0xC4] + segs[0xDD]) + com
+    frame = segs[0xC0][0]
+    reordered = base[:2] + b"".join(segs[0xE0]) + tables + frame + scan
+    assert decode_jpeg(reordered) == decode_jpeg(base)
+    hier = base[:2] + tables + _dhp(16, 16) + frame + scan
+    with pytest.raises(NotImplementedError, match="non-baseline"):
+        decode_jpeg(hier)
+
+
+def test_lossless_jpeg_validation():
+    """Lossless JPEG is classified by its frame marker before its
+    sample precision is checked: SOF3 (and arithmetic-lossless SOF11)
+    at any T.81 lossless precision (2-16 bits) raises
+    NotImplementedError ("non-baseline"), while a baseline/extended
+    SOF0/SOF1 frame at a precision other than 8 is a ValueError."""
+    decode_jpeg, encode_jpeg = _codec()
+    base = encode_jpeg(8, 8, 1, bytes(64), quality=90)
+    sof = base.find(b"\xff\xc0")
+    assert sof != -1
+    for marker, prec in (
+        (0xC3, 2), (0xC3, 8), (0xC3, 12), (0xC3, 16), (0xCB, 16),
+    ):
+        enc = bytearray(base)
+        enc[sof + 1], enc[sof + 4] = marker, prec
+        with pytest.raises(NotImplementedError, match="non-baseline"):
+            decode_jpeg(bytes(enc))
+    for marker in (0xC0, 0xC1):
+        enc = bytearray(base)
+        enc[sof + 1], enc[sof + 4] = marker, 12
+        with pytest.raises(ValueError, match="only 8-bit"):
+            decode_jpeg(bytes(enc))
 
 
 def test_image_features_decodes_real_jpeg(spark):
     """Spark dispatch: a JPEG payload is magic-sniffed and decodes for
-    real (flat image => exact pixels => deterministic checksum); a
-    doctored progressive JPEG falls back to the stub instead of
-    crashing the batch."""
+    real (flat image => exact pixels => deterministic checksum); the
+    same stream relabeled progressive (not decoded) falls back to the
+    stub instead of crashing the batch."""
     import zlib
 
     from clear_map_data_pipeline_spark.operators.jpeg import encode_jpeg
@@ -306,579 +365,19 @@ def test_jpeg_undefined_table_id_keyerror_falls_back_to_stub(spark):
         image_features(df, use_real_decoder=True).collect()
 
 
-@settings(
-    max_examples=25,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    w=st.integers(1, 40),
-    h=st.integers(1, 40),
-    ch=st.sampled_from([1, 3]),
-    quality=st.integers(70, 100),
-    sub=st.sampled_from(["444", "420"]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_progressive_parity_property(w, h, ch, quality, sub, seed):
-    """Property form of the lossless-reordering invariant: for ANY
-    dims/channels/quality/subsampling and full-spectrum noise content,
-    the progressive stream decodes byte-identical to the baseline
-    stream (both carry the same quantized coefficients)."""
-    from clear_map_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg_progressive,
-    )
-
-    decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-    assert decode_jpeg(
-        encode_jpeg(w, h, ch, img, quality=quality, subsampling=sub)
-    ) == decode_jpeg(
-        encode_jpeg_progressive(
-            w, h, ch, img, quality=quality, subsampling=sub
-        )
-    )
-
-
-def test_image_features_decodes_progressive_jpeg(spark):
-    """Spark dispatch: a progressive (SOF2) payload is magic-sniffed
-    and decodes for REAL — same checksum as the baseline encoding of
-    the same pixels (closes the r04 'second-most-common web format'
-    seam: progressive no longer stub-falls-back)."""
-    import zlib
-
-    from clear_map_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg_progressive,
-    )
-    from clear_map_data_pipeline_spark.operators.multimodal import (
-        image_features,
-    )
-
-    w, h = 16, 8
-    flat = bytes([93]) * (w * h)
-    prog = encode_jpeg_progressive(w, h, 1, flat, quality=90)
-    df = spark.createDataFrame([(1, prog)], "doc_id long, payload binary")
-    (row,) = image_features(df, use_real_decoder=True).collect()
-    assert (row["width"], row["height"]) == (w, h)
-    assert row["checksum"] == zlib.adler32(flat)
-
-
-# --- arithmetic-coded JPEG (T.81 Annex D/E/F, r05) --------------------
-
-
-def test_arith_qe_table_structural_invariants():
-    """The transcribed Table D.3: every Qe a valid 16-bit probability
-    (< 0x8000), every transition in range, the terminal adaptive state
-    (112) a self-loop, and the fixed sign bin (113) non-adaptive."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import QE_TABLE
-
-    assert len(QE_TABLE) == 114
-    for i, (qe, nmps, nlps, sw) in enumerate(QE_TABLE):
-        assert 0 < qe < 0x8000, i
-        assert 0 <= nmps < len(QE_TABLE), i
-        assert 0 <= nlps < len(QE_TABLE), i
-        assert sw in (0, 1), i
-    assert QE_TABLE[112][1] == QE_TABLE[112][2] == 112
-    assert QE_TABLE[113][1] == QE_TABLE[113][2] == 113 and QE_TABLE[113][3] == 0
-    # Adaptation-direction laws (catch transcription typos): outside
-    # the near-0.5 oscillation region, an MPS moves the estimate toward
-    # more skew (smaller Qe); outside the switch states (where the LPS
-    # flips the MPS sense), an LPS moves it toward 0.5 (larger Qe);
-    # MPS-sense switching only happens near equiprobability.
-    for i, (qe, nmps, nlps, sw) in enumerate(QE_TABLE[:113]):
-        if qe < 0x4000:
-            assert QE_TABLE[nmps][0] <= qe, ("nmps", i)
-        if not sw:
-            assert QE_TABLE[nlps][0] >= qe, ("nlps", i)
-        if sw:
-            assert qe >= 0x5000, ("switch", i)
-
-
-def test_arith_raw_coder_roundtrip_adversarial():
-    """The QM coder pair on decision streams engineered to hit every
-    output path: heavy MPS skew (long renorm gaps), heavy LPS skew,
-    alternation, and uniform noise — byte stuffing, stacked-0xFF
-    resolution and carry propagation all fire across 120 streams."""
-    import random
-
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        ArithDecoder,
-        ArithEncoder,
-        _fresh_stats,
-    )
-
-    rng = random.Random(42)
-    saw_stuff = saw_multibyte = False
-    for trial in range(120):
-        n_ctx = rng.randint(1, 8)
-        n = rng.randint(1, 2500)
-        kind = trial % 4
-        bits = []
-        for _ in range(n):
-            c = rng.randrange(n_ctx)
-            if kind == 0:
-                d = 1 if rng.random() < 0.98 else 0
-            elif kind == 1:
-                d = 0 if rng.random() < 0.98 else 1
-            elif kind == 2:
-                d = len(bits) % 2
-            else:
-                d = rng.randint(0, 1)
-            bits.append((c, d))
-        enc = ArithEncoder()
-        st = _fresh_stats(n_ctx)
-        for c, d in bits:
-            enc.encode(st, c, d)
-        data = enc.flush() + b"\xff\xd9"
-        saw_stuff = saw_stuff or b"\xff\x00" in data
-        saw_multibyte = saw_multibyte or len(data) > 10
-        dec = ArithDecoder(data, 0)
-        st2 = _fresh_stats(n_ctx)
-        got = [dec.decode(st2, c) for c, _ in bits]
-        assert got == [d for _, d in bits], f"trial {trial}"
-    assert saw_stuff and saw_multibyte
-
-
-def test_arith_decoder_zero_feeds_after_marker():
-    """Decoding past the entropy segment end must zero-feed (T.81
-    marker discipline), never consume the marker or crash."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        ArithDecoder,
-        ArithEncoder,
-        _fresh_stats,
-    )
-
-    enc = ArithEncoder()
-    st = _fresh_stats(1)
-    for d in (1, 0, 1, 1, 0):
-        enc.encode(st, 0, d)
-    data = enc.flush() + b"\xff\xd9"
-    dec = ArithDecoder(data, 0)
-    st2 = _fresh_stats(1)
-    out = [dec.decode(st2, 0) for _ in range(200)]  # far past the data
-    assert out[:5] == [1, 0, 1, 1, 0]
-    assert dec.marker_hit
-    assert data[dec.raw_pos : dec.raw_pos + 2] == b"\xff\xd9"
-
-
-def test_arith_matches_baseline_decode_exactly():
-    """Arithmetic entropy coding is a lossless recoding of the same
-    quantized coefficients: decode(SOF9 stream) must be BYTE-IDENTICAL
-    to decode(baseline stream) at identical quality/subsampling —
-    gray, color, 4:2:0, odd dims, restart intervals, sparse content."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith,
-    )
-
-    decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.RandomState(11)
-    cases = [
-        (8, 8, 1, "444", 0),
-        (17, 9, 1, "444", 0),
-        (16, 16, 3, "444", 0),
-        (24, 18, 3, "420", 0),
-        (33, 31, 3, "420", 2),
-        (21, 13, 1, "444", 3),
-    ]
-    for w, h, ch, sub, ri in cases:
-        img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-        for q in (50, 90):
-            assert decode_jpeg(
-                encode_jpeg(
-                    w, h, ch, img, quality=q, subsampling=sub,
-                    restart_interval=ri,
-                )
-            ) == decode_jpeg(
-                encode_jpeg_arith(
-                    w, h, ch, img, quality=q, subsampling=sub,
-                    restart_interval=ri,
-                )
-            ), (w, h, ch, sub, ri, q)
-    # sparse: long zero runs drive the AC EOB / zero-run contexts
-    simg = np.zeros((64, 64), dtype=np.uint8)
-    simg[5, 9] = 255
-    simg[40, 33] = 200
-    assert decode_jpeg(
-        encode_jpeg(64, 64, 1, simg.tobytes(), quality=95)
-    ) == decode_jpeg(encode_jpeg_arith(64, 64, 1, simg.tobytes(), quality=95))
-
-
-def test_arith_stream_is_smaller_on_natural_content():
-    """The adaptive coder should beat fixed Huffman tables on smooth
-    content — a sanity check that adaptation is really happening."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith,
-    )
-
-    _, encode_jpeg = _codec()
-    xx, yy = np.meshgrid(np.arange(64), np.arange(48))
-    img = ((xx * 3 + yy * 5) % 256).astype(np.uint8).tobytes()
-    hb = len(encode_jpeg(64, 48, 1, img, quality=75))
-    ab = len(encode_jpeg_arith(64, 48, 1, img, quality=75))
-    assert ab < hb
-
-
-def test_arith_corrupt_magnitude_raises_value_error():
-    """A stream whose magnitude walk never terminates must surface as
-    ValueError (the multimodal stub-fallback contract), not hang or
-    index out of range."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith,
-    )
-
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        ArithEncoder,
-        _fresh_stats,
-    )
-
-    decode_jpeg, _ = _codec()
-    enc = bytearray(encode_jpeg_arith(8, 8, 1, bytes(range(64)), quality=90))
-    sos = enc.find(b"\xff\xda")
-    assert sos != -1
-    # SOS: marker(2) + len(2) + ns(1) + 2*ns(2) + Ss/Se/AhAl(3) = 10
-    body_start = sos + 10
-    # Craft an entropy body whose DC decode path reads: nonzero diff
-    # (bin 0) -> sign 0 (bin 1) -> magnitude walk (bin 2 then 20, 21,
-    # ...) with 1-decisions forever: the category must overflow 0x8000
-    # and raise, never loop or index out of bounds.
-    crafted = ArithEncoder()
-    st = _fresh_stats(64)
-    crafted.encode(st, 0, 1)  # diff != 0
-    crafted.encode(st, 1, 0)  # sign +
-    crafted.encode(st, 2, 1)  # category walk begins
-    for i in range(30):
-        crafted.encode(st, 20 + i, 1)  # runaway walk
-    body = crafted.flush()
-    out = bytes(enc[:body_start]) + body + b"\xff\xd9"
-    with pytest.raises(ValueError, match="corrupt arithmetic"):
-        decode_jpeg(out)
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    w=st.integers(min_value=4, max_value=40),
-    h=st.integers(min_value=4, max_value=40),
-    ch=st.sampled_from([1, 3]),
-    quality=st.integers(min_value=40, max_value=95),
-    sub=st.sampled_from(["444", "420"]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_arith_parity_property(w, h, ch, quality, sub, seed):
-    """Property: for ANY image, the arithmetic and Huffman encodings
-    of the same coefficients decode byte-identically."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith,
-    )
-
-    decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.RandomState(seed)
-    img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-    assert decode_jpeg(
-        encode_jpeg(w, h, ch, img, quality=quality, subsampling=sub)
-    ) == decode_jpeg(
-        encode_jpeg_arith(w, h, ch, img, quality=quality, subsampling=sub)
-    )
-
-
-def test_arith_progressive_matches_baseline_decode_exactly():
-    """SOF10: progressive ARITHMETIC streams are a lossless recoding
-    of the same quantized coefficients — decode must be BYTE-IDENTICAL
-    to the baseline Huffman decode (gray, color, 4:2:0, odd dims,
-    sparse long-zero-run content)."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith_progressive,
-    )
-
-    decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.RandomState(3)
-    for w, h, ch, sub in [
-        (8, 8, 1, "444"),
-        (17, 9, 1, "444"),
-        (16, 16, 3, "444"),
-        (24, 18, 3, "420"),
-        (33, 31, 3, "420"),
-    ]:
-        img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-        for q in (50, 90):
-            assert decode_jpeg(
-                encode_jpeg(w, h, ch, img, quality=q, subsampling=sub)
-            ) == decode_jpeg(
-                encode_jpeg_arith_progressive(
-                    w, h, ch, img, quality=q, subsampling=sub
-                )
-            ), (w, h, ch, sub, q)
-    simg = np.zeros((64, 64), dtype=np.uint8)
-    simg[5, 9] = 255
-    simg[40, 33] = 200
-    assert decode_jpeg(
-        encode_jpeg(64, 64, 1, simg.tobytes(), quality=95)
-    ) == decode_jpeg(
-        encode_jpeg_arith_progressive(64, 64, 1, simg.tobytes(), quality=95)
-    )
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    w=st.integers(min_value=4, max_value=36),
-    h=st.integers(min_value=4, max_value=36),
-    ch=st.sampled_from([1, 3]),
-    quality=st.integers(min_value=40, max_value=95),
-    sub=st.sampled_from(["444", "420"]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_arith_progressive_parity_property(w, h, ch, quality, sub, seed):
-    """Property: all four stream kinds (baseline, progressive,
-    sequential-arithmetic, progressive-arithmetic) of the same image
-    decode byte-identically."""
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith_progressive,
-    )
-
-    decode_jpeg, encode_jpeg = _codec()
-    rng = np.random.RandomState(seed)
-    img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-    assert decode_jpeg(
-        encode_jpeg(w, h, ch, img, quality=quality, subsampling=sub)
-    ) == decode_jpeg(
-        encode_jpeg_arith_progressive(
-            w, h, ch, img, quality=quality, subsampling=sub
-        )
-    )
-
-
-def test_lossless_jpeg_exact_roundtrip_all_predictors():
-    """SOF3 is truly lossless: decode(encode(img)) must equal the
-    input BYTE-FOR-BYTE for every Annex-H predictor, gray and RGB,
-    degenerate 1-pixel/1-row/1-column shapes, and noise content —
-    strictly stronger than the coefficient identity the lossy modes
-    pin."""
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(5)
-    for w, h, ch in [(8, 8, 1), (17, 9, 1), (16, 16, 3), (1, 1, 1),
-                     (40, 1, 3), (1, 25, 1)]:
-        img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-        for pred in range(1, 8):
-            assert decode_jpeg(
-                encode_jpeg_lossless(w, h, ch, img, predictor=pred)
-            ) == (w, h, ch, img), (w, h, ch, pred)
-
-
-def test_lossless_jpeg_restart_intervals_exact():
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(6)
-    img = rng.randint(0, 256, size=(20, 16), dtype=np.uint8).tobytes()
-    for ri in (1, 3, 7):
-        assert decode_jpeg(
-            encode_jpeg_lossless(16, 20, 1, img, predictor=4,
-                                 restart_interval=ri)
-        ) == (16, 20, 1, img), ri
-
-
-def test_lossless_jpeg_prediction_compresses_smooth_content():
-    """On a smooth gradient the predictor residuals are tiny — the
-    stream must be much smaller than the raw pixels (sanity that
-    prediction, not just entropy coding, is doing the work)."""
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    xx, yy = np.meshgrid(np.arange(64), np.arange(64))
-    img = ((xx + yy) % 256).astype(np.uint8).tobytes()
-    enc = encode_jpeg_lossless(64, 64, 1, img, predictor=4)
-    assert len(enc) < len(img) * 0.5
-
-
-def test_lossless_jpeg_validation():
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    with pytest.raises(ValueError, match="predictor"):
-        encode_jpeg_lossless(4, 4, 1, bytes(16), predictor=0)
-    with pytest.raises(ValueError, match="predictor"):
-        encode_jpeg_lossless(4, 4, 1, bytes(16), predictor=8)
-    with pytest.raises(ValueError, match="dimensions"):
-        encode_jpeg_lossless(4, 4, 1, bytes(15))
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    w=st.integers(min_value=1, max_value=40),
-    h=st.integers(min_value=1, max_value=40),
-    ch=st.sampled_from([1, 3]),
-    pred=st.integers(min_value=1, max_value=7),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_lossless_jpeg_roundtrip_property(w, h, ch, pred, seed):
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(seed)
-    img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-    assert decode_jpeg(
-        encode_jpeg_lossless(w, h, ch, img, predictor=pred)
-    ) == (w, h, ch, img)
-
-
-def test_lossless_jpeg_restart_intervals_are_independent():
-    """T.81 restart semantics: prediction and entropy state reset at
-    every RSTn, so an interval's encoded bytes depend ONLY on its own
-    samples.  Two images differing only in row 0, encoded with one
-    row per interval, must produce byte-identical streams after the
-    first restart marker — and both must round-trip exactly."""
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
-    w, h = 12, 6
-    rng = np.random.RandomState(9)
-    a = rng.randint(0, 256, size=(h, w), dtype=np.uint8)
-    b = a.copy()
-    b[0] = (b[0] + 97) % 256  # perturb only the first row
-    ea = encode_jpeg_lossless(w, h, 1, a.tobytes(), predictor=4,
-                              restart_interval=w)
-    eb = encode_jpeg_lossless(w, h, 1, b.tobytes(), predictor=4,
-                              restart_interval=w)
-    assert decode_jpeg(ea) == (w, h, 1, a.tobytes())
-    assert decode_jpeg(eb) == (w, h, 1, b.tobytes())
-    ra, rb = ea.find(b"\xff\xd0"), eb.find(b"\xff\xd0")
-    assert ra != -1 and rb != -1
-    assert ea[ra:] == eb[rb:], "post-restart bytes must not depend on row 0"
-
-
-def test_hierarchical_jpeg_exact_roundtrip():
-    """Annex-J lossless pyramid: half-res SOF3 base + EXP + full-res
-    SOF7 differential correction must reproduce the input
-    BYTE-FOR-BYTE — gray/RGB, odd dims, degenerate shapes."""
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(8)
-    for w, h, ch in [(8, 8, 1), (17, 9, 1), (16, 16, 3), (33, 31, 3),
-                     (1, 1, 1), (40, 1, 3), (1, 25, 1)]:
-        img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-        for pred in (1, 4, 7):
-            assert decode_jpeg(
-                encode_jpeg_hierarchical(w, h, ch, img, predictor=pred)
-            ) == (w, h, ch, img), (w, h, ch, pred)
-
-
-def test_hierarchical_expansion_filter_fixed_values():
-    """The J.1.1.2 interpolation filter on a hand-computable grid:
-    out[2i] = in[i], out[2i+1] = (in[i] + in[i+1] + 1) >> 1, edges
-    replicated, per axis."""
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import expand_ref
-
-    p = np.array([[0, 10], [20, 30]])
-    assert expand_ref(p, 1, 1).tolist() == [
-        [0, 5, 10, 10],
-        [10, 15, 20, 20],
-        [20, 25, 30, 30],
-        [20, 25, 30, 30],
-    ]
-    assert expand_ref(p, 1, 0).tolist() == [[0, 5, 10, 10], [20, 25, 30, 30]]
-    assert expand_ref(p, 0, 1).tolist() == [[0, 10], [10, 20], [20, 30], [20, 30]]
-
-
-def test_hierarchical_jpeg_malformed_streams_raise():
-    """A differential frame before any reference is a clean ValueError;
-    a DCT frame inside a hierarchical stream hits the documented
-    NotImplementedError seam (stub fallback upstream)."""
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-
-    decode_jpeg, _ = _codec()
-    enc = bytearray(encode_jpeg_hierarchical(8, 8, 1, bytes(range(64))))
-    sof3 = enc.find(b"\xff\xc3")
-    assert sof3 != -1
-    doctored = bytearray(enc)
-    doctored[sof3 + 1] = 0xC7  # first frame now claims differential
-    with pytest.raises(ValueError, match="without reference"):
-        decode_jpeg(bytes(doctored))
-    doctored = bytearray(enc)
-    doctored[sof3 + 1] = 0xC0  # DCT frame in hierarchical stream
-    with pytest.raises(NotImplementedError, match="hierarchical"):
-        decode_jpeg(bytes(doctored))
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    w=st.integers(min_value=1, max_value=36),
-    h=st.integers(min_value=1, max_value=36),
-    ch=st.sampled_from([1, 3]),
-    pred=st.integers(min_value=1, max_value=7),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_hierarchical_jpeg_roundtrip_property(w, h, ch, pred, seed):
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(seed)
-    img = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8).tobytes()
-    assert decode_jpeg(
-        encode_jpeg_hierarchical(w, h, ch, img, predictor=pred)
-    ) == (w, h, ch, img)
-
-
 def test_jpeg_family_corruption_fuzz_never_escapes_fallback():
-    """The batch-never-aborts contract, fuzzed across every JPEG
-    family member: random single-byte corruptions of valid streams
-    must either decode to a bounded buffer or raise ONLY exception
-    types the multimodal stub-fallback tuple catches — never hang,
-    never surface an unexpected error class.  150 corruptions per
-    stream kind, deterministic seed."""
+    """The batch-never-aborts contract, fuzzed across the baseline
+    JPEG stream shapes (gray, 4:2:0 color, restart-segmented): random
+    single-byte corruptions of valid streams must either decode to a
+    bounded buffer or raise ONLY exception types the multimodal
+    stub-fallback tuple catches — never hang, never surface an
+    unexpected error class.  150 corruptions per stream kind,
+    deterministic seed."""
     import random
     import struct as _struct
     import zlib as _zlib
 
-    from clear_map_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from clear_map_data_pipeline_spark.operators.jpeg_arith import (
-        encode_jpeg_arith,
-        encode_jpeg_arith_progressive,
-    )
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
+    decode_jpeg, encode_jpeg = _codec()
     allowed = (
         NotImplementedError,
         ValueError,
@@ -889,13 +388,16 @@ def test_jpeg_family_corruption_fuzz_never_escapes_fallback():
     )
     rng = random.Random(1234)
     img = bytes((3 * x + 5 * y) % 256 for y in range(16) for x in range(16))
+    rgb = bytes(
+        (3 * x + 5 * y + 40 * c) % 256
+        for y in range(16)
+        for x in range(16)
+        for c in range(3)
+    )
     streams = {
         "baseline": encode_jpeg(16, 16, 1, img, quality=80),
-        "progressive": encode_jpeg_progressive(16, 16, 1, img, quality=80),
-        "arith": encode_jpeg_arith(16, 16, 1, img, quality=80),
-        "arith_prog": encode_jpeg_arith_progressive(16, 16, 1, img, quality=80),
-        "lossless": encode_jpeg_lossless(16, 16, 1, img),
-        "hierarchical": encode_jpeg_hierarchical(16, 16, 1, img),
+        "color_420": encode_jpeg(16, 16, 3, rgb, quality=80, subsampling="420"),
+        "restart": encode_jpeg(16, 16, 1, img, quality=80, restart_interval=1),
     }
     for kind, enc in streams.items():
         for trial in range(150):
@@ -909,92 +411,3 @@ def test_jpeg_family_corruption_fuzz_never_escapes_fallback():
             except allowed:
                 pass  # exactly what the Spark-side fallback absorbs
             # anything else propagates and fails the test
-
-
-def test_lossless_jpeg_midrow_restart_intervals_independent():
-    """Non-row-aligned DRI (the reviewer-confirmed Rc escape): with
-    restart_interval=6 on a 4-wide image, the sample at local==w in
-    the second interval must NOT reach back to the pre-restart Rc —
-    two images differing only before the first RSTn must share every
-    byte after it, and both round-trip exactly."""
-    from clear_map_data_pipeline_spark.operators.jpeg_lossless import (
-        encode_jpeg_lossless,
-    )
-
-    decode_jpeg, _ = _codec()
-    rng = np.random.RandomState(13)
-    a = rng.randint(0, 256, size=(4, 4), dtype=np.uint8)
-    b = a.copy()
-    b.flat[5] = (int(b.flat[5]) + 111) % 256  # pre-restart sample only
-    ea = encode_jpeg_lossless(4, 4, 1, a.tobytes(), predictor=4,
-                              restart_interval=6)
-    eb = encode_jpeg_lossless(4, 4, 1, b.tobytes(), predictor=4,
-                              restart_interval=6)
-    assert decode_jpeg(ea) == (4, 4, 1, a.tobytes())
-    assert decode_jpeg(eb) == (4, 4, 1, b.tobytes())
-    ra, rb = ea.find(b"\xff\xd0"), eb.find(b"\xff\xd0")
-    assert ra != -1 and rb != -1
-    assert ea[ra:] == eb[rb:]
-
-
-def test_hierarchical_jpeg_tables_before_dhp():
-    """T.81 B.3 allows tables-misc segments between SOI and DHP: a
-    stream whose DHT precedes the DHP marker must decode identically
-    to the frame-local-DHT layout."""
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-
-    decode_jpeg, _ = _codec()
-    img = bytes((5 * x + 9 * y) % 256 for y in range(8) for x in range(8))
-    enc = bytearray(encode_jpeg_hierarchical(8, 8, 1, img))
-    dht = enc.find(b"\xff\xc4")
-    assert dht != -1
-    import struct as _s
-
-    seglen = _s.unpack(">H", enc[dht + 2 : dht + 4])[0]
-    dht_seg = bytes(enc[dht : dht + 2 + seglen])
-    # move the first DHT in front of the DHP marker
-    without = enc[:dht] + enc[dht + 2 + seglen :]
-    dhp = without.find(b"\xff\xde")
-    assert dhp != -1
-    moved = bytes(without[:dhp]) + dht_seg + bytes(without[dhp:])
-    assert decode_jpeg(moved) == (8, 8, 1, img)
-
-
-def test_hierarchical_differential_scan_has_ss_zero():
-    """T.81 Table B.3: Ss shall be 0 in differential lossless scans —
-    the encoder's SOF7 scan header must carry 0, while the SOF3 base
-    scan carries the predictor."""
-    from clear_map_data_pipeline_spark.operators.jpeg_hier import (
-        encode_jpeg_hierarchical,
-    )
-
-    enc = encode_jpeg_hierarchical(8, 8, 1, bytes(64), predictor=5)
-    import struct as _s
-
-    pos, headers = 2, []
-    data = enc
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        m = data[pos + 1]
-        if m in (0xD8, 0xD9, 0x01) or 0xD0 <= m <= 0xD7:
-            pos += 2
-            continue
-        seglen = _s.unpack(">H", data[pos + 2 : pos + 4])[0]
-        if m == 0xDA:
-            seg = data[pos + 4 : pos + 2 + seglen]
-            ns = seg[0]
-            headers.append(seg[1 + 2 * ns])  # Ss byte
-            # skip entropy bytes until next marker
-            p = pos + 2 + seglen
-            while p + 1 < len(data) and not (
-                data[p] == 0xFF and data[p + 1] not in (0x00,)
-            ):
-                p += 1
-            pos = p
-            continue
-        pos += 2 + seglen
-    assert headers == [5, 0]  # base scan: predictor; differential: 0

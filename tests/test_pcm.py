@@ -1,6 +1,7 @@
-"""G.711 mu-law/A-law, float32, 24/32-bit PCM and IMA-ADPCM WAV
-coverage (r05): codec laws, exact round trips, hand-computed decode
-fixtures, and the audio_features real path over companded payloads."""
+"""WAV container coverage: 24/32-bit integer PCM and float32 round
+trips, fact-chunk and truncated-fmt robustness, and the rejection of
+the WAV encodings that are not decoded (G.711 A-law/mu-law, IMA ADPCM,
+MP3-in-WAV), which audio_features turns into the stub."""
 
 from __future__ import annotations
 
@@ -8,236 +9,143 @@ import struct
 
 import pytest
 
-from clear_map_data_pipeline_spark.operators.multimodal import (
-    decode_wav,
-    encode_wav,
-)
-from clear_map_data_pipeline_spark.operators.pcm import (
-    IMA_INDEX_TABLE,
-    IMA_STEP_TABLE,
-    alaw_decode_byte,
-    alaw_encode_sample,
-    ima_adpcm_decode,
-    ima_adpcm_encode,
-    mulaw_decode_byte,
-    mulaw_encode_sample,
-)
+from clear_map_data_pipeline_spark.operators import multimodal as mm
 
 
-def test_g711_code_identity():
-    """encode(decode(c)) == c for every code byte — the standard G.711
-    consistency law, for both companding variants."""
-    for c in range(256):
-        if c == 0x7F:
-            # the G.711 wart: 0x7F is negative zero — it decodes to 0,
-            # which canonically re-encodes as positive zero 0xFF
-            assert mulaw_encode_sample(mulaw_decode_byte(c)) == 0xFF
-        else:
-            assert mulaw_encode_sample(mulaw_decode_byte(c)) == c, f"mu {c}"
-        assert alaw_encode_sample(alaw_decode_byte(c)) == c, f"A {c}"
-
-
-def test_g711_known_values():
-    """Spot values pinned against the G.711 segment formulas: mu-law
-    0xFF is the zero code (decodes to 0), A-law's smallest segment is
-    16*mant + 8 after the 0x55 toggle."""
-    assert mulaw_decode_byte(0xFF) == 0
-    assert mulaw_decode_byte(0x7F) == -0  # negative zero code
-    # mu-law monotone on the positive half (codes 0xFF down to 0x80)
-    pos = [mulaw_decode_byte(c) for c in range(0xFF, 0x7F, -1)]
-    assert pos == sorted(pos) and pos[0] == 0
-    # after the 0x55 toggle the sign bit set means POSITIVE:
-    assert alaw_decode_byte(0xD5) == 8  # toggled 0x80: seg 0, mant 0
-    assert alaw_decode_byte(0x55) == -8
-
-
-def test_g711_companding_error_bounded():
-    """decode(encode(s)) tracks s within the segment's quantization
-    width (relative error < 1/16 + bias slack) across the range."""
-    for s in range(-32000, 32001, 97):
-        d = mulaw_decode_byte(mulaw_encode_sample(s))
-        assert abs(d - s) <= max(64, abs(s) // 8), ("mu", s, d)
-        d = alaw_decode_byte(alaw_encode_sample(s))
-        assert abs(d - s) <= max(32, abs(s) // 8), ("A", s, d)
-
-
-def test_wav_mulaw_alaw_roundtrip_exact():
-    """decode_wav(encode_wav(fmt=mulaw/alaw)) must equal applying the
-    companding table pair sample-by-sample — bit-exact."""
-    samples = [0, 1, -1, 500, -500, 12345, -12345, 32767, -32768]
-    for fmt, enc, dec in (
-        ("mulaw", mulaw_encode_sample, mulaw_decode_byte),
-        ("alaw", alaw_encode_sample, alaw_decode_byte),
-    ):
-        wav = encode_wav(samples, 8000, fmt=fmt)
-        n_ch, rate, bits, out = decode_wav(wav)
-        assert (n_ch, rate, bits) == (1, 8000, 8)
-        assert out == [dec(enc(s)) for s in samples]
+def test_wav_24_and_32_bit_pcm_roundtrip():
+    s24 = [0, 1, -1, 8388607, -8388608, 123456, -654321]
+    _, _, bits, out = mm.decode_wav(mm.encode_wav(s24, 48000, bits=24))
+    assert bits == 24 and out == s24
+    s32 = [0, 2**31 - 1, -(2**31), 7, -7]
+    _, _, bits, out = mm.decode_wav(mm.encode_wav(s32, 48000, bits=32))
+    assert bits == 32 and out == s32
 
 
 def test_wav_float32_roundtrip_exact_on_int16_grid():
     """float32 storage of s/32767 recovers every int16 exactly (24-bit
     mantissa leaves the round() within half a unit)."""
     samples = list(range(-32768, 32768, 257)) + [32767, -32768, 0]
-    n_ch, rate, bits, out = decode_wav(encode_wav(samples, 44100, fmt="float32"))
+    n_ch, rate, bits, out = mm.decode_wav(
+        mm.encode_wav(samples, 44100, fmt="float32")
+    )
     assert (n_ch, rate, bits) == (1, 44100, 32)
     assert out == samples
 
 
-def test_wav_24_and_32_bit_pcm_roundtrip():
-    s24 = [0, 1, -1, 8388607, -8388608, 123456, -654321]
-    _, _, bits, out = decode_wav(encode_wav(s24, 48000, bits=24))
-    assert bits == 24 and out == s24
-    s32 = [0, 2**31 - 1, -(2**31), 7, -7]
-    _, _, bits, out = decode_wav(encode_wav(s32, 48000, bits=32))
-    assert bits == 32 and out == s32
-
-
-def test_ima_step_tables_shape():
-    assert len(IMA_STEP_TABLE) == 89
-    assert IMA_STEP_TABLE[0] == 7 and IMA_STEP_TABLE[88] == 32767
-    assert list(IMA_STEP_TABLE) == sorted(IMA_STEP_TABLE)
-    assert IMA_INDEX_TABLE == (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def test_ima_adpcm_hand_computed_block():
-    """One mono block decoded by hand from the published step rule:
-    header (pred=0, index=0), nibbles 0,7,8,F,1,2,3,4 — each output
-    recomputed literally here, independent of the implementation."""
-    nibbles = [0x0, 0x7, 0x8, 0xF, 0x1, 0x2, 0x3, 0x4]
-    data = struct.pack("<hBx", 0, 0) + bytes(
-        nibbles[i] | (nibbles[i + 1] << 4) for i in range(0, 8, 2)
-    )
-    # literal recompute
-    pred, idx, expect = 0, 0, [0]
-    for nib in nibbles:
-        step = IMA_STEP_TABLE[idx]
-        diff = step >> 3
-        if nib & 1:
-            diff += step >> 2
-        if nib & 2:
-            diff += step >> 1
-        if nib & 4:
-            diff += step
-        if nib & 8:
-            diff = -diff
-        pred = max(-32768, min(32767, pred + diff))
-        idx = max(0, min(88, idx + IMA_INDEX_TABLE[nib & 7]))
-        expect.append(pred)
-    assert ima_adpcm_decode(data, 1, len(data)) == expect
-
-
-def test_ima_adpcm_encode_decode_tracks_input():
-    """Lossy but bounded: a smooth ramp + triangle survives with error
-    well under the coarse-step bound, first sample per block exact."""
-    # continuous triangle wave (slope 16/sample): trackable once the
-    # step size adapts, no discontinuities to chase
-    samples = [2000 - abs((i * 16) % 8000 - 4000) for i in range(1017)]
-    data, ba = ima_adpcm_encode(samples, n_ch=1, samples_per_block=505)
-    out = ima_adpcm_decode(data, 1, ba)
-    assert len(out) >= len(samples)
-    assert out[0] == samples[0] and out[505] == samples[505]  # block heads
-    err = max(abs(a - b) for a, b in zip(samples, out))
-    assert err < 300, err
-
-
-def test_ima_adpcm_stereo_interleave():
-    """Stereo: left = ramp, right = negated ramp; channel interleave
-    must come back channel-true (decode(encode) per-channel bounded,
-    block-head samples exact per channel)."""
-    left = [1500 - abs((i * 12) % 6000 - 3000) for i in range(505)]
-    right = [-s for s in left]
-    inter = [v for pair in zip(left, right) for v in pair]
-    data, ba = ima_adpcm_encode(inter, n_ch=2, samples_per_block=505)
-    out = ima_adpcm_decode(data, 2, ba)
-    lo, ro = out[0::2], out[1::2]
-    assert lo[0] == left[0] and ro[0] == right[0]
-    assert max(abs(a - b) for a, b in zip(left, lo)) < 300
-    assert max(abs(a - b) for a, b in zip(right, ro)) < 300
-
-
-def test_ima_adpcm_wav_roundtrip_via_decode_wav():
-    samples = [(i * 31) % 2000 - 1000 for i in range(505)]
-    wav = encode_wav(samples, 11025, fmt="ima_adpcm")
-    n_ch, rate, bits, out = decode_wav(wav)
-    assert (n_ch, rate, bits) == (1, 11025, 4)
-    # re-encode of the container path matches the raw codec path
-    raw, ba = ima_adpcm_encode(samples)
-    assert out == ima_adpcm_decode(raw, 1, ba)
-
-
-def test_decode_wav_rejects_unknown_fmt():
-    wav = bytearray(encode_wav([1, 2, 3], 8000))
-    i = bytes(wav).find(b"fmt ") + 8
-    wav[i : i + 2] = struct.pack("<H", 85)  # MP3-in-WAV tag
-    with pytest.raises(ValueError, match="unsupported WAV"):
-        decode_wav(bytes(wav))
-
-
-def test_audio_features_mulaw_real_path(spark):
-    """audio_features' sniffed real path must decode a G.711 mu-law
-    payload: n_samples is the true count, peak equals the companded
-    table value, not a byte-length stub."""
-    import zlib as _zlib  # noqa: F401  (style parity with neighbours)
-
-    from clear_map_data_pipeline_spark.operators.multimodal import (
-        audio_features,
-    )
-
-    samples = [0, 9000, -9000, 30000, -30000] * 40
-    wav = encode_wav(samples, 8000, fmt="mulaw")
-    df = spark.createDataFrame([(1, wav)], "doc_id long, payload binary")
-    (row,) = audio_features(df).collect()
-    assert row["n_samples"] == len(samples)
-    assert row["duration_s"] == round(len(samples) / 8000, 6)
-    expect_peak = max(
-        abs(mulaw_decode_byte(mulaw_encode_sample(s))) for s in samples
-    )
-    assert row["peak_amp"] == expect_peak
-
-
-def test_audio_features_truncated_fmt_chunk_stubs(spark):
-    """A RIFF/WAVE payload whose fmt chunk is shorter than 16 bytes
-    must degrade to the stub, not abort the batch (struct.error)."""
-    from clear_map_data_pipeline_spark.operators.multimodal import (
-        audio_features,
-    )
-
-    bad = (
-        b"RIFF" + struct.pack("<I", 20) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
-    )
-    df = spark.createDataFrame([(2, bad)], "doc_id long, payload binary")
-    (row,) = audio_features(df).collect()
-    assert row["n_samples"] == len(bad)  # stub: raw byte count
-
-
 def test_wav_fact_chunk_robustness():
-    """The r06 fact-chunk truncation must degrade gracefully: an
-    oversized frame count is a no-op slice, a truncated fact body is
-    ignored, and both leave the decoded signal intact."""
-    import struct
-
-    from clear_map_data_pipeline_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav,
-    )
-
+    """decode_wav ignores the fact chunk that float32 WAVs carry: an
+    oversized frame count or a truncated fact body leaves the decoded
+    signal intact."""
     pcm = [((i * 29) % 1200) - 600 for i in range(505)]
-    payload = encode_wav(pcm, 8000, fmt="ima_adpcm")
-    want = decode_wav(payload)[3]
+    payload = mm.encode_wav(pcm, 8000, fmt="float32")
+    want = mm.decode_wav(payload)[3]
+    assert want == pcm
 
-    # locate the fact chunk and corrupt its frame count upward
     i = payload.index(b"fact")
     oversized = (
         payload[: i + 8] + struct.pack("<I", 10**6) + payload[i + 12 :]
     )
-    assert decode_wav(oversized)[3] == want
+    assert mm.decode_wav(oversized)[3] == want
 
-    # fact body shorter than 4 bytes: ignored, not crashed
     short = (
         payload[:i]
         + b"fact" + struct.pack("<I", 2) + b"\x00\x00"
         + payload[i + 12 :]
     )
-    assert len(decode_wav(short)[3]) >= len(want)
+    assert mm.decode_wav(short)[3] == want
+
+
+def _riff_wave(tag: int, bits: int, data: bytes, ext: bytes = b"") -> bytes:
+    """Hand-built mono 8 kHz WAV with an arbitrary fmt tag."""
+    align = max(bits // 8, 1)
+    fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000 * align, align, bits) + ext
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def test_decode_wav_rejects_unknown_fmt(spark):
+    """Only integer PCM and float32 WAV decode.  MP3-in-WAV (fmt 85),
+    G.711 A-law / mu-law (fmt 6/7) and IMA ADPCM (fmt 0x11, with its
+    wSamplesPerBlock extension) raise ValueError("unsupported WAV"),
+    and a hand-built fLaC stream is not a WAV at all; audio_features
+    turns every one into the headerless-PCM stub."""
+    wav = bytearray(mm.encode_wav([1, 2, 3], 8000))
+    i = bytes(wav).find(b"fmt ") + 8
+    wav[i : i + 2] = struct.pack("<H", 85)  # MP3-in-WAV tag
+    unsupported = [
+        bytes(wav),
+        _riff_wave(6, 8, bytes(range(0, 160, 10))),
+        _riff_wave(7, 8, bytes(range(0, 160, 10))),
+        _riff_wave(0x11, 4, bytes(range(0, 40, 2)), struct.pack("<HH", 2, 33)),
+    ]
+    for payload in unsupported:
+        with pytest.raises(ValueError, match="unsupported WAV"):
+            mm.decode_wav(payload)
+    # fLaC + a last-block STREAMINFO: 4096-sample blocks, 8 kHz, mono,
+    # 16-bit, 64 samples, zero MD5
+    info = (
+        struct.pack(">HH", 4096, 4096) + bytes(6)
+        + ((8000 << 44) | (15 << 36) | 64).to_bytes(8, "big") + bytes(16)
+    )
+    streaminfo = b"fLaC" + b"\x80" + len(info).to_bytes(3, "big") + info
+    with pytest.raises(ValueError, match="not a WAV"):
+        mm.decode_wav(streaminfo)
+
+    payloads = unsupported + [streaminfo]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "doc_id long, payload binary"
+    )
+    rows = {r["doc_id"]: r for r in mm.audio_features(df).collect()}
+    for i, payload in enumerate(payloads):
+        # stub: raw unsigned bytes at the default 16 kHz
+        assert rows[i]["n_samples"] == len(payload), i
+        assert rows[i]["peak_amp"] == max(payload), i
+
+
+def test_audio_features_truncated_fmt_chunk_stubs(spark):
+    """A RIFF/WAVE payload whose fmt chunk is shorter than 16 bytes
+    must degrade to the stub, not abort the batch (struct.error)."""
+    bad = (
+        b"RIFF" + struct.pack("<I", 20) + b"WAVE"
+        + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
+    )
+    df = spark.createDataFrame([(2, bad)], "doc_id long, payload binary")
+    (row,) = mm.audio_features(df).collect()
+    assert row["n_samples"] == len(bad)  # stub: raw byte count
+
+
+def test_audio_features_mulaw_real_path(spark):
+    """audio_features' sniffed real path over a mu-law WAV laid out as
+    encoders write it (18-byte fmt with cbSize 0, then a fact chunk):
+    decode_wav rejects fmt 7, so that row alone takes the stub while a
+    16-bit PCM row in the same batch still decodes for real."""
+    fmt = struct.pack("<HHIIHHH", 7, 1, 8000, 8000, 1, 8, 0)
+    data = bytes(range(0, 250, 5))
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"fact" + struct.pack("<II", 4, len(data))
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    mulaw = b"RIFF" + struct.pack("<I", len(body)) + body
+    with pytest.raises(ValueError, match="unsupported WAV"):
+        mm.decode_wav(mulaw)
+
+    samples = [0, 9000, -9000, 30000, -30000] * 40
+    pcm = mm.encode_wav(samples, 8000)
+    df = spark.createDataFrame(
+        [(1, mulaw), (2, pcm)], "doc_id long, payload binary"
+    )
+    rows = {r["doc_id"]: r for r in mm.audio_features(df).collect()}
+    # stub: raw unsigned bytes at the default 16 kHz
+    assert rows[1]["n_samples"] == len(mulaw)
+    assert rows[1]["duration_s"] == round(len(mulaw) / 16000, 6)
+    assert rows[1]["peak_amp"] == max(mulaw)
+    # real: true count, rate and signed peak
+    assert rows[2]["n_samples"] == len(samples)
+    assert rows[2]["duration_s"] == round(len(samples) / 8000, 6)
+    assert rows[2]["peak_amp"] == 30000

@@ -1,7 +1,8 @@
 """Focused tests for the r11 scheduling-overhead helpers in session.py:
 ``literal_frame`` (VALUES LocalRelation dims — zero-task broadcast
 builds) and ``data_proportional_partitions`` (byte-sized partition
-counts replacing ``defaultParallelism`` constants)."""
+counts replacing ``defaultParallelism`` constants, with a fallback
+when the private size-estimate API fails)."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clear_map_data_pipeline_spark.session import (
+    LITERAL_FRAME_MAX_ROWS,
     Tables,
     data_proportional_partitions,
     literal_frame,
@@ -128,6 +130,14 @@ def test_literal_frame_rejects_unsupported_type(spark):
         literal_frame(spark, [({"a": 1},)], "m map<string,int>")
 
 
+def test_literal_frame_rejects_rows_over_the_cap(spark):
+    cap = LITERAL_FRAME_MAX_ROWS
+    rows = [(i,) for i in range(cap + 1)]
+    assert literal_frame(spark, rows[:cap], "k int").count() == cap
+    with pytest.raises(ValueError, match=f"{cap + 1} rows exceed the limit of {cap}"):
+        literal_frame(spark, rows, "k int")
+
+
 def test_data_proportional_partitions_small_input_is_one(spark, sf_dir):
     li = Tables(spark, sf_dir).lineitem
     v = li.select(F.col("l_extendedprice").alias("_v"))
@@ -145,6 +155,38 @@ def test_data_proportional_partitions_scales_with_bytes(spark, sf_dir):
     )
     # unusable estimate (simulated via absurd target) still bounded >= 1
     assert data_proportional_partitions(v, target_bytes=1 << 60) == 1
+
+
+def test_data_proportional_partitions_falls_back_to_default_parallelism(spark):
+    """The size estimate comes through private API
+    (``_jdf.queryExecution()``).  When that call raises, or the
+    estimate is unusable (0, or the 8 EB that missing stats read as),
+    the helper returns ``defaultParallelism``."""
+    from types import SimpleNamespace
+
+    def frame(query_execution):
+        return SimpleNamespace(
+            sparkSession=spark,
+            _jdf=SimpleNamespace(queryExecution=query_execution),
+        )
+
+    def broken():
+        raise RuntimeError("queryExecution is not available")
+
+    def with_estimate(size):
+        stats = SimpleNamespace(sizeInBytes=lambda: size)
+        plan = SimpleNamespace(stats=lambda: stats)
+        return lambda: SimpleNamespace(optimizedPlan=lambda: plan)
+
+    fallback = spark.sparkContext.defaultParallelism
+    assert data_proportional_partitions(frame(broken)) == fallback
+    for size in (0, 1 << 50, (1 << 63) - 1):
+        got = data_proportional_partitions(frame(with_estimate(size)))
+        assert got == fallback, size
+    # a usable estimate through the same stand-in is sized, not defaulted
+    assert data_proportional_partitions(
+        frame(with_estimate(3 << 20)), target_bytes=1 << 20
+    ) == 3
 
 
 def test_quantile_vector_distributed_matches_builtin(spark, sf_dir):

@@ -1,184 +1,46 @@
-"""VP8L (lossless WebP) codec — round-trip + hand-built-stream tests
-in the test_jpeg.py pattern, plus the Spark dispatch path."""
+"""WebP is not decoded: RIFF/WEBP payloads are never sniffed as real
+images, and the forced real path raises NotImplementedError at
+``decode_real``."""
 
 from __future__ import annotations
 
 import struct
 
-import numpy as np
 import pytest
 
-from clear_map_data_pipeline_spark.operators.webp import (
-    VP8L_MAGIC_BYTE,
-    _BitWriter,
-    _write_code,
-    _write_msb,
-    decode_webp,
-    encode_webp,
-)
 
-
-def _expand_rgba(img: bytes, ch: int) -> bytes:
-    if ch == 4:
-        return img
-    return b"".join(
-        img[3 * i : 3 * i + 3] + b"\xff" for i in range(len(img) // 3)
-    )
-
-
-def test_webp_roundtrip_plain_and_transforms():
-    """VP8L is lossless: encode -> decode must be byte-exact for any
-    content, across the plain-literal, subtract-green, and predictor
-    coding paths, RGB and RGBA, odd dims."""
-    rng = np.random.RandomState(5)
-    for w, h, ch in [(1, 1, 3), (8, 8, 3), (17, 9, 4), (40, 33, 3), (3, 100, 4)]:
-        img = bytes(rng.randint(0, 256, w * h * ch).astype(np.uint8))
-        want = _expand_rgba(img, ch)
-        for tf in (None, "subtract_green", "predictor"):
-            got = decode_webp(encode_webp(w, h, ch, img, transform=tf))
-            assert got == (w, h, 4, want), (w, h, ch, tf)
-
-
-def test_webp_roundtrip_palette_packing():
-    """Color-indexing transform: sub-byte pixel packing kicks in at
-    palette sizes <=2 (8 px/byte), <=4 (4 px/byte), <=16 (2 px/byte);
-    larger palettes code one index per pixel."""
-    rng = np.random.RandomState(6)
-    for npal in (2, 4, 16, 200):
-        w, h = 37, 21
-        palette = [
-            tuple(int(x) for x in rng.randint(0, 256, 3)) for _ in range(npal)
-        ]
-        idx = rng.randint(0, npal, w * h)
-        img = b"".join(bytes(palette[k]) for k in idx)
-        got = decode_webp(
-            encode_webp(w, h, 3, img, transform="palette", palette=palette)
-        )
-        want = b"".join(bytes(palette[k]) + b"\xff" for k in idx)
-        assert got == (w, h, 4, want), npal
-
-
-def _wrap_vp8l(payload: bytes) -> bytes:
-    if len(payload) & 1:
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload + b"\x00"
-    else:
-        chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    riff = b"WEBP" + chunk
+def _riff_webp(chunk: bytes, body: bytes) -> bytes:
+    riff = b"WEBP" + chunk + struct.pack("<I", len(body)) + body
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-def test_webp_hand_built_lz77_and_color_cache():
-    """A stream assembled field-by-field from the spec — NOT by our
-    encoder — exercising the two decode paths the literal-only encoder
-    never emits: an LZ77 backward reference (green symbol 257 = length
-    2, plain distance code 122 = distance 2) and a color-cache hit.
-    5x1 image: [px0, px1, px0, px1, cache-hit px1]."""
-    w, h = 5, 1
-    px0 = (255, 20, 10, 30)  # a, r, g, b
-    px1 = (255, 40, 50, 60)
-    packed1 = (px1[0] << 24) | (px1[1] << 16) | (px1[2] << 8) | px1[3]
-    cache_bits = 4
-    h1 = ((0x1E35A7BD * packed1) & 0xFFFFFFFF) >> (32 - cache_bits)
-
-    bw = _BitWriter()
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(0, 1)  # alpha hint
-    bw.write(0, 3)  # version
-    bw.write(0, 1)  # no transforms
-    bw.write(1, 1)  # color cache present
-    bw.write(cache_bits, 4)
-    bw.write(0, 1)  # no meta prefix
-    green_size = 256 + 24 + (1 << cache_bits)
-    # green code: {g0, g1, 257 (len-2 backref), 280+h1 (cache hit)}
-    glens = [0] * green_size
-    for s in (px0[2], px1[2], 257, 280 + h1):
-        glens[s] = 2
-    gc = _write_code(bw, glens)
-    # red / blue / alpha: two literal values each (alpha single)
-    rlens = [0] * 256
-    rlens[px0[1]] = 1
-    rlens[px1[1]] = 1
-    rc = _write_code(bw, rlens)
-    blens = [0] * 256
-    blens[px0[3]] = 1
-    blens[px1[3]] = 1
-    bc = _write_code(bw, blens)
-    alens = [0] * 256
-    alens[255] = 1
-    ac = _write_code(bw, alens)
-    # distance tree: single symbol 13 (prefix range 97..128)
-    dlens = [0] * 40
-    dlens[13] = 1
-    dc = _write_code(bw, dlens)
-
-    def emit(codes, sym):
-        c, ln = codes[sym]
-        _write_msb(bw, c, ln)
-
-    # literal px0
-    emit(gc, px0[2]); emit(rc, px0[1]); emit(bc, px0[3]); emit(ac, 255)
-    # literal px1
-    emit(gc, px1[2]); emit(rc, px1[1]); emit(bc, px1[3]); emit(ac, 255)
-    # backref: green 257 -> length code 1 -> length 2 (no extra bits);
-    # distance symbol 13 -> prefix offset 96 + 5 extra bits; dist_code
-    # 122 needs extra = 122 - 96 - 1 = 25; distance = 122 - 120 = 2
-    emit(gc, 257)
-    emit(dc, 13)
-    bw.write(25, 5)
-    # cache hit of px1 (inserted by both its literal and the backref)
-    emit(gc, 280 + h1)
-
-    payload = bytes([VP8L_MAGIC_BYTE]) + bw.finish()
-    got = decode_webp(_wrap_vp8l(payload))
-    def rgba(p):
-        return bytes([p[1], p[2], p[3], p[0]])
-    want = rgba(px0) + rgba(px1) + rgba(px0) + rgba(px1) + rgba(px1)
-    assert got == (w, h, 4, want)
-
-
-def test_webp_lossy_raises_not_implemented():
-    """VP8 (lossy) and VP8X chunks hit the documented stub seam."""
-    riff = b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
-    data = b"RIFF" + struct.pack("<I", len(riff)) + riff
-    with pytest.raises(NotImplementedError, match="lossy"):
-        decode_webp(data)
-
-
-def test_image_features_decodes_real_webp_and_stubs_lossy(spark):
-    """Spark dispatch: a lossless WebP payload is magic-sniffed and
-    decodes for REAL (checksum = adler32 of the RGBA buffer); a lossy
-    VP8 payload falls back to the stub instead of aborting the batch."""
-    import zlib
-
+def test_webp_lossy_raises_not_implemented(spark):
+    """Lossy VP8 and extended VP8X WebP raise NotImplementedError at
+    decode_real; image_features keeps them on the stub features and
+    use_real_decoder=True surfaces the error."""
     from clear_map_data_pipeline_spark.operators.multimodal import (
+        decode_real,
         decode_stub,
         image_features,
     )
 
-    rng = np.random.RandomState(9)
-    w, h = 11, 7
-    img = bytes(rng.randint(0, 256, w * h * 3).astype(np.uint8))
-    good = encode_webp(w, h, 3, img, transform="subtract_green")
-    riff = b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
-    lossy = b"RIFF" + struct.pack("<I", len(riff)) + riff
+    # VP8 key frame: tag, start code, 8x8 size
+    vp8 = _riff_webp(
+        b"VP8 ", b"\x10\x02\x00\x9d\x01\x2a" + struct.pack("<HH", 8, 8)
+    )
+    # VP8X: flags, reserved, canvas width-1 / height-1 (24-bit)
+    vp8x = _riff_webp(b"VP8X", b"\x00" * 4 + b"\x07\x00\x00\x07\x00\x00")
+    payloads = [vp8, vp8x]
+    for payload in payloads:
+        with pytest.raises(NotImplementedError):
+            decode_real(payload)
+
     df = spark.createDataFrame(
-        [(1, good), (2, lossy)], "doc_id long, payload binary"
+        list(enumerate(payloads)), "doc_id long, payload binary"
     )
     rows = {r["doc_id"]: r for r in image_features(df).collect()}
-    assert (rows[1]["width"], rows[1]["height"]) == (w, h)
-    assert rows[1]["checksum"] == zlib.adler32(_expand_rgba(img, 3))
-    crc, sw, sh = decode_stub(lossy)
-    assert (rows[2]["checksum"], rows[2]["width"], rows[2]["height"]) == (
-        crc, sw, sh,
-    )
-
-
-def test_webp_encoder_rejects_oversized_dims():
-    """VP8L dimension fields are 14 bits: w/h outside 1..16384 must
-    raise, not silently truncate into a corrupt header (r05
-    self-review finding)."""
-    with pytest.raises(ValueError, match="16384"):
-        encode_webp(16385, 1, 3, bytes(16385 * 3))
-    with pytest.raises(ValueError, match="16384"):
-        encode_webp(0, 1, 3, b"")
+    for i, payload in enumerate(payloads):
+        got = (rows[i]["checksum"], rows[i]["width"], rows[i]["height"])
+        assert got == decode_stub(payload), i
+    with pytest.raises(Exception, match="NotImplementedError"):
+        image_features(df, use_real_decoder=True).collect()
