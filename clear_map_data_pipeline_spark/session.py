@@ -164,9 +164,13 @@ def _sql_literal(v, dt) -> str:
 
 
 # Row cap for ``literal_frame``: its VALUES text is built and parsed on
-# the driver, so it suits small driver-known dims only.  The largest
-# call measured over tier-1 and the full registry at sf0.1 is 32 rows
-# (the IVF centroid frame, k=32); the cap leaves 31x headroom.
+# the driver, so it suits small fixed dims only.  Its largest direct
+# call measured over tier-1 and the full registry at sf0.1 is 8 rows
+# (a test fixture; 4 in the registry, the range-bucket join's tiers and
+# the streaming category dim); the cap leaves 125x headroom.  Frames
+# whose row count grows with the data or a caller's parameter
+# (per-partition offsets, k-means centers, quantile targets) go through
+# ``collected_frame``, which falls back to ``createDataFrame`` above it.
 LITERAL_FRAME_MAX_ROWS = 1_000
 
 
@@ -184,9 +188,10 @@ def literal_frame(spark: SparkSession, rows, ddl):
     broadcast build on local[32] (guide §2.1/§2.4: remove scheduling
     work outright).  Values are rendered as exact literals (doubles via
     shortest-round-trip repr + CAST, so bits survive the parse);
-    intended for bounded driver-known dims only — literal lookup
-    tables, collected per-partition offsets, centroid frames.  More
-    than ``LITERAL_FRAME_MAX_ROWS`` rows raise ``ValueError``.
+    intended for small fixed dims only — literal lookup tables, empty
+    frames of a given schema.  More than ``LITERAL_FRAME_MAX_ROWS`` rows
+    raise ``ValueError``; frames whose row count grows with the data
+    use ``collected_frame``.
     """
     from pyspark.sql.types import StructType
 
@@ -194,7 +199,7 @@ def literal_frame(spark: SparkSession, rows, ddl):
         raise ValueError(
             f"literal_frame: {len(rows)} rows exceed the limit of "
             f"{LITERAL_FRAME_MAX_ROWS}; it is meant for small driver-known "
-            "dims, use spark.createDataFrame for larger data"
+            "dims, use collected_frame for larger data"
         )
     schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     cols = ", ".join(f"`{f.name}`" for f in schema.fields)
@@ -213,6 +218,18 @@ def literal_frame(spark: SparkSession, rows, ddl):
         for row in rows
     )
     return spark.sql(f"SELECT * FROM VALUES {body} AS t({cols})")
+
+
+def collected_frame(spark: SparkSession, rows, ddl):
+    """Frame over rows collected to the driver whose count grows with
+    the data or a caller's parameter — per-partition offsets (one range
+    partition per ~64 MB, or ``n_ranges`` buckets), k-means centers,
+    quantile targets: ``literal_frame`` up to ``LITERAL_FRAME_MAX_ROWS`` rows, the
+    parallelized ``spark.createDataFrame`` above.  Past the cap a
+    driver-parsed VALUES text costs more than the slices' tasks do."""
+    if len(rows) <= LITERAL_FRAME_MAX_ROWS:
+        return literal_frame(spark, rows, ddl)
+    return spark.createDataFrame(rows, ddl)
 
 
 def data_proportional_partitions(df, target_bytes: int | None = None) -> int:

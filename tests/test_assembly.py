@@ -77,6 +77,19 @@ def test_global_shuffle_index_is_contiguous_permutation(spark, sf_dir):
     assert by_id != sorted(by_id)
 
 
+def test_global_shuffle_index_with_more_ranges_than_the_literal_cap(spark):
+    """n_ranges above literal_frame's row cap (the docstring's advice
+    at 100 TB): the bucket offsets go through collected_frame's
+    createDataFrame branch and the index is still 0..N-1."""
+    from clear_map_data_pipeline_spark.session import LITERAL_FRAME_MAX_ROWS
+
+    n_ranges = LITERAL_FRAME_MAX_ROWS + 500
+    n = 12 * n_ranges  # every bucket non-empty: P(empty) ~ e^-12
+    docs = spark.range(n).withColumnRenamed("id", "doc_id")
+    rows = asm.global_shuffle_index(docs, n_ranges=n_ranges).collect()
+    assert sorted(r["global_index"] for r in rows) == list(range(n))
+
+
 def test_global_shuffle_index_deterministic_and_seeded(spark, sf_dir):
     docs = Tables(spark, sf_dir).documents
     a = sorted(map(tuple, asm.global_shuffle_index(docs, seed=17).collect()))

@@ -55,13 +55,17 @@ def test_wav_fact_chunk_robustness():
     assert mm.decode_wav(short)[3] == want
 
 
-def _riff_wave(tag: int, bits: int, data: bytes, ext: bytes = b"") -> bytes:
-    """Hand-built mono 8 kHz WAV with an arbitrary fmt tag."""
+def _riff_wave(
+    tag: int, bits: int, data: bytes, ext: bytes = b"", chunks: bytes = b""
+) -> bytes:
+    """Hand-built mono 8 kHz WAV with an arbitrary fmt tag; ``chunks``
+    go between the fmt and data chunks."""
     align = max(bits // 8, 1)
     fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000 * align, align, bits) + ext
     body = (
         b"WAVE"
         + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + chunks
         + b"data" + struct.pack("<I", len(data)) + data
     )
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -69,17 +73,21 @@ def _riff_wave(tag: int, bits: int, data: bytes, ext: bytes = b"") -> bytes:
 
 def test_decode_wav_rejects_unknown_fmt(spark):
     """Only integer PCM and float32 WAV decode.  MP3-in-WAV (fmt 85),
-    G.711 A-law / mu-law (fmt 6/7) and IMA ADPCM (fmt 0x11, with its
-    wSamplesPerBlock extension) raise ValueError("unsupported WAV"),
-    and a hand-built fLaC stream is not a WAV at all; audio_features
-    turns every one into the headerless-PCM stub."""
+    G.711 A-law (fmt 6), mu-law (fmt 7, laid out as encoders write it:
+    18-byte fmt with cbSize 0, then a fact chunk) and IMA ADPCM (fmt
+    0x11, with its wSamplesPerBlock extension) raise
+    ValueError("unsupported WAV"), and a hand-built fLaC stream is not
+    a WAV at all; audio_features turns every one into the
+    headerless-PCM stub."""
     wav = bytearray(mm.encode_wav([1, 2, 3], 8000))
     i = bytes(wav).find(b"fmt ") + 8
     wav[i : i + 2] = struct.pack("<H", 85)  # MP3-in-WAV tag
+    g711 = bytes(range(0, 160, 10))
+    fact = b"fact" + struct.pack("<II", 4, len(g711))
     unsupported = [
         bytes(wav),
-        _riff_wave(6, 8, bytes(range(0, 160, 10))),
-        _riff_wave(7, 8, bytes(range(0, 160, 10))),
+        _riff_wave(6, 8, g711),
+        _riff_wave(7, 8, g711, struct.pack("<H", 0), fact),
         _riff_wave(0x11, 4, bytes(range(0, 40, 2)), struct.pack("<HH", 2, 33)),
     ]
     for payload in unsupported:
@@ -119,22 +127,11 @@ def test_audio_features_truncated_fmt_chunk_stubs(spark):
 
 
 def test_audio_features_mulaw_real_path(spark):
-    """audio_features' sniffed real path over a mu-law WAV laid out as
-    encoders write it (18-byte fmt with cbSize 0, then a fact chunk):
-    decode_wav rejects fmt 7, so that row alone takes the stub while a
-    16-bit PCM row in the same batch still decodes for real."""
-    fmt = struct.pack("<HHIIHHH", 7, 1, 8000, 8000, 1, 8, 0)
-    data = bytes(range(0, 250, 5))
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, len(data))
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    mulaw = b"RIFF" + struct.pack("<I", len(body)) + body
-    with pytest.raises(ValueError, match="unsupported WAV"):
-        mm.decode_wav(mulaw)
-
+    """audio_features sends a mu-law WAV down its real path, since the
+    payload sniffs as RIFF/WAVE; decode_wav rejects fmt 7 there, and
+    the stub fallback is per row: the mu-law row alone takes the stub,
+    while a 16-bit PCM row in the same batch still decodes for real."""
+    mulaw = _riff_wave(7, 8, bytes(range(0, 250, 5)))
     samples = [0, 9000, -9000, 30000, -30000] * 40
     pcm = mm.encode_wav(samples, 8000)
     df = spark.createDataFrame(

@@ -55,14 +55,9 @@ def test_repeated_builds_do_not_accumulate_cached_frames(spark, sf_dir):
 
     spark.catalog.clearCache()
     cachereg.release_all()
-    # earlier tests in the shared session may leave orphaned persistent
-    # RDDs (re-materialized caches without a catalog entry); the JVM's
-    # ContextCleaner unpersists those whenever a GC finds them
-    # unreachable, which can shrink the count mid-measurement (seen:
-    # [62, 62, 61]), so drop them first and measure MY queries' growth
-    # against what is left
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
+    # earlier tests in the shared session may leave an orphaned
+    # persistent RDD (re-materialized cache without a catalog entry);
+    # measure MY queries' growth against that baseline
     baseline = persistent_rdds()
     counts = []
     for _ in range(3):

@@ -210,3 +210,23 @@ def test_quantile_vector_distributed_matches_builtin(spark, sf_dir):
         )
     )
     assert dist == built
+
+
+def test_quantile_vector_distributed_above_the_literal_cap(spark, monkeypatch):
+    """More range partitions and more quantiles than literal_frame
+    takes: the offsets and targets frames go through collected_frame's
+    createDataFrame branch and the result still equals the built-in."""
+    from clear_map_data_pipeline_spark import session
+    from clear_map_data_pipeline_spark.operators.stats import quantile_vector
+
+    cap = LITERAL_FRAME_MAX_ROWS
+    monkeypatch.setattr(
+        session, "data_proportional_partitions", lambda df: cap + 100
+    )
+    df = spark.range(4 * cap).select((F.col("id") * 0.37).alias("v"))
+    qs = [i / (cap + 50) for i in range(cap + 51)]
+    dist = quantile_vector(df, "v", qs, exact=True, distributed=True)
+    built = quantile_vector(df, "v", qs, exact=True, distributed=False)
+    got = sorted(map(tuple, dist.collect()))
+    assert len(got) == len(qs)
+    assert got == sorted(map(tuple, built.collect()))

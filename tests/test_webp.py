@@ -16,8 +16,9 @@ def _riff_webp(chunk: bytes, body: bytes) -> bytes:
 
 def test_webp_lossy_raises_not_implemented(spark):
     """Lossy VP8 and extended VP8X WebP raise NotImplementedError at
-    decode_real; image_features keeps them on the stub features and
-    use_real_decoder=True surfaces the error."""
+    decode_real, and so does lossless VP8L; image_features keeps them
+    on the stub features and use_real_decoder=True surfaces the
+    error."""
     from clear_map_data_pipeline_spark.operators.multimodal import (
         decode_real,
         decode_stub,
@@ -30,7 +31,9 @@ def test_webp_lossy_raises_not_implemented(spark):
     )
     # VP8X: flags, reserved, canvas width-1 / height-1 (24-bit)
     vp8x = _riff_webp(b"VP8X", b"\x00" * 4 + b"\x07\x00\x00\x07\x00\x00")
-    payloads = [vp8, vp8x]
+    # VP8L: signature 0x2f, then an 8x8 size header
+    vp8l = _riff_webp(b"VP8L", b"\x2f\x07\xc0\x01\x00")
+    payloads = [vp8, vp8x, vp8l]
     for payload in payloads:
         with pytest.raises(NotImplementedError):
             decode_real(payload)
