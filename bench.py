@@ -1,21 +1,30 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+"""Benchmark harness: runs the engine's headline queries, then the
+members of seven multi-member suites, at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 fixture) on ``session.get_spark``'s cores
+($SPARK_GRAFT_CPUS, else every core this process may run on), and
+prints ONE JSON line.
 
 Queries execute through the noop sink — full plan execution without
 driver-side result transfer, so the number measures the engine, not
-collect() serialization.
+collect() serialization.  Each entry is recorded as the min wall of an
+adaptive best-of-N plus the Spark run counts of that fastest run (jobs,
+stages, tasks, executor time, shuffle/input/spill bytes), read from the
+status store by ``perfbench/probe.py``; the full record goes to
+BENCH_full_latest.json.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import signal
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench import probe  # noqa: E402
 
 HEADLINE = [
     "pipeline_export_all",
@@ -52,8 +61,7 @@ HEADLINE = [
 # these need the sf0.001 warmup pass: worker-pool spawn + Arrow codec
 # init are one-time process costs a best-of-3 min can't amortize away in
 # 3 runs, while JVM-only plans pay only codegen JIT, which the first
-# sf0.1 run absorbs (r08-verdict task #4: the indiscriminate 27-entry
-# warmup cost 167.6 s of the driver's wall envelope for nothing).
+# full-scale run absorbs.
 WARM_PYTHON = {
     "mm_multimodal_suite",  # mapInPandas codec extraction
     "suite_text_quality",  # Arrow UDTF (sentence segmentation)
@@ -63,652 +71,64 @@ WARM_PYTHON = {
     "st_merge_sink",  # foreachBatch merge sink
 }
 
-# Pinned clean-box reference for the shuffle calibration probe
-# (r09-verdict task #1).  Basis: the quiet-window in-bench post_setup
-# medians across eight guarded sf0.1 runs on 2026-08-16/17 ran
-# 0.77-0.92 s (a first dedicated-session calibration read ~0.97, but
-# in-bench readings are the population box_factor actually divides).
-# A record whose box_factor is ~1.0 was taken on a box as healthy as
-# this calibration night's quiet windows; ~1.2+ means the box, not
-# the plans, drifted — the adjudication that took five manual
-# calibration runs and COVERAGE prose in round 9 is now one field.
-CALIBRATION_REF_SEC = 0.88
+# Suites whose members are itemized after the headline loop.  Members
+# come mechanically from the SUITES registry, so a suite gaining a
+# member shows up in the record without bench edits.
+MEMBER_SUITES = (
+    "suite_graph",
+    "suite_ivf",
+    "suite_streaming_daily",
+    "suite_io_roundtrip",
+    "suite_tpch",
+    "suite_sketches",
+    "suite_dedup_exact",
+)
 
-#: Core count the reference above was pinned at.  The probe's fixed
-#: 8M-row / 32-partition shape is compute-bound, so its wall scales
-#: with available cores: at SPARK_GRAFT_CPUS=8 a CLEAN box reads ~1.5x
-#: the 32-core ref (measured r10) — that is core-count, not
-#: contention.  box_factor is therefore only emitted when the run's
-#: core count matches the reference's; other widths (the driver's
-#: scaling runs) keep the raw probe points on the record but no
-#: factor, rather than a number that conflates the two causes.
-CALIBRATION_REF_CPUS = 32
-
-
-def _calibration_probe(spark, warm: bool = False) -> dict:
-    """Shuffle-bearing box-health probe (r09-verdict task #1): a fixed
-    8M-row groupBy with ~1M distinct keys and NO map-side combine
-    (contiguous ids mod n/8 are all-distinct within a range partition),
-    so the timing is dominated by real shuffle write+fetch+final-agg —
-    the throughput the scan-only count(*) noise floor demonstrably
-    cannot sense (r09: the day's best floor 0.254 accompanied the
-    day's worst headline sum 133.5 s).  Synthetic ``spark.range`` input
-    pinned to 32 partitions: zero dependence on sf_dir or registry
-    state, so the number is comparable across rounds and boxes.
-
-    Per point: MEDIAN of 5 runs (min and spread also recorded).  The
-    median, not the min, is the contention statistic: the first probe
-    night showed the box's dominant failure mode is seconds-scale
-    oscillating bursts, which a min-of-N simply dodges — one full run
-    finished its demo phase 3-5x inflated (bpe 198.9 s vs ~40, hh
-    126.7 vs ~7) while the min-based factor read a self-indicting
-    0.84 "clean"; the same points' spreads (1.3-1.6 on a sub-1 s
-    probe) told the truth.  A median over 5 back-to-back runs samples
-    the burst duty cycle at its base rate, which is also what every
-    best-of-N query in the loop experiences.  A GC/JIT one-off still
-    cannot move the median.  ``warm=True`` (first point only) adds a
-    discarded run to eat codegen JIT.
-    """
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    n = 8_000_000
-    df = (
-        spark.range(0, n, 1, 32)
-        .select(
-            (F.col("id") % F.lit(n // 8)).alias("k"),
-            F.col("id").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-    )
-    runs = []
-    for i in range(6 if warm else 5):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        if warm and i == 0:
-            continue  # discarded JIT-warmup run
-        runs.append(time.perf_counter() - t0)
-    return {
-        "median": round(statistics.median(runs), 3),
-        "min": round(min(runs), 3),
-        "spread": round(max(runs) - min(runs), 3),
-    }
+# Run counts recorded next to each entry's min wall.
+COUNT_KEYS = (
+    "jobs",
+    "stages",
+    "tasks",
+    "executor_run_s",
+    "shuffle_read_bytes",
+    "shuffle_write_bytes",
+    "input_bytes",
+    "spill_bytes",
+)
 
 
-def _update_box_factor(full: dict) -> None:
-    """Recompute box_factor from whatever probe points exist so far:
-    MAX of the per-point MEDIANS over the pinned clean-box reference
-    (see ``_calibration_probe`` for why median, not min, per point).
-    Max across the phase points (post_setup / post_headline /
-    post_demos) because a run is as contended as its worst boundary:
-    the first night's runs showed a median-across-points summary hides
-    a mid-run burst when the bracketing points are clean (one record
-    read 0.84 while its member-itemization phase ran 5x inflated
-    between two clean probes).  A clean run still reads ~1.0 — all
-    three medians sit at the ref — and phase-level nuance stays on the
-    record in ``calibration.points``.  A kill mid-run yields a factor
-    from the points already taken.  No factor when the run's core
-    count differs from the reference's (see CALIBRATION_REF_CPUS)."""
-    if full["calibration"].get("cpus") != CALIBRATION_REF_CPUS:
-        return
-    pts = [p["median"] for p in full["calibration"]["points"].values()]
-    if pts:
-        full["calibration"]["box_factor"] = round(
-            max(pts) / CALIBRATION_REF_SEC, 2
-        )
+def _measure(spark, tracer, name: str, builder, sf_dir: str) -> dict:
+    """Best-of-N wall of ``builder(spark, sf_dir)`` written to noop, with
+    the run counts of the fastest run.
 
-
-def _ivf_scale_demo(spark) -> dict:
-    """Probe economics at 10x the fixture's vector count (r03-verdict
-    task #3): the fixture point (k=32, nprobe=12) probes 37.5% of the
-    inverted lists — honest at 2k vectors, but the IVF story is that
-    k_clusters grows ~sqrt(N) and the probed fraction COLLAPSES.  This
-    demo synthesizes a deterministic 20k-vector clustered corpus (160
-    hash-derived centers + hash noise, sigma 1.5 — clusters overlap
-    enough that ~2.5% of true neighbours cross cell boundaries, so the
-    measurement is not a separable-clusters freebie), fits the same
-    deterministic Lloyd trainer at k=128, persists/reloads the index
-    (save_ivf_index round trip — search never pays the fit), and
-    reports measured recall@5 vs the exact baseline at two operating
-    points with probe fraction <= 0.125."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk_with_index,
-        lloyd_centroids,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    n, groups, dim, sigma, k_clusters = 20000, 160, 64, 1.5, 128
-    u = 9.223372036854776e18  # 2^63: xxhash64 -> uniform [-1, 1]
-    center = (
-        f"transform(sequence(1, {dim}), i -> cast(xxhash64(concat("
-        f"cast(_g as string), ':', cast(i as string))) as double) / {u})"
-    )
-    noise = (
-        f"transform(sequence(1, {dim}), i -> cast(xxhash64(concat("
-        f"cast(vec_id as string), '|', cast(i as string))) as double) / {u})"
-    )
-    emb = (
-        spark.range(n)
-        .select(F.col("id").alias("vec_id"), (F.col("id") % groups).alias("_g"))
-        .select(
-            "vec_id",
-            F.expr(
-                f"zip_with({center}, {noise}, (c, x) -> c + {sigma} * x)"
-            ).alias("embedding"),
-        )
-        .persist()
-    )
-    emb.count()
-    cents = lloyd_centroids(emb, k_clusters=k_clusters, max_iter=3)
-    tmp_root = tempfile.mkdtemp(prefix="clearmap_ivf_demo_")
-    path = tmp_root + "/index"
-    save_ivf_index(cents, path)
-    loaded = load_ivf_index(spark, path)
-    queries = emb.filter(F.col("vec_id") % 200 == 0)
-    exact = set(
-        map(tuple, cosine_topk(emb, queries, 5).select("va", "vb").collect())
-    )
-    points = []
-    for nprobe in (8, 16):
-        approx = set(
-            map(
-                tuple,
-                ivf_topk_with_index(
-                    emb, loaded, query_mod=200, nprobe=nprobe, n_assign=3
-                )
-                .select("va", "vb")
-                .collect(),
-            )
-        )
-        points.append(
-            {
-                "k_clusters": k_clusters,
-                "nprobe": nprobe,
-                "n_assign": 3,
-                "probe_fraction": round(nprobe / k_clusters, 3),
-                "recall_at_5": round(len(exact & approx) / len(exact), 3),
-            }
-        )
-    emb.unpersist()
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    return {"n_vectors": n, "points": points}
-
-
-def _lsh_scale_demo(spark) -> dict:
-    """The cheap-LSH-operating-point story, MEASURED (r04-verdict task
-    #1): the registered ANN point honestly costs a 0.64 candidate
-    fraction because the fixture is near-uniform (recall at cosine >=
-    0.35 is the hard regime).  The 100 TB claim is different: on a
-    near-dup corpus — genuine planted pairs at cosine >= 0.9 — the
-    amplification formula picks a HIGH-planes/moderate-reps point whose
-    candidate fraction collapses (~reps/2^planes).  This demo plants
-    2,000 duplicate pairs (perturbation scaled so pair cosine lands in
-    ~[0.88, 0.99]) among 10,000 deterministic hash-noise vectors; the
-    ground truth is the planted pairs that clear the 0.9 threshold (a
-    background pair at 64 dims sits ~7 sigma below 0.9 cosine, so no
-    unplanted pair qualifies; the admitted set's min cosine is measured
-    and reported).  lsh_params_for_recall(0.9, 0.9) picks the operating
-    point; recall + the deduped candidate fraction are measured."""
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.operators.similarity import (
-        ann_lsh_pairs,
-        cosine,
-        lsh_candidate_fraction,
-        lsh_params_for_recall,
-    )
-
-    n_base, dim = 10000, 64
-    u = 9.223372036854776e18  # 2^63: xxhash64 -> uniform [-1, 1]
-    vec = (
-        f"transform(sequence(1, {dim}), i -> cast(xxhash64(concat("
-        f"cast(vec_id as string), ':', cast(i as string))) as double) / {u})"
-    )
-    base = spark.range(n_base).select(
-        F.col("id").alias("vec_id"), F.expr(vec).alias("embedding")
-    )
-    # planted near-dups: every 5th base vector gets one perturbed copy;
-    # delta in [0.2, 0.45] => pair cosine ~ 1/sqrt(1+delta^2) in
-    # [0.91, 0.98] plus cross-term spread
-    noise = (
-        f"transform(sequence(1, {dim}), i -> cast(xxhash64(concat('p', "
-        f"cast(vec_id as string), ':', cast(i as string))) as double) / {u})"
-    )
-    delta = (
-        f"0.2 + 0.125 * (cast(xxhash64(concat('d', cast(vec_id as string)))"
-        f" as double) / {u} + 1.0)"
-    )
-    dups = (
-        base.filter(F.col("vec_id") % 5 == 0)
-        .select(
-            (F.col("vec_id") + n_base).alias("vec_id"),
-            F.expr(
-                f"zip_with(embedding, {noise}, (x, e) -> x + ({delta}) * e)"
-            ).alias("embedding"),
-        )
-    )
-    emb = base.unionByName(dups).persist()
-    emb.count()
-    truth = (
-        base.filter(F.col("vec_id") % 5 == 0)
-        .select(F.col("vec_id").alias("va"), F.col("embedding").alias("_a"))
-        .join(
-            dups.select(
-                (F.col("vec_id") - n_base).alias("va"),
-                F.col("vec_id").alias("vb"),
-                F.col("embedding").alias("_b"),
-            ),
-            "va",
-        )
-    )
-    # ground truth = planted pairs that actually clear the threshold
-    # (the delta range intentionally leaves a tail of near-misses just
-    # under 0.9 — realistic, and they must not inflate the denominator);
-    # same round-then-compare rule as ann_lsh_pairs' verify filter
-    truth = truth.withColumn(
-        "_cos", F.round(cosine(F.col("_a"), F.col("_b")), 4)
-    ).filter(F.col("_cos") >= 0.9)
-    stats_row = truth.agg(
-        F.min("_cos").alias("m"), F.count("*").alias("n")
-    ).collect()[0]
-    min_cos, n_truth = stats_row["m"], stats_row["n"]
-    if n_truth == 0:  # degenerate fixture: report, don't crash the bench
-        emb.unpersist()
-        return {"n_planted_pairs": 0, "error": "no pair cleared threshold"}
-    truth_pairs = truth.select("va", "vb").persist()
-
-    planes, reps = lsh_params_for_recall(
-        0.9, 0.9, max_planes=16, max_repetitions=64
-    )
-    approx = ann_lsh_pairs(
-        emb, dim, num_planes=planes, threshold=0.9, repetitions=reps
-    ).select("va", "vb")
-    hit = truth_pairs.join(approx, ["va", "vb"], "left_semi").count()
-    cand_frac = lsh_candidate_fraction(
-        emb, dim, num_planes=planes, repetitions=reps
-    )
-    emb.unpersist()
-    truth_pairs.unpersist()
-    return {
-        "n_vectors": n_base + n_base // 5,
-        "n_planted_pairs": n_truth,
-        "min_planted_cosine": round(float(min_cos), 4),
-        "num_planes": planes,
-        "repetitions": reps,
-        "recall": round(hit / n_truth, 3),
-        "candidate_fraction": round(cand_frac, 5),
-    }
-
-
-def _dedup_scale_demo(spark, sf_dir: str, reps: int = 10) -> dict:
-    """The flagship dedup chain at ``reps``x corpus size (r04-verdict
-    task #6, the ivf_scale_demo pattern; r06-verdict task #8 adds the
-    100x point): replicate every sf document ``reps`` times (copy 0
-    verbatim, other copies with a copy-marker token — each doc becomes
-    a ``reps``-member near-dup family), run the full minhash -> LSH ->
-    verify -> connected-components chain, and report wall clock, the CC
-    round count — the O(log n) observable behind the 100 TB claim
-    (rounds must stay flat as the corpus grows) — and the verified-pair
-    fraction of all possible pairs (the no-all-pairs observable).
-    Under reps-replication every family has ``reps`` members, so the
-    fraction is ~(reps^2 * n/2) / ((n*reps)^2 / 2) = 1/n — FLAT in
-    reps (measured: 0.0019 at 10x vs 0.0021 at 100x, sf0.01) and
-    collapsing in the distinct-document count n; the claim is that it
-    stays orders of magnitude below 1 even with 100-member families,
-    and that wall grows SUBLINEARLY in docs (measured 6.8x wall for
-    10x docs).
-
-    The per-round point downsamples the base corpus 2:1 by even doc_id
-    before replication (r09-verdict task #3: 50k docs cost 25 s of the
-    wall envelope and showed nothing 25k doesn't — cc_rounds was 2 at
-    5k corpus in the sf0.01 record already); the on-demand 100x point
-    keeps the full base."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.operators.graph import (
-        minhash_lsh_clusters,
-    )
-    from clear_map_data_pipeline_spark.session import Tables
-
-    docs = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    if reps <= 10:
-        docs = docs.filter(F.col("doc_id") % 2 == 0)
-    n_docs = docs.count()
-    corpus = docs.select(
-        F.explode(F.expr(f"sequence(0, {reps - 1})")).alias("c"),
-        "doc_id",
-        "text",
-    ).select(
-        (F.col("doc_id") * reps + F.col("c")).alias("doc_id"),
-        F.when(F.col("c") == 0, F.col("text"))
-        .otherwise(
-            F.concat(
-                F.col("text"),
-                F.lit(" copyvariant"),
-                F.col("c").cast("string"),
-            )
-        )
-        .alias("text"),
-    )
-    stats: dict = {}
-    t0 = _t.perf_counter()
-    clusters = minhash_lsh_clusters(corpus, stats=stats)
-    n_clustered = clusters.count()
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    wall = _t.perf_counter() - t0
-    n_total = n_docs * reps
-    n_pairs = stats.get("n_pairs") or 0
-    return {
-        "n_docs": n_total,
-        "wall_sec": round(wall, 3),
-        "cc_rounds": stats.get("rounds"),
-        "n_verified_pairs": stats.get("n_pairs"),
-        "verified_pair_fraction": round(
-            n_pairs / (n_total * (n_total - 1) / 2), 8
-        ),
-        "n_clustered_docs": n_clustered,
-        "n_clusters": n_clusters,
-    }
-
-
-def _hh_scale_demo(spark) -> dict:
-    """Misra-Gries heavy-hitter economics at a vocabulary the registered
-    fixture cannot show (31 tokens never prune): a deterministic
-    zipf-ish stream of 2M keys over a ~200k vocabulary.  Reports the
-    rows the MG candidate pass actually shuffles (<= capacity per
-    partition + sentinels) against the rows the naive one-pass groupBy
-    would shuffle after map-side combine (per-partition distinct keys)
-    — the 100 TB claim behind sk_heavy_tokens — plus an exactness
-    check against the literal groupBy answer."""
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.operators.sketches import (
-        heavy_hitters,
-        mg_candidates,
-    )
-
-    n_rows, n_keys, parts, phi_denom = 2_000_000, 200_000, 32, 500
-    keys = (
-        spark.range(n_rows)
-        .repartition(parts)
-        .select(
-            F.concat(
-                F.lit("k"),
-                F.floor(
-                    F.pow(
-                        F.lit(float(n_keys)),
-                        (F.pmod(F.xxhash64("id"), 10**6) / F.lit(1e6)),
-                    )
-                ).cast("long"),
-            ).alias("token")
-        )
-    )
-    keys = keys.persist()
-    try:
-        mg_rows = mg_candidates(keys, "token", capacity=phi_denom).count()
-        naive_rows = (
-            keys.groupBy(F.spark_partition_id().alias("p"), "token")
-            .count()
-            .count()
-        )
-        got = {
-            (r["token"], r["freq"])
-            for r in heavy_hitters(keys, "token", phi_denom).collect()
-        }
-        n_total = keys.count()
-        want = {
-            (r["token"], r["cnt"])
-            for r in keys.groupBy("token")
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .where(F.col("cnt") * phi_denom > F.lit(n_total))
-            .collect()
-        }
-        vocab = keys.distinct().count()
-    finally:
-        keys.unpersist()
-    return {
-        "n_rows": n_rows,
-        "vocabulary": vocab,
-        "phi_denom": phi_denom,
-        "mg_shuffle_rows": mg_rows,
-        "naive_shuffle_rows": naive_rows,
-        "shuffle_reduction_x": round(naive_rows / max(mg_rows, 1), 1),
-        "n_heavy": len(want),
-        "exact_match": got == want,
-    }
-
-
-def _bpe_scale_demo(spark, sf_dir: str) -> dict:
-    """BPE merge-loop economics (r05-verdict task #5): one-at-a-time
-    training pays one distributed pair-count job per merge — a 32k-merge
-    vocab is 32k jobs.  r06 batches provably order-equivalent merges per
-    round (operators/bpe.py _select_batch; the replay tests pin the
-    merge list bit-identical), so the job count drops by the measured
-    batch ratio.  Reports merges/sec and the rounds ratio at two corpus
-    sizes (the fixture and a 4x vocab-grown replication)."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
+    N is adaptive: two runs, plus a third when the faster of the two is
+    >= 0.5 s (the 0.5-2 s band showed min-of-2 bias; sub-0.5 s entries'
+    third run never moved the min).  The minimum is the steady-state
+    cost of the plan; single runs on a shared box swing 2-4x with
+    GC/codegen noise.  Each run is a probe span with its own job group,
+    and the counts are read right after the entry, before later stages
+    evict its info from the status store.  Plan construction is inside
+    the span: builders that collect (dims, schema inference) pay for it
+    in both wall and counts.  Structured Streaming micro-batches run
+    under the stream's own job group, so streaming entries count only
+    the jobs of this thread."""
     from clear_map_data_pipeline_spark.cachereg import release_all
-    from clear_map_data_pipeline_spark.operators.bpe import train_bpe
 
-    # The fixture documents carry only ~31 distinct words — a degenerate
-    # vocabulary where every top pair shares symbols and batching is
-    # structurally capped (measured batch_ratio ~1.2; that corpus stays
-    # covered by the replay tests).  Real tokenizer training runs on
-    # 10^5..10^7-word vocabularies, so the demo synthesizes a
-    # deterministic zipf-ish syllable corpus at two vocabulary scales.
-    syl = [
-        c + v
-        for c in "bdklmnrstz"
-        for v in "aeiou"
-    ]  # 50 CV syllables
-    arr = "array(" + ", ".join(f"'{s}'" for s in syl) + ")"
-    n_rows, n_merges = 40000, 32
-    points = []
-    for vocab_target in (600, 4000):
-        word_id = (
-            f"cast(floor(pow({vocab_target}.0, "
-            f"pmod(xxhash64(id), 1000000) / 1000000.0)) as long)"
-        )
-        word = " || ".join(
-            f"element_at({arr}, cast(pmod(xxhash64({word_id}, {k}), 50)"
-            " as int) + 1)"
-            for k in (1, 2, 3)
-        )
-        corpus = spark.range(n_rows).select(F.expr(word).alias("text"))
-        st: dict = {}
-        t0 = _t.perf_counter()
-        merges, final_words = train_bpe(
-            corpus, n_merges=n_merges, batch_size=16, stats=st
-        )
-        n_words = final_words.count()
-        wall = _t.perf_counter() - t0
-        release_all()
-        points.append(
-            {
-                "vocab_target": vocab_target,
-                "n_distinct_words": n_words,
-                "n_merges": len(merges),
-                "rounds": st["rounds"],
-                "batch_ratio": round(len(merges) / max(st["rounds"], 1), 2),
-                "wall_sec": round(wall, 3),
-                "merges_per_sec": round(len(merges) / wall, 2),
-            }
-        )
-    return {"points": points}
+    def run() -> dict:
+        release_all()  # a previous run's pins must not serve this one
+        with tracer.span(name, "bench") as sp:
+            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sp["wall"] = sp["end"] - sp["start"]
+        return sp
 
-
-def _tpch_scale_demo(spark, sf_dir: str) -> dict:
-    """The new TPC-H scope at 10x fact volume, through the REAL code
-    path: lineitem and orders are replicated 10x with consistent keys
-    (orderkey*10+c on both sides, so every join stays sound) into a
-    staged sf-dir layout, and the registered builders run against it
-    unchanged.  Reports wall ratios for the three heaviest shapes —
-    q1 (scan+agg), q9 (composite-key shuffle join over partsupp), q21
-    (multi-distinct per-order aggregate).  The observable: ratio <=
-    ~10 means the plans scale linearly in data with no superlinear
-    shuffle blowup — the 100x question asked at 10x."""
-    import os
-    import shutil
-    import tempfile
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.queries.core import (
-        tpch_q1_pricing_summary,
-    )
-    from clear_map_data_pipeline_spark.queries.tpch_missing import (
-        tpch_q9_product_type_profit,
-        tpch_q21_suppliers_who_kept_waiting,
-    )
-    from clear_map_data_pipeline_spark.session import Tables
-
-    reps = 10
-    staged = tempfile.mkdtemp(prefix="clearmap_tpch10_")
-    for name in Tables.NAMES:
-        src = f"{sf_dir}/{name}.parquet"
-        if name not in ("lineitem", "orders") and os.path.exists(src):
-            os.symlink(os.path.abspath(src), f"{staged}/{name}.parquet")
-    t = Tables(spark, sf_dir)
-    rep = F.explode(F.expr(f"sequence(0, {reps - 1})")).alias("_c")
-    li = t.lineitem
-    li.select(rep, *li.columns).select(
-        (F.col("l_orderkey") * reps + F.col("_c")).alias("l_orderkey"),
-        *[c for c in li.columns if c != "l_orderkey"],
-    ).write.mode("overwrite").parquet(f"{staged}/lineitem.parquet")
-    od = t.orders
-    od.select(rep, *od.columns).select(
-        (F.col("o_orderkey") * reps + F.col("_c")).alias("o_orderkey"),
-        *[c for c in od.columns if c != "o_orderkey"],
-    ).write.mode("overwrite").parquet(f"{staged}/orders.parquet")
-
-    out = {"fact_reps": reps, "queries": {}}
-    for qname, builder in (
-        ("q1", tpch_q1_pricing_summary),
-        ("q9", tpch_q9_product_type_profit),
-        ("q21", tpch_q21_suppliers_who_kept_waiting),
-    ):
-        times = {}
-        for label, d in (("base", sf_dir), ("x10", staged)):
-            runs = []
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                builder(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(_t.perf_counter() - t0)
-            times[label] = min(runs)
-        out["queries"][qname] = {
-            "base_sec": round(times["base"], 3),
-            "x10_sec": round(times["x10"], 3),
-            "ratio": round(times["x10"] / max(times["base"], 1e-9), 2),
-        }
-    shutil.rmtree(staged, ignore_errors=True)
-    return out
-
-
-def _pipeline_scale_demo(spark, sf_dir: str) -> dict:
-    """The flagship reference pipeline at 10x its synthesized input
-    (r05-verdict task #8): events replicated with 10x distinct users
-    (user_id*10+c), so the MOH frame, the city set, and the shape dim
-    all scale 10x.  Runs all four window exports over ONE pinned stats
-    prefix (plans/clearmap.py X3) and reports wall, per-window rows,
-    and the single-id-exchange property of the window stack measured AT
-    THIS SCALE (the plan invariant test_plan.py pins at sf fixtures)."""
-    import re
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from clear_map_data_pipeline_spark.cachereg import pin, release_all
-    from clear_map_data_pipeline_spark.plans.clearmap import (
-        WINDOWS,
-        _export_frame,
-        _window_frame,
-        joined_stats_frame,
-    )
-    from clear_map_data_pipeline_spark.session import Tables
-
-    reps = 10
-
-    class _ScaledTables(Tables):
-        def __getattr__(self, name):
-            df = Tables.__getattr__(self, name)
-            if name == "events":
-                df = df.select(
-                    F.explode(F.expr(f"sequence(0, {reps - 1})")).alias("_c"),
-                    *df.columns,
-                ).select(
-                    (F.col("user_id") * reps + F.col("_c")).alias("user_id"),
-                    *[c for c in df.columns if c != "user_id"],
-                )
-            return df
-
-    t = _ScaledTables(spark, sf_dir)
-    t0 = _t.perf_counter()
-    base = pin(joined_stats_frame(t))
-    frames = {w: _export_frame(_window_frame(base, w)) for w in WINDOWS}
-    rows = {}
-    for w, df in frames.items():
-        rows[w] = df.count()
-    wall = _t.perf_counter() - t0
-    # the stacked-window invariant at 10x: the per-window export's
-    # window stack still hangs off ONE id-hash exchange
-    plan = frames["weeks_1"]._jdf.queryExecution().executedPlan().toString()
-    id_exchanges = len(
-        set(re.findall(r"hashpartitioning\(id#\d+L?, \d+\)", plan))
-    )
-    release_all()
-    return {
-        "events_reps": reps,
-        "wall_sec_4_windows": round(wall, 3),
-        "rows_per_window": rows,
-        "id_exchanges_weeks_1": id_exchanges,
-    }
-
-
-def _suite_member_times(spark, sf_dir: str, suite: str, n_runs: int) -> dict:
-    """Per-member best-of-N timings for a folded suite's members
-    (r06-verdict task #1 for suite_graph; r07-verdict task #8 extends
-    the same itemization to the other multi-member movers).  Members
-    come mechanically from the SUITES registry, so a suite gaining a
-    member next round shows up in the itemization without bench edits.
-    One protocol point per run (post-headline, the steady-state JVM):
-    r07 measured fresh-vs-post-headline inside one process and the two
-    agreed within spread, closing the r06 warm-JVM question — so the
-    second pass is dropped to keep the standing bench inside the
-    driver's wall envelope."""
-    from clear_map_data_pipeline_spark.cachereg import release_all
-    from clear_map_data_pipeline_spark.queries.suites import SUITES
-
-    out = {}
-    for sub in SUITES[suite]:
-        runs = []
-        for _ in range(n_runs):
-            release_all()  # same cache discipline as the registry wrapper
-            t0 = time.perf_counter()
-            sub.builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-        out[sub.name] = {
-            "min": round(min(runs), 3),
-            "spread": round(max(runs) - min(runs), 3),
-        }
+    spans = [run(), run()]
+    if min(s["wall"] for s in spans) >= 0.5:
+        spans.append(run())
+    best = min(spans, key=lambda s: s["wall"])
+    counts = probe.group_counts(tracer.sc, [best["group"]])[best["group"]]
+    out = {"min": round(best["wall"], 3)}
+    for k in COUNT_KEYS:
+        out[k] = round(counts[k], 3) if k == "executor_run_s" else counts[k]
     return out
 
 
@@ -718,9 +138,9 @@ _FULL_PATH = os.path.join(
 
 
 def _write_full(full: dict) -> None:
-    """Rewrite the full record NOW (r07-verdict task #1: incremental
-    evidence — a mid-run kill must never lose what already finished).
-    Write-then-rename so a kill mid-write can't truncate the record."""
+    """Rewrite the full record now, so a mid-run kill never loses what
+    already finished.  Write-then-rename so a kill mid-write can't
+    truncate the record."""
     tmp = _FULL_PATH + ".tmp"
     with open(tmp, "w") as f:
         json.dump(full, f, indent=1)
@@ -729,90 +149,44 @@ def _write_full(full: dict) -> None:
 
 
 def _emit_compact(full: dict) -> None:
-    """Print + flush the ONE-line stdout contract the driver parses.
-    Called immediately after the headline loop (r07-verdict task #1:
-    the compact line used to print only after every scale demo, so any
-    wall-clock kill discarded ~13 minutes of finished headline
-    evidence)."""
+    """Print + flush the one-line stdout contract: the headline total,
+    each headline entry's min, the scale factor and where the full
+    record is.  The run counts stay in the full record."""
     compact = {
         "metric": full["metric"],
         "value": full["value"],
         "unit": "sec",
-        "queries": full["queries"],
+        "queries": {n: e["min"] for n, e in full["queries"].items()},
         "sf": full["sf"],
-        "noise_floor_sec": full["noise_floor_sec"],
-        # one-field contention verdict (r09-verdict task #6): median
-        # shuffle-probe time / pinned clean-box reference — ~1.0 clean,
-        # ~1.2+ means the box (not the plans) drifted this round
-        "box_factor": full.get("calibration", {}).get("box_factor"),
-        "medians_on_contention": full["medians_on_contention"],
-        "extras_file": "BENCH_full_latest.json",
+        "extras_file": os.path.basename(_FULL_PATH),
     }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # never outgrow a 2000-char tail window
-        compact.pop("medians_on_contention", None)
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line, flush=True)
+    print(json.dumps(compact, separators=(",", ":")), flush=True)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # Standing wall budget for the post-headline extras (r07-verdict
-    # tasks #1/#2: the r07 bench grew to ~28 min and the driver killed
-    # it mid-demo, rc=1 parsed=null).  Demos run in value order until
-    # the budget is spent; anything past it lands as a skipped marker,
-    # never as lost evidence.
-    wall_budget = float(
-        os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "1020")
-    )
-    # The 100x dedup demo (4-8 min alone) is on-demand now: its
-    # observables (CC rounds flat at 2, verified-pair fraction ~2.1e-4)
-    # are on the r07 record and reproduced bit-identically on three
-    # boxes, so it doesn't need re-demonstrating every round.
-    run_100x = os.environ.get("SPARK_GRAFT_BENCH_100X", "0") == "1"
     t_start = time.perf_counter()
 
+    from clear_map_data_pipeline_spark.queries.suites import SUITES
     from clear_map_data_pipeline_spark.registry import load_all
     from clear_map_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("clearmap-bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("clearmap-bench")
     registry = load_all()
+    tracer = probe.Tracer(spark.sparkContext)
 
     missing = [n for n in HEADLINE if n not in registry]
     if missing:  # a stale HEADLINE name is a bench bug, not a skip
         raise SystemExit(f"HEADLINE names not in registry: {missing}")
 
-    # Noise floor (r04-verdict task #7): a trivial fixed plan — count(*)
-    # over lineitem — timed best-of-3 BEFORE the headline loop.  Rounds
-    # keep re-litigating box contention; this number lets cross-round
-    # ratios be normalized mechanically (a 2x noise floor means the box,
-    # not the plans, got slower).
-    from pyspark.sql import functions as _F
-
-    noise_floor = float("inf")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        li.agg(_F.count("*")).collect()
-        noise_floor = min(noise_floor, time.perf_counter() - t0)
-
-    # Shuffle calibration, point 1 of 3 (r09-verdict task #1): the
-    # scan-only floor above stays for cross-round continuity, but the
-    # probe is the sensor that can actually certify shuffle throughput.
-    cal_post_setup = _calibration_probe(spark, warm=True)
-
     t_setup_done = time.perf_counter()
     # Warm only the Python-worker-bearing plans at the smallest fixture:
     # spawns the reusable Python worker pool + Arrow codecs once, so the
-    # sf0.1 timings below measure steady-state execution.  JVM-only
-    # plans skip this — their only one-time cost (codegen JIT) is
-    # absorbed by the best-of-3 minimum (r08-verdict task #4).
+    # timings below measure steady-state execution.
     for name in HEADLINE:
-        if name not in WARM_PYTHON:
-            continue
-        warm = registry[name].builder(spark, "/root/testdata/sf0.001")
-        warm.write.format("noop").mode("overwrite").save()
+        if name in WARM_PYTHON:
+            warm = registry[name].builder(spark, "/root/testdata/sf0.001")
+            warm.write.format("noop").mode("overwrite").save()
 
     t_warm_done = time.perf_counter()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -821,318 +195,69 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # The evidence record exists from the first headline query onward
-    # (r07-verdict task #1): every finished query updates the on-disk
-    # full record immediately, and a SIGTERM dumps whatever exists
-    # instead of losing the run.
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    medians: dict[str, float] = {}
+    # The record exists from the first headline query onward: every
+    # finished entry rewrites it on disk, and a SIGTERM dumps whatever
+    # exists instead of losing the run.
+    queries: dict[str, dict] = {}
     full: dict = {
         "metric": "headline_queries_total_wall",
         "value": 0.0,
         "unit": "sec",
-        "queries": timings,
+        "queries": queries,
         "sf": sf_val,
-        "noise_floor_sec": round(noise_floor, 3),
-        # shuffle probe at the three phase boundaries + the pinned
-        # reference + the derived box_factor (r09-verdict tasks #1/#6)
-        "calibration": {
-            "ref_sec": CALIBRATION_REF_SEC,
-            "ref_cpus": CALIBRATION_REF_CPUS,
-            "cpus": cpus,
-            "points": {"post_setup": cal_post_setup},
-        },
-        "spread": spreads,
-        # medians exist only for queries whose best-of-N spread exceeds
-        # half the min (r09-verdict task #1b: the old 5x-min threshold
-        # never fired in any committed record; median comes from the
-        # runs already taken, so populating it costs no wall)
-        "medians_on_contention": medians,
-        # phase walls: where the pre-demo budget actually goes
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "phase_wall_sec": {
             "setup": round(t_setup_done - t_start, 1),
             "warmup": round(t_warm_done - t_setup_done, 1),
         },
         "headline_complete": False,
     }
-    _update_box_factor(full)
-
-    import signal
 
     def _dump_and_exit(signum, frame):  # pragma: no cover - signal path
         full["terminated_by_signal"] = signum
         _write_full(full)
-        # ALWAYS re-emit, even when the headline already emitted once:
-        # whatever log lines the demo phase produced since then, this
-        # puts the machine-readable line back at the end of the tail
+        # always re-emit, so the machine-readable line ends the output
+        # whatever printed since the first emission
         _emit_compact(full)
         os._exit(143)
 
     signal.signal(signal.SIGTERM, _dump_and_exit)
 
-    # Best-of-N per query: single-run numbers on a shared 32-thread box
-    # swing 2-4x with GC/codegen/compaction noise (observed: the same
-    # plan at 1.2s and 8.4s in one session).  The minimum is the
-    # steady-state cost of the PLAN — the quantity that scales with
-    # data, and the one a cluster scheduler would amortize to.
-    # N is adaptive (r09-verdict task #3): two runs, then a third only
-    # when the faster of the two is >= 0.5 s.  The threshold was 2 s in
-    # r10; that trim exposed the 0.5-2 s band to min-of-2 bias, and the
-    # r10 driver record duly flagged j_range_bucket_join (0.70 -> 1.11 s
-    # with no code change in its path) — r10-verdict task #2 restores
-    # the third run for that band (~5 s of wall, envelope has ~200 s of
-    # margin).  Sub-0.5 s entries keep best-of-2: their third run never
-    # moved the min on any committed record.
-    # Contention self-defense (r09-verdict task #1b): when the spread
-    # exceeds half the min, the median of the runs already taken is
-    # reported alongside, so a record from a loaded box carries its own
-    # per-query contention evidence (the old 5x-min threshold never
-    # fired once in five rounds of committed records).
-    import statistics
-
     for name in HEADLINE:
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = registry[name].builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        if min(runs) >= 0.5:
-            t0 = time.perf_counter()
-            df = registry[name].builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        if max(runs) - min(runs) > 0.5 * min(runs) and min(runs) > 0.05:
-            medians[name] = round(statistics.median(runs), 3)
-        timings[name] = round(min(runs), 3)
-        # best-of-N spread: how contended this query's runs were — the
-        # mechanical noise context for cross-round comparisons
-        spreads[name] = round(max(runs) - min(runs), 3)
-        full["value"] = round(sum(timings.values()), 3)
+        queries[name] = _measure(
+            spark, tracer, name, registry[name].builder, sf_dir
+        )
+        full["value"] = round(sum(e["min"] for e in queries.values()), 3)
         _write_full(full)
 
-    # The stdout contract line prints NOW — before any scale demo — so
-    # a wall-clock kill downstream can no longer discard the headline
-    # evidence (exactly what happened to BENCH_r07.json).
+    # The stdout contract line prints now, before the member loop, so a
+    # wall-clock kill downstream cannot discard the headline.
     full["headline_complete"] = True
     full["phase_wall_sec"]["headline_loop"] = round(
         time.perf_counter() - t_warm_done, 1
     )
-    # Shuffle calibration, point 2 of 3: was the box still healthy
-    # after the ~6-minute headline loop the probe is meant to certify?
-    full["calibration"]["points"]["post_headline"] = _calibration_probe(
-        spark
-    )
-    _update_box_factor(full)
     _write_full(full)
     _emit_compact(full)
-    t_members_start = time.perf_counter()
 
-    # Per-member itemization for the multi-member movers (r06 task #1,
-    # r07 task #8): mechanical decomposition so cross-round drift
-    # adjudicates per member, not per suite.  One protocol point
-    # (post-headline steady state): r07 measured fresh vs post-headline
-    # inside one process and they agreed within spread.
-    # Record shape contract (r09 ADVICE): every suite_members entry is
-    # a dict with EXACTLY ONE of two keys — {"members": {name: {min,
-    # spread}, ...}} when the itemization ran, or {"skipped": reason,
-    # ...} when the budget gate fired — so cross-round drift tooling
-    # discriminates on the key, never on duck-typing the value.
-    for suite, n_runs in (
-        # graph drops 3 -> 2 runs (r10): its members have been steady
-        # across the r07-r09 records, 2 runs still yield min+spread,
-        # and the saved pass funds the suite_tpch itemization below
-        ("suite_graph", 2),
-        ("suite_ivf", 2),
-        ("suite_streaming_daily", 2),
-        ("suite_io_roundtrip", 2),
-        # r09-verdict task #2: the 22-member TPC-H line was the last
-        # un-itemized mover — q21/q1/q9 walls now live on the record
-        # instead of docstrings.  n_runs=2 like the other steady suites.
-        ("suite_tpch", 2),
-        # r10-verdict task #4: the "stage floor / no member above
-        # floor" dispositions for these two suites move from
-        # OPTIMIZATION prose onto the committed record.
-        ("suite_sketches", 2),
-        ("suite_dedup_exact", 2),
-    ):
-        # Budget-gated like the demo plan: on a contended box the
-        # headline loop alone can approach the budget, and the driver's
-        # wall envelope must see the (already-emitted) compact line
-        # rather than a kill mid-itemization.
-        elapsed = time.perf_counter() - t_start
-        if elapsed > wall_budget:
-            full.setdefault("suite_members", {})[suite] = {
-                "skipped": "over_wall_budget",
-                "elapsed_sec": round(elapsed, 1),
-                "budget_sec": wall_budget,
-            }
+    t_members_start = time.perf_counter()
+    members: dict[str, dict] = {}
+    full["suite_members"] = members
+    for suite in MEMBER_SUITES:
+        members[suite] = {}
+        for sub in SUITES[suite]:
+            members[suite][sub.name] = _measure(
+                spark, tracer, sub.name, sub.builder, sf_dir
+            )
             _write_full(full)
-            continue
-        full.setdefault("suite_members", {})[suite] = {
-            "members": _suite_member_times(spark, sf_dir, suite, n_runs)
-        }
-        _write_full(full)
     full["phase_wall_sec"]["suite_members"] = round(
         time.perf_counter() - t_members_start, 1
     )
-
-    # Post-headline extras: quality metrics first (cheap, part of the
-    # standing record), then the scale demos in evidential-value order.
-    # Each entry is budget-gated and exception-isolated: over-budget ->
-    # a skipped marker; a throw -> an error marker; either way the
-    # record on disk stays complete and the process exits 0.
-    def _quality_metrics() -> dict:
-        from pyspark.sql import functions as _Fq
-
-        from clear_map_data_pipeline_spark.operators.similarity import (
-            cosine_topk,
-            dequantize_embeddings,
-            ivf_recall_at_k,
-            ivf_topk_lloyd,
-            lsh_candidate_fraction,
-            lsh_recall_vs_exact,
-            quantize_embeddings,
-        )
-        from clear_map_data_pipeline_spark.queries.similarity import (
-            ANN_REG_PLANES,
-            ANN_REG_REPS,
-            DIM,
-            IVF_KMEANS_PARAMS,
-        )
-        from clear_map_data_pipeline_spark.session import Tables
-
-        emb = Tables(spark, sf_dir).embeddings
-        recall = ivf_recall_at_k(
-            emb, k=5, trained="lloyd", **IVF_KMEANS_PARAMS
-        )
-        # int8 composition recall (r06 task #6), measured against the
-        # FLOAT exact baseline — quantization loss AND index loss in
-        # one number, next to the float path's recall above
-        _q = emb.filter(_Fq.col("vec_id") % 100 == 0)
-        _exact = {
-            (r["va"], r["vb"])
-            for r in cosine_topk(emb, _q, 5).select("va", "vb").collect()
-        }
-        _deq = dequantize_embeddings(quantize_embeddings(emb))
-        _got = {
-            (r["va"], r["vb"])
-            for r in ivf_topk_lloyd(_deq, **IVF_KMEANS_PARAMS)
-            .select("va", "vb")
-            .collect()
-        }
-        int8_recall = len(_exact & _got) / max(len(_exact), 1)
-        # LSH: recall vs the exact all-pairs baseline at the registered
-        # operating point, with the measured candidate fraction (the
-        # LSH analogue of IVF's probe fraction); a cheap single-shot
-        # point alongside to show the knob's cost end
-        REG = {"num_planes": ANN_REG_PLANES, "repetitions": ANN_REG_REPS}
-        CHEAP = {"num_planes": 8, "repetitions": 1}
-        return {
-            "ivf_kmeans_recall_at_5": round(recall, 3),
-            "ivf_int8_recall_at_5": round(int8_recall, 3),
-            "ivf_probe_fraction": round(
-                IVF_KMEANS_PARAMS["nprobe"]
-                / IVF_KMEANS_PARAMS["k_clusters"],
-                3,
-            ),
-            "ivf_n_assign": IVF_KMEANS_PARAMS.get("n_assign", 1),
-            "ann_lsh_recall": round(
-                lsh_recall_vs_exact(emb, DIM, threshold=0.35, **REG), 3
-            ),
-            "ann_lsh_candidate_fraction": round(
-                lsh_candidate_fraction(emb, DIM, **REG), 3
-            ),
-            "ann_lsh_cheap_recall": round(
-                lsh_recall_vs_exact(emb, DIM, threshold=0.35, **CHEAP), 3
-            ),
-            "ann_lsh_cheap_candidate_fraction": round(
-                lsh_candidate_fraction(emb, DIM, **CHEAP), 3
-            ),
-        }
-
-    demo_plan: list[tuple[str, object]] = [
-        # quality metrics: recall/candidate-fraction block, flattened
-        # into the record's top level (judge-visible quality next to
-        # the timings)
-        ("quality_metrics", _quality_metrics),
-        # flagship dedup chain at 10x corpus: wall + CC rounds flat,
-        # verified-pair fraction collapsing
-        ("dedup_scale_demo", lambda: _dedup_scale_demo(spark, sf_dir)),
-        # q1/q9/q21 at 10x replicated facts through the real builders:
-        # wall ratio <= ~10 == linear-in-data plans
-        ("tpch_scale_demo", lambda: _tpch_scale_demo(spark, sf_dir)),
-        # flagship pipeline at 10x users: 4 windows over one pinned
-        # prefix, window stack still single-id-exchange
-        ("pipeline_scale_demo", lambda: _pipeline_scale_demo(spark, sf_dir)),
-        # sqrt(N) probe economics at 10x the fixture: k grows, the
-        # probed fraction collapses, recall stays >= 0.95
-        ("ivf_scale_demo", lambda: _ivf_scale_demo(spark)),
-        # cheap-LSH-point story on a planted near-dup corpus (r05):
-        # formula-picked point, recall >= 0.9 at a collapsed fraction
-        ("lsh_scale_demo", lambda: _lsh_scale_demo(spark)),
-        # MG heavy hitters on a 200k vocabulary: bounded candidate
-        # shuffle vs naive per-partition-distinct, answer still exact
-        ("hh_scale_demo", lambda: _hh_scale_demo(spark)),
-        # batched BPE rounds: merge list bit-identical to sequential
-        # (replay-tested), jobs cut by batch_ratio
-        ("bpe_scale_demo", lambda: _bpe_scale_demo(spark, sf_dir)),
-    ]
-    if run_100x:
-        demo_plan.append(
-            (
-                "dedup_scale_demo_100x",
-                lambda: _dedup_scale_demo(spark, sf_dir, reps=100),
-            )
-        )
-    else:
-        full["dedup_scale_demo_100x"] = {
-            "skipped": "on_demand (SPARK_GRAFT_BENCH_100X=1); observables "
-            "on the r07 record: cc_rounds=2, verified_pair_fraction "
-            "2.1e-4, judge-reproduced bit-identically on three boxes"
-        }
-
-    for key, thunk in demo_plan:
-        elapsed = time.perf_counter() - t_start
-        if key != "quality_metrics" and elapsed > wall_budget:
-            full[key] = {
-                "skipped": "over_wall_budget",
-                "elapsed_sec": round(elapsed, 1),
-                "budget_sec": wall_budget,
-            }
-            _write_full(full)
-            continue
-        t_demo = time.perf_counter()
-        try:
-            result = thunk()
-        except Exception as exc:  # noqa: BLE001 - demo must not kill record
-            result = {"error": f"{type(exc).__name__}: {exc}"[:400]}
-        # per-demo wall on the record (r10): the wall-budget math that
-        # used to need a dev run with manual timers is now one field
-        full["phase_wall_sec"][key] = round(
-            time.perf_counter() - t_demo, 1
-        )
-        if key == "quality_metrics":
-            full.update(result)
-        else:
-            full[key] = result
-        _write_full(full)
-
-    # Shuffle calibration, point 3 of 3: end-of-run box health, so the
-    # factor covers the demo phase too (must run before spark.stop()).
-    full["calibration"]["points"]["post_demos"] = _calibration_probe(spark)
-    _update_box_factor(full)
     full["total_wall_sec"] = round(time.perf_counter() - t_start, 1)
     _write_full(full)
     spark.stop()
-    # Re-emit the compact contract line as the LAST output of the
-    # process (r08-verdict task #1).  The early post-headline emission
-    # stays for kill-resilience, but on a completed run ~10 minutes of
-    # demo-phase output follow it — r05..r08 all landed parsed:null
-    # because the driver's ~2000-char tail window saw only what printed
-    # last.  After spark.stop() nothing else can write to the stream, so
-    # this line is in the tail no matter what ran before it.
+    # Re-emit the compact line as the LAST output of the process: the
+    # driver reads only a ~2000-char tail, and after spark.stop()
+    # nothing else can write to the stream.
     _emit_compact(full)
 
 

@@ -1,32 +1,13 @@
-"""Distributed BPE tokenizer training — the merge-learning pass that
-follows the counting pass (``operators/text.py: vocabulary``).
+"""Byte-pair-encoding (BPE) application: segment words and corpora
+with a fixed, already-learned merge list.
 
-Classic byte-pair-encoding training (Sennrich et al. 2016, "Neural
-Machine Translation of Rare Words with Subword Units" — public
-algorithm): start from characters, repeatedly merge the most frequent
-adjacent symbol pair, weighted by word frequency.  The determinism
-contract makes the merge sequence engine- and partitioning-exact:
-counts are exact longs and ties break lexicographically on
-(first, second), so two runs (or a literal single-process replay)
-produce the IDENTICAL merge list.
-
-Scale design — the property that makes this trainable on a 100 TB
-corpus: after the ONE corpus-wide counting pass, every round operates
-on the DISTINCT-WORD table (|vocab| rows, each carrying its corpus
-count), never the corpus itself.  Per round: one explode over adjacent
-pairs of each word's CURRENT symbol array (map-side combined groupBy
-pair), one 1-row top-pair pick (TakeOrderedAndProject — no global
-sort), and one Arrow-batched ``mapInPandas`` rewrite of the symbol
-arrays (the merge is per-word local).  Web-scale vocabularies are
-millions of rows where the corpus is trillions — the iteration cost is
-independent of corpus size.  The word table is re-pinned per round and
-``localCheckpoint`` truncates the growing lineage every few merges
-(the connected-components discipline, operators/graph.py).
-
-Verification: tests replay the exact algorithm single-process in pure
-Python on the same word counts and assert the merge sequences and
-final segmentations are IDENTICAL; a repartition-invariance test pins
-the order-freeness claim.
+BPE (Sennrich et al. 2016, "Neural Machine Translation of Rare Words
+with Subword Units" — public algorithm) starts each word from its
+characters plus an end-of-word sentinel and applies the ordered merges
+left-to-right, non-overlapping.  ``bpe_segment`` is the driver-side
+reference for one word; ``bpe_apply`` runs the same loop distributed,
+once per DISTINCT word, and reassembles each document's segmentation in
+token order.
 """
 
 from __future__ import annotations
@@ -37,237 +18,11 @@ from pyspark.sql import functions as F
 from .text import tokens
 
 END_MARK = "</w>"  # end-of-word sentinel, per the public BPE recipe
-_CHECKPOINT_EVERY = 6
-
-
-def word_counts(df: DataFrame, col: str = "text") -> DataFrame:
-    """The one corpus-wide pass: distinct whitespace words with exact
-    corpus counts — everything after this is vocab-bounded."""
-    return (
-        df.select(F.explode(tokens(col)).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-
-
-def _initial_symbols(words: DataFrame) -> DataFrame:
-    """(word, cnt, syms): characters plus the end-of-word sentinel.
-
-    Codepoint-safe split (regexp over '(?s).', which Java regex
-    matches per CODE POINT): ``split(word, '')`` yields UTF-16 code
-    units, so astral characters would become surrogate-half symbols —
-    diverging from the pure-Python replay oracle's ``list(word)`` and
-    from ``bpe_segment``/``bpe_apply``, which all operate on
-    codepoints (the doc_lexical_stats lesson, ADVICE r05)."""
-    return words.select(
-        "word",
-        "cnt",
-        F.concat(
-            F.expr("regexp_extract_all(word, '(?s).', 0)"),
-            F.array(F.lit(END_MARK)),
-        ).alias("syms"),
-    )
-
-
-def _pair_counts(syms: DataFrame) -> DataFrame:
-    """Adjacent-pair counts over the current symbol arrays, weighted by
-    word count — map-side combined, vocab-bounded."""
-    pairs = syms.select(
-        "cnt",
-        F.explode(
-            F.expr(
-                "zip_with(slice(syms, 1, greatest(size(syms) - 1, 0)), "
-                "slice(syms, 2, greatest(size(syms) - 1, 0)), "
-                "(a, b) -> struct(a AS first, b AS second))"
-            )
-        ).alias("p"),
-    )
-    return pairs.groupBy("p.first", "p.second").agg(
-        F.sum("cnt").alias("n")
-    )
-
-
-def _merge_pairs_in_words(
-    syms: DataFrame, pairs: list[tuple[str, str]]
-) -> DataFrame:
-    """Replace every adjacent occurrence of each (first, second) in
-    ``pairs`` with its merged symbol — Arrow-batched, per-word local,
-    left-to-right non-overlapping exactly like the reference
-    algorithm, applied in list order.  When the pairs are symbol-
-    disjoint with fresh merged strings (the batch-selection contract
-    of ``train_bpe``) the sequential application equals one-at-a-time
-    rounds."""
-    import pandas as pd  # noqa: PLC0415 - executor-side
-
-    plan = [(f, s, f + s) for f, s in pairs]
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for s in pdf["syms"]:
-                s = list(s)
-                for first, second, merged in plan:
-                    res = []
-                    i = 0
-                    n = len(s)
-                    while i < n:
-                        if i + 1 < n and s[i] == first and s[i + 1] == second:
-                            res.append(merged)
-                            i += 2
-                        else:
-                            res.append(s[i])
-                            i += 1
-                    s = res
-                out.append(s)
-            yield pd.DataFrame(
-                {"word": pdf["word"], "cnt": pdf["cnt"], "syms": out}
-            )
-
-    return syms.mapInPandas(run, schema="word string, cnt long, syms array<string>")
-
-
-def _select_batch(
-    top: list, k: int, known_symbols: set[str], min_pair_count: int
-) -> list[tuple[str, str, int]]:
-    """Pick the longest prefix of the sorted top-``k`` pair list that is
-    provably order-equivalent to one-at-a-time merging.
-
-    Invariants that make the batch exact (not approximate):
-
-    - existing pair counts never INCREASE under a merge whose merged
-      string is a fresh symbol (new occurrences of an old pair would
-      need the old symbols adjacent, which merging other symbols cannot
-      create), so an unaffected pair's rank vs everything it already
-      beat is stable;
-    - a pair is only added while its symbols are disjoint from every
-      already-selected pair (its own count is therefore unchanged);
-    - any NEW pair created by a selected merge (x, f+s) inherits
-      count <= the count of an existing pair sharing a symbol with the
-      selection, so requiring n(candidate) strictly above every
-      collected pair that shares a symbol with the selection — and
-      above the collection floor n(top[k-1]), which bounds every
-      uncollected pair — keeps new pairs strictly below the candidate;
-    - merged strings must be fresh (not an existing symbol, not another
-      batch member's merged string): a string collision would let an
-      existing pair gain occurrences and invalidate the rank argument.
-
-    The first pair is always safe (it IS the sequential choice); growth
-    stops at the first candidate that cannot be proven safe."""
-    first = top[0]
-    batch = [(first["first"], first["second"], int(first["n"]))]
-    symset = {first["first"], first["second"]}
-    merged_set = {first["first"] + first["second"]}
-    if first["first"] + first["second"] in known_symbols:
-        return batch  # collision: pairs involving it may gain count
-    floor = int(top[-1]["n"]) if len(top) == k else 0
-    for i in range(1, len(top)):
-        cand = top[i]
-        f, s, n = cand["first"], cand["second"], int(cand["n"])
-        if n < min_pair_count:
-            break
-        if f in symset or s in symset:
-            break
-        if n <= floor:
-            break
-        merged = f + s
-        if merged in known_symbols or merged in merged_set:
-            break
-        touched = symset | {f, s}
-        unsafe = any(
-            int(q["n"]) >= n
-            and (q["first"] in touched or q["second"] in touched)
-            for j, q in enumerate(top)
-            if j > i
-        )
-        if unsafe:
-            break
-        batch.append((f, s, n))
-        symset |= {f, s}
-        merged_set.add(merged)
-    return batch
-
-
-def train_bpe(
-    df: DataFrame,
-    n_merges: int,
-    col: str = "text",
-    min_pair_count: int = 2,
-    batch_size: int = 16,
-    stats: dict | None = None,
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Learn up to ``n_merges`` BPE merges from a corpus.
-
-    Returns (merges, final_words): ``merges`` is the ordered list of
-    (first, second, count) — THE tokenizer artifact — and
-    ``final_words`` the word table with post-merge segmentations
-    (word, cnt, syms).  Training stops early when no pair reaches
-    ``min_pair_count``.
-
-    Driver-side loop; per round the merge decision is a top-k collect
-    (k = 4*batch_size, the only driver data movement) and everything
-    else stays distributed and vocab-bounded.  r06: up to
-    ``batch_size`` merges apply per round when ``_select_batch`` can
-    PROVE the batch is order-equivalent to one-at-a-time merging
-    (symbol-disjoint pairs, fresh merged strings, counts strictly
-    above every pair the batch touches) — the merge list is bit-
-    identical to ``batch_size=1`` and to the pure-Python replay
-    oracle, while a 32k-vocab training run pays ~3-8x fewer
-    distributed pair-count jobs (``bpe_scale_demo`` in bench.py
-    measures the ratio).  Pass ``stats`` to receive
-    ``{"rounds": r, "n_merges": m}``."""
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    if batch_size < 1:
-        # batch_size=0 would truncate every selected batch to [] and
-        # spin the round loop forever, re-running pair counts
-        raise ValueError("batch_size must be >= 1")
-    from ..cachereg import pin
-
-    words = pin(_initial_symbols(word_counts(df, col)))
-    # conservative superset of the live symbol alphabet: every initial
-    # character (one tiny distinct job) plus every merged string we
-    # create — _select_batch uses it to keep merged strings fresh
-    known_symbols = {
-        r["s"]
-        for r in words.select(
-            F.explode("syms").alias("s")
-        ).distinct().collect()
-    }
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    k = max(4 * batch_size, 8)
-    while len(merges) < n_merges:
-        top = (
-            _pair_counts(words)
-            .orderBy(F.col("n").desc(), F.col("first"), F.col("second"))
-            .limit(k)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_pair_count:
-            break
-        batch = _select_batch(top, k, known_symbols, min_pair_count)
-        batch = batch[: max(n_merges - len(merges), 1)][:batch_size]
-        merges.extend(batch)
-        known_symbols.update(f + s for f, s, _n in batch)
-        nxt = _merge_pairs_in_words(words, [(f, s) for f, s, _n in batch])
-        rounds += 1
-        if rounds % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        prev = words
-        words = pin(nxt)
-        # materialize the new round eagerly, then drop the previous
-        # round's cache — storage stays O(1) in rounds, not O(n_merges)
-        words.count()
-        prev.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["n_merges"] = len(merges)
-    return merges, words
 
 
 def bpe_segment(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
     """Apply a learned merge list to one word (driver-side reference
-    implementation, also the test replay oracle's application step)."""
+    implementation)."""
     syms = list(word) + [END_MARK]
     for first, second, _n in merges:
         res = []
@@ -293,19 +48,17 @@ def bpe_apply(
     col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Apply a trained merge list to a corpus, distributed — the
-    inference half of the tokenizer (train_bpe is the learning half).
+    """Apply a learned merge list to a corpus, distributed.
 
     Returns (id, n_tokens, n_subwords, subwords) per document, where
     ``subwords`` is the concatenated BPE segmentation of the document's
     whitespace tokens in order.
 
-    Scale shape — the vocab-bounded trick, same as training: the merge
-    loop runs once per DISTINCT word (Arrow-batched ``mapInPandas``
-    over the distinct-word table, merge list broadcast inside the
-    closure), and the per-document assembly is a plain broadcast-free
-    groupBy join — corpus rows never pay the per-word merge loop
-    twice.  A trillion-token corpus has millions of distinct words;
+    Scale shape — the vocab-bounded trick: the merge loop runs once per
+    DISTINCT word (Arrow-batched ``mapInPandas`` over the distinct-word
+    table, merge list broadcast inside the closure), and the
+    per-document assembly is a plain broadcast-free groupBy join —
+    corpus rows never pay the per-word merge loop twice.  A trillion-token corpus has millions of distinct words;
     the expensive loop is millions of rows, not trillions."""
     import pandas as pd  # noqa: PLC0415 - executor-side
 

@@ -351,7 +351,7 @@ def ivf_topk_trained(
     parallelism can yield different — equally valid — centers), and not
     SQL-reproducible — driver check is rows-only; recall@k against the
     brute-force baseline is measured by ``ivf_recall_at_k`` (asserted
-    in tests, reported by bench.py)."""
+    in tests)."""
     v = _vectors(df, id_col, vec_col)
     cents = kmeans_centroids(
         df, id_col, vec_col, k_clusters, seed, max_iter=max_iter,
@@ -463,9 +463,7 @@ def _lsh_rep_candidates(
     v: DataFrame, dim: int, id_col: str, num_planes: int, repetitions: int
 ) -> DataFrame:
     """Deduped (va, vb) candidate pairs from ``repetitions`` disjoint
-    plane-set bucketings — the ONE definition both ``ann_lsh_pairs``
-    scores and ``lsh_candidate_fraction`` measures, so the reported cost
-    metric always describes the pairs actually evaluated."""
+    plane-set bucketings — the pairs ``ann_lsh_pairs`` scores."""
     buckets = F.array(
         *[
             (
@@ -525,35 +523,6 @@ def lsh_recall_vs_exact(
     return exact.join(approx, ["va", "vb"], "left_semi").count() / n_exact
 
 
-def lsh_candidate_fraction(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    repetitions: int = 1,
-    max_rows: int | None = BASELINE_MAX_ROWS,
-) -> float:
-    """Fraction of all N*(N-1)/2 pairs the LSH bucketing actually scores
-    — the honest cost metric to report NEXT TO recall (the LSH analogue
-    of IVF's probe fraction).  The naive bound reps/2^planes ignores
-    bucket skew and cross-repetition overlap; this measures the real
-    deduped candidate volume.  Baseline-guarded: the measurement itself
-    counts candidate pairs, which at high reps approaches O(N^2)."""
-    v = _vectors(df, id_col, vec_col)
-    guard_baseline_rows(
-        v,
-        max_rows,
-        f"lsh_candidate_fraction(num_planes={num_planes}, "
-        f"repetitions={repetitions})",
-    )
-    n = v.count()
-    if n < 2:
-        return 0.0
-    cand = _lsh_rep_candidates(v, dim, id_col, num_planes, repetitions).count()
-    return cand / (n * (n - 1) / 2)
-
-
 def lsh_params_for_recall(
     target_recall: float,
     s_min: float,
@@ -571,9 +540,9 @@ def lsh_params_for_recall(
     admitted similarity s_min is therefore 1 - (1 - p(s_min)^r)^b; any
     higher-cosine pair does strictly better.  Among all plane counts
     that can hit the target within ``max_repetitions``, the cheapest
-    point under the uniform candidate-cost bound b/2^r is returned —
-    the measured deduped fraction (``lsh_candidate_fraction``) remains
-    the honest cost to report, since real data skews buckets.
+    point under the uniform candidate-cost bound b/2^r is returned;
+    real data skews buckets, so the deduped candidate count of
+    ``_lsh_rep_candidates`` can exceed that bound.
     """
     import math
 
@@ -789,41 +758,6 @@ def ivf_topk_lloyd(
     )
 
 
-def save_ivf_index(cents: DataFrame, path: str) -> None:
-    """Persist trained IVF centroids (cid, _c) to parquet — train ONCE,
-    probe many: at 100 TB the Lloyd fit is a scheduled job and every
-    search reloads the same few-KB index instead of re-deriving it.
-    The frame is tiny (k rows), written as one file for atomic reads."""
-    cents.coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_ivf_index(spark, path: str) -> DataFrame:
-    """Load centroids persisted by ``save_ivf_index``."""
-    return spark.read.parquet(path)
-
-
-def ivf_topk_with_index(
-    df: DataFrame,
-    cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_mod: int = 100,
-    nprobe: int = 2,
-    k: int = 5,
-    n_assign: int = 1,
-) -> DataFrame:
-    """IVF top-k probing a PRE-TRAINED centroid frame (from
-    ``load_ivf_index`` or any trainer) — the index/probe core without
-    the fit, so new corpus batches index against frozen centers and
-    search cost never includes training.  Deterministic for fixed
-    centroids: identical to the train-inline variants by construction
-    (same ``_ivf_from_centroids``)."""
-    v = _vectors(df, id_col, vec_col)
-    return _ivf_from_centroids(
-        v, cents, id_col, query_mod, nprobe, k, n_assign=n_assign
-    )
-
-
 def hard_negatives(
     df: DataFrame,
     queries: DataFrame,
@@ -840,9 +774,9 @@ def hard_negatives(
 
     A banded ``cosine_topk`` — the ONE shared definition carries the
     tie-break/rounding discipline.  This is the exact path; at corpus
-    scale run the SAME band filter over the IVF candidates
-    (``ivf_topk_with_index`` with a larger k, then band filter +
-    re-rank), which prunes to probed inverted lists first."""
+    scale run the SAME band filter over the IVF candidates (an IVF
+    top-k with a larger k, then band filter + re-rank), which prunes to
+    probed inverted lists first."""
     return cosine_topk(df, queries, k, id_col, vec_col, lo=lo, hi=hi)
 
 

@@ -50,7 +50,7 @@ def main(argv: list[str]) -> None:
 
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.01"
     only = set(argv[2:])
-    spark = get_spark("clearmap-plancheck", cpus=8, shuffle_partitions=8)
+    spark = get_spark("clearmap-plancheck")
     header = (
         f"{'query':34s} {'exch':>4} {'bhj':>4} {'smj':>4} {'bnlj':>4} "
         f"{'win':>4} {'scan':>4} {'push':>4} {'py':>3}"

@@ -162,8 +162,8 @@ def ann_pairs_cte(threshold: float) -> str:
 # >=0.9 recall at the fixture's exact-baseline band (cosine >= 0.35,
 # where p = 1 - acos(0.35)/pi ≈ 0.61) within a 16-repetition budget:
 # lsh_params_for_recall(0.9, 0.35, max_repetitions=16) == (4, 16),
-# measured recall 0.92 in bench.py.  A test pins the formula's pick to
-# this registration so the two can't drift apart.
+# measured recall 0.92 at sf0.1 (bench record at 8c6f69f).  A test pins
+# the formula's pick to this registration so the two can't drift apart.
 ANN_REG_PLANES = 4
 ANN_REG_REPS = 16
 
@@ -226,8 +226,8 @@ def sim_ann_lsh_pairs(spark, sf_dir):
     0.92 vs the exact 0.35-threshold baseline at sf0.1, at a measured
     0.64 deduped candidate fraction — this fixture's embeddings are
     near-uniform (max pairwise cosine 0.60), so high recall inherently
-    costs near-all-pairs work; bench.py reports both numbers side by
-    side.  On a real near-dup corpus (pairs >= 0.9 cosine) the same
+    costs near-all-pairs work (both numbers are on the bench record at
+    8c6f69f).  On a real near-dup corpus (pairs >= 0.9 cosine) the same
     formula picks a far cheaper point (~2^-planes cost) because p(s)
     rises toward 1."""
     t = Tables(spark, sf_dir)
@@ -281,9 +281,9 @@ def sim_ivf_topk(spark, sf_dir):
     return sim.ivf_topk(t.embeddings)
 
 
-# One source of truth for the trained-IVF operating point — bench.py's
-# recall metric reuses these so the reported recall is always for the
-# query actually registered.
+# One source of truth for the trained-IVF operating point — the recall
+# tests reuse these so the asserted recall is always for the query
+# actually registered.
 IVF_KMEANS_PARAMS = {
     "k_clusters": 32,
     "nprobe": 12,
@@ -435,7 +435,7 @@ def sim_ivf_int8_topk(spark, sf_dir):
     Lloyd chain over the reconstructed vectors, so the driver
     hash-checks the quantizer's exact arithmetic AND its composition
     with the index — not just a recall bound (recall vs the float
-    exact baseline is measured in bench.py and asserted >= 0.85 in
+    exact baseline is asserted >= 0.85 in
     tests/test_similarity_trained.py)."""
     t = Tables(spark, sf_dir)
     deq = sim.dequantize_embeddings(sim.quantize_embeddings(t.embeddings))

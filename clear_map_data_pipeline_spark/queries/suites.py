@@ -118,7 +118,7 @@ def _suite_sql(subs: list[SubQuery]) -> str:
 
 
 #: suite name -> member list, for mechanical per-member itemization
-#: (bench.py times each member builder separately so multi-member
+#: (bench.py measures each member builder separately so multi-member
 #: suite drift decomposes without hand-written member tables)
 SUITES: dict[str, list[SubQuery]] = {}
 

@@ -81,8 +81,13 @@ def get_spark(
       operators (multimodal, spatial fallback).
     - shuffle.partitions ~= cores locally; on a real cluster AQE's
       coalescing makes the initial number mostly moot.
+
+    Cores: ``cpus``, else $SPARK_GRAFT_CPUS, else every core this
+    process may run on.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

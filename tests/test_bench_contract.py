@@ -1,8 +1,9 @@
 """Pins for the driver's bench stdout contract (r09, after four rounds
 of unparseable driver artifacts): engine sessions must not emit console
 progress bars (they flooded the driver's captured output tail and
-drowned the one-line JSON contract), and the compact line itself must
-stay a single parseable line inside a ~2000-char tail window."""
+drowned the one-line JSON contract), the compact line itself must
+stay a single parseable line inside a ~2000-char tail window, and each
+entry of the full record carries its min wall plus its run counts."""
 
 from __future__ import annotations
 
@@ -20,140 +21,42 @@ def test_engine_session_disables_console_progress(spark):
 
 
 def test_compact_line_is_single_parseable_json(capsys):
+    """One parseable line carrying exactly the contract keys, inside the
+    ~2000-char tail window even with every real headline name."""
     import bench
 
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": 1.23,
-        "queries": {"q1": 1.23},
-        "sf": 0.1,
-        "noise_floor_sec": 0.1,
-        "medians_on_contention": {},
-    }
-    bench._emit_compact(full)
-    out = capsys.readouterr().out
-    assert out.count("\n") == 1  # ONE line, newline-terminated
-    parsed = json.loads(out)
-    for key in ("metric", "value", "unit", "queries", "sf"):
-        assert key in parsed, key
-
-
-def test_compact_line_sheds_medians_to_fit_tail_window(capsys):
-    """The 1900-char guard: an oversized medians block is dropped
-    rather than letting the line outgrow the driver's tail window."""
-    import bench
-
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": 1.23,
-        "queries": {f"q{i}": 1.0 for i in range(40)},
-        "sf": 0.1,
-        "noise_floor_sec": 0.1,
-        "medians_on_contention": {f"pad{i}": 9.999 for i in range(200)},
-    }
-    bench._emit_compact(full)
-    out = capsys.readouterr().out
-    assert len(out.strip()) <= 1900
-    parsed = json.loads(out)
-    assert "medians_on_contention" not in parsed
-    assert parsed["queries"]  # the evidence payload survives the shed
-
-
-def test_compact_line_carries_box_factor(capsys):
-    """r09-verdict task #6: the compact line itself must carry the
-    calibration verdict so driver-record adjudication needs zero
-    archaeology."""
-    import bench
-
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": 1.23,
-        "queries": {"q1": 1.23},
-        "sf": 0.1,
-        "noise_floor_sec": 0.1,
-        "calibration": {
-            "ref_sec": bench.CALIBRATION_REF_SEC,
-            "points": {"post_setup": {"median": 1.164, "min": 1.0, "spread": 0.2}},
-            "box_factor": 1.2,
-        },
-        "medians_on_contention": {},
-    }
-    bench._emit_compact(full)
-    parsed = json.loads(capsys.readouterr().out)
-    assert parsed["box_factor"] == 1.2
-
-
-def test_box_factor_is_max_of_point_medians_over_ref():
-    """Max over the phase points' MEDIANS: per-point medians because
-    the min dodges the box's seconds-scale bursts (observed live: a
-    demo phase 3-5x inflated under a min-based factor of 0.84), and
-    max across points because a median-across-points hides a mid-run
-    burst bracketed by clean probes (observed live the same night).
-    Computed from whatever points exist (SIGTERM mid-run still yields
-    a factor)."""
-    import bench
-
-    full = {
-        "calibration": {
-            "ref_sec": bench.CALIBRATION_REF_SEC,
-            "ref_cpus": bench.CALIBRATION_REF_CPUS,
-            "cpus": bench.CALIBRATION_REF_CPUS,
-            "points": {
-                "post_setup": {"median": bench.CALIBRATION_REF_SEC},
-                "post_headline": {"median": 2 * bench.CALIBRATION_REF_SEC},
-                "post_demos": {"median": bench.CALIBRATION_REF_SEC},
-            },
+    entry = {"min": 123.456, **{k: 10**12 for k in bench.COUNT_KEYS}}
+    for names in (["q1"], bench.HEADLINE):
+        full = {
+            "metric": "headline_queries_total_wall",
+            "value": 1.23,
+            "queries": {n: entry for n in names},
+            "sf": 0.1,
         }
-    }
-    bench._update_box_factor(full)
-    assert full["calibration"]["box_factor"] == 2.0  # worst boundary
-    del full["calibration"]["points"]["post_headline"]
-    bench._update_box_factor(full)  # clean points only -> clean factor
-    assert full["calibration"]["box_factor"] == 1.0
+        bench._emit_compact(full)
+        out = capsys.readouterr().out
+        assert out.count("\n") == 1  # ONE line, newline-terminated
+        assert len(out.strip()) <= 1900
+        parsed = json.loads(out)
+        assert list(parsed) == [
+            "metric", "value", "unit", "queries", "sf", "extras_file"
+        ]
+        assert parsed["queries"] == {n: 123.456 for n in names}
 
 
-def test_box_factor_absent_off_reference_core_count():
-    """The 0.88 s probe reference was pinned at 32 cores; the probe's
-    fixed 8M-row/32-partition shape is compute-bound, so a CLEAN box
-    at SPARK_GRAFT_CPUS=8 reads ~1.5x ref (measured r10) — core
-    count, not contention.  The driver's lower-core scaling runs must
-    therefore carry the raw probe points but NO factor, instead of a
-    number that conflates the two causes."""
+def test_measure_records_min_and_run_counts(spark, sf_dir):
+    """A bench entry is the fastest run's wall plus its status-store
+    counts."""
     import bench
+    from perfbench import probe
 
-    full = {
-        "calibration": {
-            "ref_sec": bench.CALIBRATION_REF_SEC,
-            "ref_cpus": bench.CALIBRATION_REF_CPUS,
-            "cpus": 8,
-            "points": {
-                "post_setup": {"median": 1.5 * bench.CALIBRATION_REF_SEC}
-            },
-        }
-    }
-    bench._update_box_factor(full)
-    assert "box_factor" not in full["calibration"]
+    from clear_map_data_pipeline_spark.registry import load_all
 
-
-def test_calibration_probe_shape_and_shuffle(spark):
-    """The probe must (a) return the {min, spread} record shape and
-    (b) actually bear a shuffle — an Exchange in the plan — since the
-    whole point is sensing shuffle throughput the scan-only count(*)
-    floor cannot (r09-verdict task #1)."""
-    import bench
-    from pyspark.sql import functions as F
-
-    out = bench._calibration_probe(spark)
-    assert set(out) == {"median", "min", "spread"}
-    assert out["median"] >= out["min"] > 0
-    n = 8_000_000
-    plan = (
-        spark.range(0, n, 1, 32)
-        .select((F.col("id") % F.lit(n // 8)).alias("k"), F.col("id").alias("v"))
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("c"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    name = "j1_broadcast_join_revenue"
+    out = bench._measure(
+        spark, probe.Tracer(spark.sparkContext), name,
+        load_all()[name].builder, sf_dir,
     )
-    assert "Exchange" in plan
+    assert list(out) == ["min", *bench.COUNT_KEYS]
+    assert out["min"] > 0
+    assert out["jobs"] >= 1 and out["tasks"] >= 1

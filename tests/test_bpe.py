@@ -1,45 +1,9 @@
-"""Distributed BPE merge training (operators/bpe.py) — exact replay
-against a pure-Python single-process reference on the same counts."""
+"""Distributed BPE application (operators/bpe.py) against the driver-side
+reference segmenter."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from clear_map_data_pipeline_spark.operators import bpe
-
-
-def _py_replay(word_counts: dict, n_merges: int, min_pair_count: int = 2):
-    """The reference algorithm, verbatim: exact counts, lexicographic
-    (first, second) tie-break, left-to-right non-overlapping merge."""
-    words = {w: list(w) + [bpe.END_MARK] for w in word_counts}
-    merges = []
-    for _ in range(n_merges):
-        pc: dict = {}
-        for w, syms in words.items():
-            c = word_counts[w]
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + c
-        if not pc:
-            break
-        (a, b), n = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if n < min_pair_count:
-            break
-        merges.append((a, b, n))
-        for w in words:
-            syms, res, i = words[w], [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    res.append(a + b)
-                    i += 2
-                else:
-                    res.append(syms[i])
-                    i += 1
-            words[w] = res
-    return merges, words
-
 
 CORPUS = [
     "low low low low low",
@@ -49,167 +13,13 @@ CORPUS = [
 ]
 
 
-def test_train_bpe_matches_python_replay(spark):
-    df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    merges, final_words = bpe.train_bpe(df, n_merges=12)
-    wc = {
-        r["word"]: r["cnt"]
-        for r in bpe.word_counts(df).collect()
-    }
-    want_merges, want_words = _py_replay(wc, 12)
-    assert merges == want_merges
-    got_words = {
-        r["word"]: list(r["syms"]) for r in final_words.collect()
-    }
-    assert got_words == want_words
-    # and the standalone segmenter agrees with the trained state
-    for w, syms in got_words.items():
-        assert bpe.bpe_segment(w, merges) == syms
-
-
-def test_train_bpe_repartition_invariant(spark):
-    df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    m1, _ = bpe.train_bpe(df.repartition(1), n_merges=8)
-    m7, _ = bpe.train_bpe(df.repartition(7), n_merges=8)
-    assert m1 == m7
-
-
-def test_train_bpe_early_stop_when_no_repeats(spark):
-    # every adjacent pair unique -> nothing reaches min_pair_count=2
-    df = spark.createDataFrame([("abcdef ghijkl",)], ["text"])
-    merges, _ = bpe.train_bpe(df, n_merges=5)
-    assert merges == []
-
-
-def test_train_bpe_validation(spark):
-    df = spark.createDataFrame([("a a",)], ["text"])
-    with pytest.raises(ValueError):
-        bpe.train_bpe(df, n_merges=0)
-
-
-def test_train_bpe_on_fixture_documents(spark, sf_dir):
-    """On the real documents table the learned merges must replay
-    exactly, checkpoint rotation included (n_merges crosses the
-    localCheckpoint boundary)."""
-    from clear_map_data_pipeline_spark.session import Tables
-
-    docs = Tables(spark, sf_dir).documents.select("text")
-    merges, _ = bpe.train_bpe(docs, n_merges=13)
-    wc = {r["word"]: r["cnt"] for r in bpe.word_counts(docs).collect()}
-    want, _w = _py_replay(wc, 13)
-    assert merges == want
-    assert len(merges) == 13  # fixture has plenty of repeated pairs
-
-
-def test_batched_rounds_identical_merge_list(spark):
-    """The r06 batched merge rounds must be EXACTLY the sequential
-    algorithm, faster — same merge list as batch_size=1 (and therefore
-    as the replay oracle, which test_train_bpe_matches_python_replay
-    pins), in measurably fewer distributed rounds."""
-    df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    s1, s16 = {}, {}
-    m1, _ = bpe.train_bpe(df, n_merges=12, batch_size=1, stats=s1)
-    m16, _ = bpe.train_bpe(df, n_merges=12, batch_size=16, stats=s16)
-    assert m1 == m16
-    assert s1["rounds"] == len(m1)
-    assert s16["rounds"] < s1["rounds"]
-
-
-def test_batched_rounds_identical_on_fixture(spark, sf_dir):
-    """Same exactness on the real documents corpus, where top pairs
-    share symbols often (the adversarial case for batch selection)."""
-    from clear_map_data_pipeline_spark.session import Tables
-
-    docs = Tables(spark, sf_dir).documents.select("text")
-    stats = {}
-    merges, _ = bpe.train_bpe(docs, n_merges=20, batch_size=8, stats=stats)
-    wc = {r["word"]: r["cnt"] for r in bpe.word_counts(docs).collect()}
-    want, _w = _py_replay(wc, 20)
-    assert merges == want
-    assert stats["rounds"] <= len(merges)
-
-
-def test_select_batch_property_pure_python():
-    """Drive the batch-selection math through thousands of random
-    corpora WITHOUT Spark: simulate training on a word-count dict,
-    each round computing exact pair counts in Python, selecting with
-    the real ``_select_batch`` over the sorted top-k, applying the
-    whole batch — and assert the merge sequence equals the
-    one-at-a-time reference for every corpus.  This is the property
-    the safety conditions (symbol-disjointness, strict count
-    dominance over touched pairs and the collection floor, fresh
-    merged strings) claim to guarantee; random corpora probe the tie
-    and collision corners the fixed fixtures can't."""
-    import random as _random
-
-    def pair_counts(words):
-        pc = {}
-        for w, (cnt, syms) in words.items():
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + cnt
-        return pc
-
-    def apply_merge(words, a, b):
-        for w, (cnt, syms) in words.items():
-            res, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    res.append(a + b)
-                    i += 2
-                else:
-                    res.append(syms[i])
-                    i += 1
-            words[w] = (cnt, res)
-
-    def batched_train(word_counts, n_merges, k, batch_size):
-        words = {
-            w: (c, list(w) + [bpe.END_MARK]) for w, c in word_counts.items()
-        }
-        known = {s for _c, syms in words.values() for s in syms}
-        merges = []
-        while len(merges) < n_merges:
-            pc = pair_counts(words)
-            top_all = sorted(
-                pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            top = [
-                {"first": a, "second": b, "n": n}
-                for (a, b), n in top_all[:k]
-            ]
-            if not top or top[0]["n"] < 2:
-                break
-            batch = bpe._select_batch(top, k, known, 2)
-            batch = batch[: max(n_merges - len(merges), 1)][:batch_size]
-            merges.extend(batch)
-            known.update(f + s for f, s, _n in batch)
-            for f, s, _n in batch:
-                apply_merge(words, f, s)
-        return merges
-
-    for seed in range(400):
-        rng = _random.Random(seed)
-        alphabet = "abcd" if seed % 3 else "ab"
-        wc = {
-            "".join(
-                rng.choice(alphabet)
-                for _ in range(rng.randint(1, 7))
-            ): rng.randint(1, 9)
-            for _ in range(rng.randint(2, 14))
-        }
-        n_merges = rng.randint(1, 12)
-        want, _w = _py_replay(wc, n_merges)
-        for batch_size in (4, 16):
-            got = batched_train(wc, n_merges, k=4 * batch_size,
-                                batch_size=batch_size)
-            assert got == want, (seed, batch_size, wc, got, want)
-
-
 def test_bpe_apply_matches_driver_segmenter(spark):
     """Distributed application (vocab-bounded mapInPandas + order-
     preserving reassembly) must equal the driver-side reference
     segmenter word for word, in document order."""
-    df = spark.createDataFrame([(t,) for t in CORPUS], ["text"])
-    merges, _ = bpe.train_bpe(df, n_merges=10)
+    from clear_map_data_pipeline_spark.queries.text import APPLY_MERGES
+
+    merges = [(a, b, 0) for a, b in APPLY_MERGES]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], ["doc_id", "text"]
     )

@@ -84,44 +84,40 @@ BACKFILL_JOB_BUDGET = 36
 @pytest.fixture(scope="module")
 def gate_parse(spark, gate_sf_dir, tmp_path_factory):
     """One ``parse()`` of the sf0.01 fixture under its own job group:
-    (artifact name -> path, ids of the Spark jobs it ran)."""
+    (artifact name -> path, its Spark run counts)."""
+    from perfbench import probe
+
     from clear_map_data_pipeline_spark.plans.parse import parse
 
-    sc = spark.sparkContext
-    group = "test_parse_e2e.gate_parse"
-    sc.setJobGroup(group, "parse() of the sf0.01 fixture")
-    try:
+    tracer = probe.Tracer(spark.sparkContext)
+    # a phase per fixture: group names restart at /0 per Tracer
+    with tracer.span("parse() of sf0.01", "gate_parse") as sp:
         artifacts = parse(
             spark, gate_sf_dir, str(tmp_path_factory.mktemp("gate_parse"))
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return artifacts, sc.statusTracker().getJobIdsForGroup(group)
+    counts = probe.group_counts(tracer.sc, [sp["group"]])[sp["group"]]
+    return artifacts, counts
 
 
 @pytest.fixture(scope="module")
-def gate_backfill_jobs(spark, gate_sf_dir):
-    """Ids of the Spark jobs of one backfill-shaped run of the sf0.01
+def gate_backfill_counts(spark, gate_sf_dir):
+    """Spark run counts of one backfill-shaped run of the sf0.01
     fixture: ``run_pipeline(geometry=False)``, the four exports written
     to ``noop``, under one job group."""
+    from perfbench import probe
+
     from clear_map_data_pipeline_spark.cachereg import release_all
     from clear_map_data_pipeline_spark.plans.clearmap import run_pipeline
 
-    sc = spark.sparkContext
-    group = "test_parse_e2e.gate_backfill"
-    sc.setJobGroup(group, "backfill shape of the sf0.01 fixture")
-    try:
+    tracer = probe.Tracer(spark.sparkContext)
+    with tracer.span("backfill shape of sf0.01", "gate_backfill") as sp:
         exports = run_pipeline(spark, gate_sf_dir, geometry=False)
         try:
             for df in exports.values():
                 df.write.format("noop").mode("overwrite").save()
         finally:
             release_all()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return sc.statusTracker().getJobIdsForGroup(group)
+    return probe.group_counts(tracer.sc, [sp["group"]])[sp["group"]]
 
 
 def _csv_rows(path) -> list[list[str]]:
@@ -189,16 +185,15 @@ def test_parse_matches_spark_operators(spark, gate_sf_dir, gate_parse, tmp_path)
 def test_parse_job_budget(gate_parse):
     """Job structure is pinned by count, not wall time: one parse() of
     the sf0.01 fixture stays under ``PARSE_JOB_BUDGET`` Spark jobs."""
-    _, jobs = gate_parse
-    assert 0 < len(jobs) <= PARSE_JOB_BUDGET, len(jobs)
+    _, counts = gate_parse
+    assert 0 < counts["jobs"] <= PARSE_JOB_BUDGET, counts
 
 
-def test_backfill_job_budget(gate_backfill_jobs):
+def test_backfill_job_budget(gate_backfill_counts):
     """The backfill shape of the sf0.01 fixture stays under
     ``BACKFILL_JOB_BUDGET`` Spark jobs."""
-    assert 0 < len(gate_backfill_jobs) <= BACKFILL_JOB_BUDGET, len(
-        gate_backfill_jobs
-    )
+    jobs = gate_backfill_counts["jobs"]
+    assert 0 < jobs <= BACKFILL_JOB_BUDGET, gate_backfill_counts
 
 
 def _percentile_cases():

@@ -6,7 +6,9 @@ can't see (SURVEY §5.4):
    window spec reuses one shuffle+sort;
 2. parquet scans get column pruning (narrow ReadSchema) and predicate
    pushdown (PushedFilters);
-3. the fact x dim join is a BroadcastHashJoin, not a shuffle join.
+3. the fact x dim join is a BroadcastHashJoin, not a shuffle join;
+4. the flagship export and the graph loops stay inside job-count
+   budgets at sf0.01.
 """
 
 from __future__ import annotations
@@ -14,6 +16,8 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+
+import pytest
 
 
 def _formatted_plan(df) -> str:
@@ -356,3 +360,39 @@ def test_tpch_q21_single_stats_aggregate(spark, sf_dir):
         if ("AS _ns#" in ln) != ("AS _nl#" in ln)
     ]
     assert not lone, plan
+
+
+# Upper bounds on the Spark jobs of ONE run (build + noop write, pins
+# released first) at the sf0.01 gate scale, so a job-structure
+# regression fails by count on a box whose walls swing with CPU steal.
+# Each bound is the count measured on the test session (three runs,
+# identical) plus 4 jobs: AQE broadcast choices have moved the flagship
+# prefix by about 3 jobs between runs.
+JOB_BUDGETS = {
+    "pipeline_export_weeks_1": 28,  # measured 24
+    "gr_scc": 63,  # measured 59
+    "gr_kcore": 17,  # measured 13
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget_at_gate_scale(spark, gate_sf_dir, name):
+    from perfbench import probe
+
+    from clear_map_data_pipeline_spark.cachereg import release_all
+    from clear_map_data_pipeline_spark.queries.suites import SUITES
+    from clear_map_data_pipeline_spark.registry import load_all
+
+    builders = {n: q.builder for n, q in load_all().items()}
+    builders.update({s.name: s.builder for s in SUITES["suite_graph"]})
+    tracer = probe.Tracer(spark.sparkContext)
+    release_all()
+    try:
+        # a phase of its own: group names restart at /0 per Tracer
+        with tracer.span(name, f"test_plan.{name}") as sp:
+            df = builders[name](spark, gate_sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+    finally:
+        release_all()
+    counts = probe.group_counts(tracer.sc, [sp["group"]])[sp["group"]]
+    assert 0 < counts["jobs"] <= JOB_BUDGETS[name], counts

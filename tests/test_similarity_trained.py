@@ -193,38 +193,6 @@ def test_ngram_jaccard_guardrail(spark):
         ngram_jaccard_pairs(df, max_rows=10)
 
 
-def test_ivf_index_save_load_probe(spark, sf_dir, tmp_path):
-    """Train once, persist, probe from the loaded index: results must be
-    identical to training inline (same _ivf_from_centroids core), so
-    search never needs to pay the fit."""
-    from clear_map_data_pipeline_spark.operators.similarity import (
-        ivf_topk_lloyd,
-        ivf_topk_with_index,
-        lloyd_centroids,
-        load_ivf_index,
-        save_ivf_index,
-    )
-    from clear_map_data_pipeline_spark.session import Tables
-
-    emb = Tables(spark, sf_dir).embeddings
-    cents = lloyd_centroids(emb, k_clusters=8, max_iter=2)
-    path = str(tmp_path / "ivf_index")
-    save_ivf_index(cents, path)
-    loaded = load_ivf_index(spark, path)
-    probed = sorted(
-        map(tuple, ivf_topk_with_index(emb, loaded, nprobe=3).collect())
-    )
-    inline = sorted(
-        map(
-            tuple,
-            ivf_topk_lloyd(
-                emb, k_clusters=8, max_iter=2, nprobe=3
-            ).collect(),
-        )
-    )
-    assert probed == inline and probed
-
-
 def test_lsh_params_for_recall_formula_and_registration():
     """The amplification-formula picker: (a) pins the registered
     sim_ann_lsh_pairs operating point (4 planes x 16 reps within a
