@@ -56,21 +56,6 @@ HEADLINE = [
     "suite_sketches",
 ]
 
-# Headline entries whose plans spawn Python workers (mapInPandas /
-# pandas_udf / UDTF / Python DataSource / streaming machinery).  Only
-# these need the sf0.001 warmup pass: worker-pool spawn + Arrow codec
-# init are one-time process costs a best-of-3 min can't amortize away in
-# 3 runs, while JVM-only plans pay only codegen JIT, which the first
-# full-scale run absorbs.
-WARM_PYTHON = {
-    "mm_multimodal_suite",  # mapInPandas codec extraction
-    "suite_text_quality",  # Arrow UDTF (sentence segmentation)
-    "suite_sketches",  # mapInPandas Misra-Gries candidates
-    "suite_io_roundtrip",  # Spark-4 Python DataSource (MOH reader)
-    "suite_streaming_daily",  # Structured Streaming machinery
-    "st_merge_sink",  # foreachBatch merge sink
-}
-
 # Suites whose members are itemized after the headline loop.  Members
 # come mechanically from the SUITES registry, so a suite gaining a
 # member shows up in the record without bench edits.
@@ -180,15 +165,6 @@ def main() -> None:
         raise SystemExit(f"HEADLINE names not in registry: {missing}")
 
     t_setup_done = time.perf_counter()
-    # Warm only the Python-worker-bearing plans at the smallest fixture:
-    # spawns the reusable Python worker pool + Arrow codecs once, so the
-    # timings below measure steady-state execution.
-    for name in HEADLINE:
-        if name in WARM_PYTHON:
-            warm = registry[name].builder(spark, "/root/testdata/sf0.001")
-            warm.write.format("noop").mode("overwrite").save()
-
-    t_warm_done = time.perf_counter()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)
@@ -208,7 +184,6 @@ def main() -> None:
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "phase_wall_sec": {
             "setup": round(t_setup_done - t_start, 1),
-            "warmup": round(t_warm_done - t_setup_done, 1),
         },
         "headline_complete": False,
     }
@@ -234,7 +209,7 @@ def main() -> None:
     # wall-clock kill downstream cannot discard the headline.
     full["headline_complete"] = True
     full["phase_wall_sec"]["headline_loop"] = round(
-        time.perf_counter() - t_warm_done, 1
+        time.perf_counter() - t_setup_done, 1
     )
     _write_full(full)
     _emit_compact(full)

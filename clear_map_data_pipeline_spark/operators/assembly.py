@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cachereg import pin
-from ..session import collected_frame
+from ..session import literal_frame
 from .text import hash31
 
 
@@ -146,7 +146,7 @@ def global_shuffle_index(
     for p, c in counts:
         offsets.append((p, acc))
         acc += c
-    off_df = collected_frame(spark, offsets, "_pid long, _off long")
+    off_df = literal_frame(spark, offsets, "_pid long, _off long")
     w = Window.partitionBy("_pid").orderBy("_k", id_col)
     return (
         keyed.withColumn("_rn", F.row_number().over(w) - 1)

@@ -310,7 +310,7 @@ def kmeans_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from ..session import collected_frame
+    from ..session import literal_frame
 
     v = _vectors(df, id_col, vec_col)
     if train_mod > 1:
@@ -324,7 +324,7 @@ def kmeans_centroids(
         (i, [float(x) for x in center])
         for i, center in enumerate(model.clusterCenters())
     ]
-    return collected_frame(spark, rows, "cid long, _c array<double>")
+    return literal_frame(spark, rows, "cid long, _c array<double>")
 
 
 def ivf_topk_trained(
@@ -624,7 +624,7 @@ def lloyd_centroids(
     re-running the whole fit chain per action, and the values are
     bit-identical either way.
     """
-    from ..session import collected_frame
+    from ..session import literal_frame
     from .iterate import iteration_confs
     from .text import hash31
 
@@ -633,14 +633,13 @@ def lloyd_centroids(
     t = v if train_mod <= 1 else v.filter(F.col(id_col) % train_mod == 0)
 
     def materialize(frame: DataFrame) -> DataFrame:
-        # literal VALUES frame, not createDataFrame: the re-broadcast of
-        # the k x dim centers each iteration then builds driver-side
-        # with zero tasks instead of scanning a 32-slice parallelized
-        # RDD per broadcast (values bit-identical: shortest-round-trip
-        # repr literals parse back to the same doubles)
+        # a LocalRelation, so the re-broadcast of the k x dim centers
+        # each iteration builds driver-side with zero tasks instead of
+        # scanning a 32-slice parallelized RDD per broadcast (the Arrow
+        # table carries the doubles bit-identical)
         rows = frame.collect()
         data = [(int(r["cid"]), [float(x) for x in r["_c"]]) for r in rows]
-        return collected_frame(spark, data, "cid long, _c array<double>")
+        return literal_frame(spark, data, "cid long, _c array<double>")
 
     # The fit is a fixpoint loop over a materialized training slice —
     # the same latency-bound regime as the graph loops: every iteration

@@ -510,12 +510,10 @@ GROUP BY 1
 
 def mg_fold(counters: dict, series, capacity: int, prune_factor: int = 4) -> int:
     """Fold one pandas Series of keys into a Misra-Gries counter dict
-    in place — the ONE copy of the guarantee-bearing accumulate/prune
-    rule (prune subtracts the (capacity+1)-th largest value when the
-    dict exceeds prune_factor * capacity entries), shared by the batch
-    pass (``mg_candidates``) and the streaming state operator
-    (``streaming/heavy.py``).  Returns the number of non-null keys
-    folded."""
+    in place — the guarantee-bearing accumulate/prune rule of
+    ``mg_candidates`` (prune subtracts the (capacity+1)-th largest value
+    when the dict exceeds prune_factor * capacity entries).  Returns the
+    number of non-null keys folded."""
     limit = capacity * prune_factor
     s = series.dropna()
     for k, c in s.value_counts().items():

@@ -541,16 +541,6 @@ def geojson_to_wkt(gj: str) -> str:
 # ---------------------------------------------------------------- Spark
 
 
-def st_geomtype_udf():
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def _f(s: pd.Series) -> pd.Series:
-        return s.map(geom_type)
-
-    return _f
-
-
 def st_boundary_udf():
     from pyspark.sql import functions as F
 

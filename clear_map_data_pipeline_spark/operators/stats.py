@@ -221,11 +221,7 @@ def quantile_vector_distributed(
     1.5 MB column on local[32], while simultaneously far too few
     partitions at 100 TB; byte-proportional sizing is also what makes
     the bounded-memory claim above literally true)."""
-    from ..session import (
-        data_proportional_partitions,
-        literal_frame,
-        collected_frame,
-    )
+    from ..session import data_proportional_partitions, literal_frame
 
     spark = df.sparkSession
     v = df.select(F.col(value).alias("_v")).filter(F.col("_v").isNotNull())
@@ -253,7 +249,7 @@ def quantile_vector_distributed(
         hi = lo if h == lo else min(lo + 1, n)
         targets.append((i + 1, lo, hi, h - lo))
     need = sorted({r for _, lo, hi, _ in targets for r in (lo, hi)})
-    off_df = collected_frame(spark, offsets, "_pid int, _off long")
+    off_df = literal_frame(spark, offsets, "_pid int, _off long")
     picked = {
         r["_rn"]: r["_v"]
         for r in (
@@ -269,7 +265,7 @@ def quantile_vector_distributed(
         )
     }
     vp.unpersist(blocking=False)
-    t_df = collected_frame(
+    t_df = literal_frame(
         spark,
         [
             (q_idx, float(picked[lo]), float(picked[hi]), frac)

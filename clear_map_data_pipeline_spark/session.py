@@ -116,125 +116,36 @@ def get_spark(
     return spark
 
 
-# exclusive magnitude bound of each integer type: -b <= v < b
-_INT_BOUNDS = {
-    T.ByteType: 1 << 7,
-    T.ShortType: 1 << 15,
-    T.IntegerType: 1 << 31,
-    T.LongType: 1 << 63,
-}
-
-
-def _sql_literal(v, dt) -> str:
-    """Render one Python value as a Spark SQL literal of exactly ``dt``."""
-    import math
-
-    if v is None:
-        return f"CAST(NULL AS {dt.simpleString()})"
-    if isinstance(dt, T.ArrayType):
-        # the cast types an all-empty array column, which Spark would
-        # otherwise infer as array<void>
-        inner = ", ".join(_sql_literal(x, dt.elementType) for x in v)
-        return f"CAST(array({inner}) AS {dt.simpleString()})"
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        f = float(v)
-        if math.isnan(f):
-            s = "NaN"
-        elif math.isinf(f):
-            s = "Infinity" if f > 0 else "-Infinity"
-        else:
-            s = repr(f)  # shortest round-trip decimal: parses back exact
-        return f"CAST('{s}' AS {dt.simpleString()})"
-    if isinstance(dt, T.BooleanType):
-        return "true" if v else "false"
-    if type(dt) in _INT_BOUNDS:
-        # a non-ANSI CAST wraps out-of-range values silently;
-        # createDataFrame raises, and so does this
-        i = int(v)
-        bound = _INT_BOUNDS[type(dt)]
-        if not -bound <= i < bound:
-            raise ValueError(
-                f"literal_frame: {i} is out of range for {dt.simpleString()}"
-            )
-        return f"CAST({i} AS {dt.simpleString()})"
-    if isinstance(dt, T.StringType):
-        s = str(v)
-        if "'" not in s and "\\" not in s:
-            return f"'{s}'"
-        # quotes and backslashes unescape differently under
-        # spark.sql.parser.escapedStringLiterals; a binary literal
-        # decodes the same under both
-        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
-    raise TypeError(f"literal_frame: unsupported type {dt.simpleString()}")
-
-
-# Row cap for ``literal_frame``: its VALUES text is built and parsed on
-# the driver, so it suits small fixed dims only.  Its largest direct
-# call measured over tier-1 and the full registry at sf0.1 is 8 rows
-# (a test fixture; 4 in the registry, the range-bucket join's tiers and
-# the streaming category dim); the cap leaves 125x headroom.  Frames
-# whose row count grows with the data or a caller's parameter
-# (per-partition offsets, k-means centers, quantile targets) go through
-# ``collected_frame``, which falls back to ``createDataFrame`` above it.
-LITERAL_FRAME_MAX_ROWS = 1_000
-
-
 def literal_frame(spark: SparkSession, rows, ddl):
-    """Small literal dimension as a VALUES LocalRelation — the zero-task
-    form of ``spark.createDataFrame(rows, ddl)``.
+    """Driver-known rows as a LocalRelation — the zero-task form of
+    ``spark.createDataFrame(rows, ddl)``.
 
     ``createDataFrame`` on a local list parallelizes it into
     ``defaultParallelism`` RDD slices, so every action over the frame —
     including the build side of a broadcast join — schedules one task
     per core (32 tasks for a 5-row dim on local[32]) plus a whole
-    driver job per broadcast build.  A ``VALUES`` table parses to a
-    LocalRelation: broadcast builds collect it driver-side with ZERO
-    jobs/tasks, and the per-dim saving was measured at ~0.25 s per
-    broadcast build on local[32] (guide §2.1/§2.4: remove scheduling
-    work outright).  Values are rendered as exact literals (doubles via
-    shortest-round-trip repr + CAST, so bits survive the parse);
-    intended for small fixed dims only — literal lookup tables, empty
-    frames of a given schema.  More than ``LITERAL_FRAME_MAX_ROWS`` rows
-    raise ``ValueError``; frames whose row count grows with the data
-    use ``collected_frame``.
+    driver job per broadcast build.  Given a ``pyarrow.Table`` it builds
+    a LocalRelation instead: broadcast builds collect it driver-side
+    with ZERO jobs/tasks (measured ~0.25 s per broadcast build on
+    local[32]).  The rows become one Arrow table in the DDL's types,
+    so doubles keep their exact bits, strings need no escaping and
+    empty arrays or frames keep the declared types.  An integer outside
+    its column's range raises ``ValueError``.
     """
-    from pyspark.sql.types import StructType
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if len(rows) > LITERAL_FRAME_MAX_ROWS:
-        raise ValueError(
-            f"literal_frame: {len(rows)} rows exceed the limit of "
-            f"{LITERAL_FRAME_MAX_ROWS}; it is meant for small driver-known "
-            "dims, use collected_frame for larger data"
+    schema = T.StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    try:
+        table = pa.table(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
         )
-    schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
-    cols = ", ".join(f"`{f.name}`" for f in schema.fields)
-    if not rows:
-        nulls = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()})"
-            for f in schema.fields
-        )
-        return spark.sql(f"SELECT * FROM VALUES ({nulls}) AS t({cols}) LIMIT 0")
-    body = ", ".join(
-        "("
-        + ", ".join(
-            _sql_literal(v, f.dataType) for v, f in zip(row, schema.fields)
-        )
-        + ")"
-        for row in rows
-    )
-    return spark.sql(f"SELECT * FROM VALUES {body} AS t({cols})")
-
-
-def collected_frame(spark: SparkSession, rows, ddl):
-    """Frame over rows collected to the driver whose count grows with
-    the data or a caller's parameter — per-partition offsets (one range
-    partition per ~64 MB, or ``n_ranges`` buckets), k-means centers,
-    quantile targets: ``literal_frame`` up to ``LITERAL_FRAME_MAX_ROWS`` rows, the
-    parallelized ``spark.createDataFrame`` above.  Past the cap a
-    driver-parsed VALUES text costs more than the slices' tasks do."""
-    if len(rows) <= LITERAL_FRAME_MAX_ROWS:
-        return literal_frame(spark, rows, ddl)
-    return spark.createDataFrame(rows, ddl)
+    except OverflowError as e:  # outside int64; narrower types raise
+        # ArrowInvalid, which is already a ValueError
+        raise ValueError(f"literal_frame: {e}") from e
+    return spark.createDataFrame(table, schema)
 
 
 def data_proportional_partitions(df, target_bytes: int | None = None) -> int:
@@ -339,11 +250,3 @@ class Tables:
         # later reads of the name find the frame without __getattr__
         self.__dict__[name] = df
         return df
-
-    def register_views(self) -> None:
-        """Expose every fixture table as a temp view so users can drive
-        the engine through plain ``spark.sql(...)`` — the same names the
-        DuckDB oracle uses, so any oracle_sql() string that sticks to
-        ANSI constructs runs on both engines."""
-        for name in self.NAMES:
-            getattr(self, name).createOrReplaceTempView(name)

@@ -68,9 +68,9 @@ def streaming_merge_sink(
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cur = latest_version(table_root)
         if cur is None:
-            # empty LocalRelation, not createDataFrame([], ...): the
-            # latter parallelizes into defaultParallelism EMPTY slices,
-            # so the first microbatch's merge scans 32 empty tasks
+            # an empty LocalRelation: createDataFrame over an empty
+            # list would parallelize into defaultParallelism EMPTY
+            # slices, so the first microbatch's merge scans 32 empty tasks
             base = literal_frame(
                 spark, [], batch_df.select(*table_cols).schema
             )

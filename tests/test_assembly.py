@@ -78,12 +78,10 @@ def test_global_shuffle_index_is_contiguous_permutation(spark, sf_dir):
 
 
 def test_global_shuffle_index_with_more_ranges_than_the_literal_cap(spark):
-    """n_ranges above literal_frame's row cap (the docstring's advice
-    at 100 TB): the bucket offsets go through collected_frame's
-    createDataFrame branch and the index is still 0..N-1."""
-    from clear_map_data_pipeline_spark.session import LITERAL_FRAME_MAX_ROWS
-
-    n_ranges = LITERAL_FRAME_MAX_ROWS + 500
+    """1,500 buckets (the docstring's advice at 100 TB): the bucket
+    offsets are a 1,500-row literal frame and the index is still
+    0..N-1."""
+    n_ranges = 1_500
     n = 12 * n_ranges  # every bucket non-empty: P(empty) ~ e^-12
     docs = spark.range(n).withColumnRenamed("id", "doc_id")
     rows = asm.global_shuffle_index(docs, n_ranges=n_ranges).collect()

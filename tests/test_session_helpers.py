@@ -1,11 +1,13 @@
-"""Focused tests for the r11 scheduling-overhead helpers in session.py:
-``literal_frame`` (VALUES LocalRelation dims — zero-task broadcast
-builds) and ``data_proportional_partitions`` (byte-sized partition
-counts replacing ``defaultParallelism`` constants, with a fallback
-when the private size-estimate API fails)."""
+"""Focused tests for the scheduling-overhead helpers in session.py:
+``literal_frame`` (driver-known rows as an Arrow-built LocalRelation —
+zero-task broadcast builds) and ``data_proportional_partitions``
+(byte-sized partition counts replacing ``defaultParallelism``
+constants, with a fallback when the private size-estimate API
+fails)."""
 
 from __future__ import annotations
 
+import datetime
 import math
 import struct
 
@@ -13,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from clear_map_data_pipeline_spark.session import (
-    LITERAL_FRAME_MAX_ROWS,
     Tables,
     data_proportional_partitions,
     literal_frame,
@@ -33,6 +34,10 @@ def test_literal_frame_is_local_relation(spark):
     assert df.dtypes == [("k", "int"), ("s", "string"), ("v", "double")]
 
 
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
 def test_literal_frame_matches_create_dataframe(spark):
     rows = [
         (1, "it's", -0.0),
@@ -41,9 +46,33 @@ def test_literal_frame_matches_create_dataframe(spark):
         (3, "plain", 1e308),
     ]
     ddl = "k int, s string, v double"
-    got = sorted(map(tuple, literal_frame(spark, rows, ddl).collect()), key=repr)
-    want = sorted(map(tuple, spark.createDataFrame(rows, ddl).collect()), key=repr)
-    assert got == want
+    # dates, timestamps and maps go through the DDL -> Arrow type mapping
+    # and the session-zone handling of the Arrow path
+    dated = [
+        (datetime.date(2020, 1, 2), datetime.datetime(2020, 3, 4, 5, 6, 7, 8),
+         {"a": 1, "b": None}),
+        (None, None, None),
+        (datetime.date(1969, 12, 31), datetime.datetime(1999, 12, 31, 23, 59),
+         {}),
+    ]
+    dated_ddl = "d date, t timestamp, m map<string,int>"
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(key, tz)
+            for r, d in ((rows, ddl), (dated, dated_ddl)):
+                got = literal_frame(spark, r, d)
+                want = spark.createDataFrame(r, d)
+                assert got.dtypes == want.dtypes
+                assert _sorted_rows(got) == _sorted_rows(want), tz
+                # the session zone renders both frames' timestamps alike
+                text = [F.col(c).cast("string") for c in got.columns]
+                assert _sorted_rows(got.select(text)) == _sorted_rows(
+                    want.select(text)
+                ), tz
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_literal_frame_double_bits_survive_roundtrip(spark):
@@ -125,19 +154,6 @@ def test_literal_frame_rejects_out_of_range_integers(spark, ddl, bad, edge):
         spark.conf.set(ansi, prev)
 
 
-def test_literal_frame_rejects_unsupported_type(spark):
-    with pytest.raises(TypeError):
-        literal_frame(spark, [({"a": 1},)], "m map<string,int>")
-
-
-def test_literal_frame_rejects_rows_over_the_cap(spark):
-    cap = LITERAL_FRAME_MAX_ROWS
-    rows = [(i,) for i in range(cap + 1)]
-    assert literal_frame(spark, rows[:cap], "k int").count() == cap
-    with pytest.raises(ValueError, match=f"{cap + 1} rows exceed the limit of {cap}"):
-        literal_frame(spark, rows, "k int")
-
-
 def test_data_proportional_partitions_small_input_is_one(spark, sf_dir):
     li = Tables(spark, sf_dir).lineitem
     v = li.select(F.col("l_extendedprice").alias("_v"))
@@ -213,18 +229,17 @@ def test_quantile_vector_distributed_matches_builtin(spark, sf_dir):
 
 
 def test_quantile_vector_distributed_above_the_literal_cap(spark, monkeypatch):
-    """More range partitions and more quantiles than literal_frame
-    takes: the offsets and targets frames go through collected_frame's
-    createDataFrame branch and the result still equals the built-in."""
+    """1,100 range partitions and 1,101 quantiles: the offsets and
+    targets frames are data-sized literal frames (1,100 and 1,101 rows)
+    and the result still equals the built-in."""
     from clear_map_data_pipeline_spark import session
     from clear_map_data_pipeline_spark.operators.stats import quantile_vector
 
-    cap = LITERAL_FRAME_MAX_ROWS
     monkeypatch.setattr(
-        session, "data_proportional_partitions", lambda df: cap + 100
+        session, "data_proportional_partitions", lambda df: 1_100
     )
-    df = spark.range(4 * cap).select((F.col("id") * 0.37).alias("v"))
-    qs = [i / (cap + 50) for i in range(cap + 51)]
+    df = spark.range(4_000).select((F.col("id") * 0.37).alias("v"))
+    qs = [i / 1_100 for i in range(1_101)]
     dist = quantile_vector(df, "v", qs, exact=True, distributed=True)
     built = quantile_vector(df, "v", qs, exact=True, distributed=False)
     got = sorted(map(tuple, dist.collect()))

@@ -163,11 +163,13 @@ def test_custom_datasource_boundary_sweep(spark, tmp_path):
 
 
 def test_sql_surface_via_views(spark, sf_dir):
-    """Tables.register_views exposes the fixture tables to spark.sql
-    under the oracle's names — ANSI queries run verbatim on the engine."""
+    """The fixture tables, as temp views under the oracle's names, take
+    ANSI queries verbatim on the engine."""
     from clear_map_data_pipeline_spark.session import Tables
 
-    Tables(spark, sf_dir).register_views()
+    tables = Tables(spark, sf_dir)
+    for name in ("customer", "nation"):
+        getattr(tables, name).createOrReplaceTempView(name)
     got = spark.sql(
         """
         SELECT n_name, CAST(count(*) AS BIGINT) AS n

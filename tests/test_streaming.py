@@ -708,116 +708,6 @@ def test_streaming_multibatch_rocksdb_sweep(spark, sf_dir, tmp_path):
     ) == rows(user_sessions_stream(spark, single, query_name="swp_sess_1"))
 
 
-def _mg_final_snapshots(rows):
-    best = {}
-    for r in rows:
-        if r["group"] not in best or r["mass"] > best[r["group"]]["mass"]:
-            best[r["group"]] = r
-    return best
-
-
-def _skewed_backlog(spark, sf_dir, dest):
-    """Events with a planted hot key per group: every third user folds
-    into user 1, putting ~1/3 of each group's mass on one key — real
-    heavy hitters exist AND the vocabulary (100+ keys) exceeds the MG
-    prune limit at small capacities, so pruning actually fires."""
-    from clear_map_data_pipeline_spark.session import Tables
-
-    Tables(spark, sf_dir).events.withColumn(
-        "user_id",
-        F.when(F.col("user_id") % 3 == 0, F.lit(1)).otherwise(
-            F.col("user_id")
-        ),
-    ).coalesce(1).write.parquet(dest)
-    return dest
-
-
-def test_streaming_heavy_hitters_guarantee(spark, sf_dir, tmp_path):
-    """Per-group streaming Misra-Gries over applyInPandasWithState on
-    a SKEWED backlog with capacity 8 (prunes fire: vocabulary >> the
-    4x-capacity limit): each group's final snapshot must (a) contain
-    EVERY key whose true count exceeds mass/(capacity+1) — the planted
-    hot key qualifies in every group, so the check is never vacuous —
-    (b) undercount every estimate by at most that bound, and (c)
-    report the exact group mass."""
-    from clear_map_data_pipeline_spark.streaming.heavy import (
-        heavy_hitters_stream,
-    )
-
-    backlog = _skewed_backlog(spark, sf_dir, str(tmp_path / "skewed"))
-    cap = 8
-    snaps = heavy_hitters_stream(
-        spark, backlog, capacity=cap, query_name="t_heavy_once",
-    )
-    final = _mg_final_snapshots(snaps.collect())
-    truth = {
-        (r["event_type"], str(r["user_id"])): r["cnt"]
-        for r in spark.read.parquet(backlog)
-        .groupBy("event_type", "user_id")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    masses = {}
-    for (g, _k), c in truth.items():
-        masses[g] = masses.get(g, 0) + c
-    assert set(final) == set(masses)
-    guaranteed = 0
-    for g, row in final.items():
-        assert row["mass"] == masses[g]
-        bound = masses[g] / (cap + 1)
-        ests = dict(zip(row["keys"], row["ests"]))
-        assert len(ests) <= 4 * cap  # bounded state
-        for (tg, k), c in truth.items():
-            if tg != g:
-                continue
-            if c > bound:
-                assert k in ests, (g, k, c, bound)
-                guaranteed += 1
-            if k in ests:
-                assert 0 < ests[k] <= c and c - ests[k] <= bound, (g, k)
-    assert guaranteed >= len(final)  # >= one real heavy hitter per group
-
-
-def test_streaming_heavy_hitters_multibatch_rocksdb(spark, sf_dir, tmp_path):
-    """The drained answer must be identical whether the backlog
-    arrives as one batch or as a 4-file, one-file-per-microbatch drain
-    on the RocksDB provider.  The fixture's per-group vocabulary (150
-    users) sits under the prune limit, so state stays EXACT counts —
-    the regime where batching cannot change the answer — making this a
-    pure state-persistence/recovery check; the pruned regime's
-    (batch-timing-dependent) guarantee is covered by the skewed test
-    above."""
-    from clear_map_data_pipeline_spark.streaming.drain import (
-        ROCKSDB_PROVIDER,
-    )
-    from clear_map_data_pipeline_spark.streaming.heavy import (
-        heavy_hitters_stream,
-    )
-
-    backlog = _split_backlog(
-        spark, sf_dir, str(tmp_path / "heavy_backlog"), n=4
-    )
-    one = _mg_final_snapshots(
-        heavy_hitters_stream(
-            spark, f"{sf_dir}/events.parquet", capacity=40,
-            query_name="t_heavy_one",
-        ).collect()
-    )
-    multi = _mg_final_snapshots(
-        heavy_hitters_stream(
-            spark, backlog, capacity=40,
-            query_name="t_heavy_multi", max_files_per_trigger=1,
-            store_provider=ROCKSDB_PROVIDER,
-        ).collect()
-    )
-    assert set(one) == set(multi)
-    for g in one:
-        assert one[g]["mass"] == multi[g]["mass"]
-        assert dict(zip(one[g]["keys"], one[g]["ests"])) == dict(
-            zip(multi[g]["keys"], multi[g]["ests"])
-        )
-
-
 def test_sliding_totals_match_batch(spark, sf_dir):
     """Sliding 3-day/1-day windows: every emitted (closed) window must
     equal the batch recomputation of the same overlapping window, each
